@@ -97,10 +97,24 @@ object Bench {
     val benched = SparkEntry.queries -- Aliases.keys
     // Warmup: full untimed pass (JIT + codegen caches + parquet footers).
     benched.foreach { case (name, fn) => runOne(name, fn) }
-    def timedPass(): Map[String, Double] = benched.map { case (name, fn) =>
-      val t0 = System.nanoTime()
-      val ok = runOne(name, fn)
-      name -> (if (ok) (System.nanoTime() - t0) / 1e9 else -1.0)
+    // Generated classes Spark compiled during each timed pass (cache
+    // hits are not counted), so codegen-cache misses show in the run
+    // record without a profiler. With the cache holding the working set
+    // the count falls pass by pass (the residue is AQE stage-id
+    // variants, see GraftSession.CodegenCacheEntries); a count that
+    // stays flat in the hundreds is the cache thrashing.
+    def codegenCompiles(): Long =
+      org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val passCompiles = scala.collection.mutable.ArrayBuffer.empty[Long]
+    def timedPass(): Map[String, Double] = {
+      val c0 = codegenCompiles()
+      val walls = benched.map { case (name, fn) =>
+        val t0 = System.nanoTime()
+        val ok = runOne(name, fn)
+        name -> (if (ok) (System.nanoTime() - t0) / 1e9 else -1.0)
+      }
+      passCompiles += codegenCompiles() - c0
+      walls
     }
     val jBefore = HostLoad.cpuJiffies()
     val wallT0 = System.nanoTime()
@@ -137,7 +151,8 @@ object Bench {
     val host =
       s""","host":{"loadavg_pre":${r3d(loadPre)},"external_cpu_frac":${r3d(extFrac)},""" +
       s""""calib_pre":${r3d(calibPre)},"calib_post":${r3d(calibPost)},"calib_ref":$calibRef,""" +
-      s""""load_factor":$loadFactor,"timed_passes":${passes.size}}"""
+      s""""load_factor":$loadFactor,"timed_passes":${passes.size}}""" +
+      s""","codegen_compiles":${passCompiles.mkString("[", ",", "]")}"""
     val excl = ArtifactConsumers.toSeq.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
     val modeChanged = ModeChangedSinceR16.toSeq.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
     def fmtQs(entries: Seq[(String, Double)]): String =

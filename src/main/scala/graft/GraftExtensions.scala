@@ -13,7 +13,9 @@ import org.apache.spark.sql.SparkSessionExtensions
   * Embedded: `SparkSession.builder().withExtensions(new
   * GraftExtensions)`. `GraftSession.local` (Verify/Bench/tests) routes
   * through this same class, so the deployed registration list can
-  * never drift from the tested one.
+  * never drift from the tested one. An extension cannot set static
+  * confs, so a deployment sets `spark.sql.codegen.cache.maxEntries` to
+  * `GraftSession.CodegenCacheEntries` itself (see its comment).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {

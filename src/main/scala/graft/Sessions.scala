@@ -17,6 +17,54 @@ object GraftSession {
     sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
       .getOrElse(Runtime.getRuntime.availableProcessors.min(32))
 
+  /** Generated-class cache size (`spark.sql.codegen.cache.maxEntries`),
+    * sized to graft's measured working set.
+    *
+    * Spark compiles every whole-stage and expression class with Janino
+    * and keeps it in one JVM-wide LRU cache. A query reuses a class only
+    * while it is cached, and a class compiled again is also warmed up
+    * again by the JIT. At Spark's default of 100 entries one benchmark
+    * core already outgrows the cache: every timed pass recompiled
+    * 118–151 classes on `etl-sf01` and 183–189 on `index-sf01`, with
+    * 8–20 s of JIT compiler-thread time per pass. At this size a timed
+    * pass compiles 0–25 (etl, median 14) and 8–32 (index, median 15),
+    * and both cores run ~22–25 % faster (10 seed pairs, 4 cores).
+    *
+    * Working set (sf0.1, local[4]): running each of the 123 benched
+    * queries once compiled 1,697 classes, and after three more passes
+    * the cache held 1,862. Local mode counts most classes twice: the
+    * cache key includes the compiling thread's context class loader,
+    * and driver threads (755 keys) and executor task threads (1,107)
+    * use different loaders. The cache is a Guava LRU split into 4
+    * segments of cap/4 entries each, and a cyclic working set larger
+    * than one segment's share misses on every access, as every pass did
+    * at the default. So the cap carries headroom: at 4096 a segment's
+    * share of 1,862 keys is ~470 of 1,024 slots, which leaves room for
+    * skew between segments and for the stage-id variants below; at 2048
+    * it would be ~470 of 512.
+    *
+    * Residual recompiles: passes 2–4 over the inventory compiled 92, 39
+    * and 34 classes, none of them a source the cache had held before (no
+    * evictions; read from the CodeGenerator DEBUG log, which prints each
+    * compiled source). 152 of those 165 differ from a cached class only
+    * in the `// codegenStageId=N` line and the class name built from it,
+    * which Spark writes into every whole-stage source. AQE numbers a
+    * query's stages in the order it creates them, and it creates a
+    * stage when its inputs finish, so stages above concurrent inputs
+    * take different numbers from run to run. The other 13 are sources
+    * the JVM had not compiled before (in `q_quality_bigramlm`, a
+    * broadcast-hash-join stage and a grouped-aggregate stage): plans
+    * that AQE re-optimised differently at run time. The variants
+    * converge as the cache fills (`q_quality_bigramlm`: 10, 2, 0 over
+    * the three passes); no setting removes them.
+    *
+    * Static conf: `CodeGenerator` reads it once, when the object
+    * initialises at the JVM's first code generation, so it has to go
+    * through the builder below. A deployment that enables graft through
+    * `spark.sql.extensions` sets it itself (README, "Using it").
+    */
+  val CodegenCacheEntries = 4096
+
   def local(cores: Int = defaultCores): SparkSession = {
     // SPARK_GRAFT_MASTER overrides the master URL so the SAME Verify /
     // Bench entrypoints run under multi-JVM masters (e.g.
@@ -76,6 +124,7 @@ object GraftSession {
       // `Staging.staged` takes an explicit `columnarCache` flag that
       // scopes the conf to false for exactly those registrations.
       .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")

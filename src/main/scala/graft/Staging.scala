@@ -185,26 +185,11 @@ object Staging {
     * ties: asof_lookback, recurrent_delta, sessionize, streaks) —
     * the double-run re-executes the window eval over the materialized
     * shuffle stage, which costs more than a narrow-row cache round
-    * trip. A deployment that cannot spare executor storage for an
-    * event-grain persist (§5 spill risk) sets
-    * `spark.graft.sortedOutput.mode=plain` to take the double-run
-    * instead — rows identical either way. The one site where plain
-    * measured better (zscore: computed sort key, lineitem-grain) uses
-    * a bare orderBy directly.
+    * trip. The one site where the bare orderBy measured better
+    * (zscore: computed sort key, lineitem-grain) uses it directly.
     */
-  def sortedOutput(df: DataFrame, name: String, sortCols: String*): DataFrame = {
-    // A/B lever (r20): `spark.graft.sortedOutput.mode=plain` skips the
-    // persist and pays the bare orderBy's sampling double-run — the
-    // deployment knob for sites where the pre-sort frame is large
-    // relative to the subtree above the last exchange (event-grain
-    // window outputs), where a persist is a §5 memory/spill risk and
-    // the double-run is only a re-read of the materialized shuffle
-    // stage. Rows identical either way. Default: staged.
-    val plain = df.sparkSession.conf
-      .getOption("spark.graft.sortedOutput.mode").contains("plain")
-    val base = if (plain) df else staged(df, name)
-    base.orderBy(sortCols.map(org.apache.spark.sql.functions.col): _*)
-  }
+  def sortedOutput(df: DataFrame, name: String, sortCols: String*): DataFrame =
+    staged(df, name).orderBy(sortCols.map(org.apache.spark.sql.functions.col): _*)
 
   /** Spread a NARROW scan before CPU-dense per-row work (r19).
     *

@@ -33,8 +33,7 @@ object Windows {
       // 1M-event decade point (verdict item 5) against the plain-
       // orderBy alternative: staged wins 0.84 vs 1.11 s here and on
       // every non-tie site in this file (see Staging.sortedOutput's
-      // event-grain exception note; `spark.graft.sortedOutput.mode=
-      // plain` is the storage-constrained deployment lever).
+      // event-grain exception note).
       .transform(df => graft.Staging.sortedOutput(df, "window_running_out", "user_id", "event_id"))
   }
 
