@@ -106,14 +106,20 @@ object Bench {
     def codegenCompiles(): Long =
       org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     val passCompiles = scala.collection.mutable.ArrayBuffer.empty[Long]
+    // Spark jobs each timed pass ran: a count that does not depend on
+    // host load, next to the wall times it explains.
+    val jobCounter = new org.apache.spark.GraftJobCounter(spark.sparkContext)
+    val passJobs = scala.collection.mutable.ArrayBuffer.empty[Long]
     def timedPass(): Map[String, Double] = {
       val c0 = codegenCompiles()
+      val j0 = jobCounter.jobs
       val walls = benched.map { case (name, fn) =>
         val t0 = System.nanoTime()
         val ok = runOne(name, fn)
         name -> (if (ok) (System.nanoTime() - t0) / 1e9 else -1.0)
       }
       passCompiles += codegenCompiles() - c0
+      passJobs += jobCounter.jobs - j0
       walls
     }
     val jBefore = HostLoad.cpuJiffies()
@@ -152,7 +158,8 @@ object Bench {
       s""","host":{"loadavg_pre":${r3d(loadPre)},"external_cpu_frac":${r3d(extFrac)},""" +
       s""""calib_pre":${r3d(calibPre)},"calib_post":${r3d(calibPost)},"calib_ref":$calibRef,""" +
       s""""load_factor":$loadFactor,"timed_passes":${passes.size}}""" +
-      s""","codegen_compiles":${passCompiles.mkString("[", ",", "]")}"""
+      s""","codegen_compiles":${passCompiles.mkString("[", ",", "]")}""" +
+      s""","jobs":${passJobs.mkString("[", ",", "]")}"""
     val excl = ArtifactConsumers.toSeq.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
     val modeChanged = ModeChangedSinceR16.toSeq.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
     def fmtQs(entries: Seq[(String, Double)]): String =

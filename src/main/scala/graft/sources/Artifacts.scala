@@ -103,13 +103,17 @@ object Artifacts {
     * prune can retire the directory — that race resolves to None (the
     * caller recomputes LOUDLY) instead of an opaque reader failure. A
     * read error against a directory whose marker is still present is
-    * real corruption and propagates.
+    * real corruption and propagates. The read goes through
+    * `Tables.parquet`, which infers the artifact's schema once per file
+    * snapshot; a memo hit on a pruned directory still throws (Spark
+    * checks the path exists even when handed a schema), so the race
+    * still lands in the fallback below.
     */
   private def readCommitted(spark: SparkSession, name: String, fp: String, path: String): Option[DataFrame] =
     if (!committed(spark, path)) None
     else {
       onBeforeConsume(name, path)
-      try Some(spark.read.parquet(path))
+      try Some(graft.Tables.parquet(spark, path))
       catch {
         case scala.util.control.NonFatal(e) if !committed(spark, path) =>
           System.err.println(
