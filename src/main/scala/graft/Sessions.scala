@@ -111,7 +111,7 @@ object GraftSession {
       // `.persist` compiles its whole subtree WITHOUT adaptive
       // execution, and join strategies fall back to static size
       // estimates — the staged near-dup pair outputs (r16,
-      // `Staging.sortedOutput`) then broadcast the corpus-scale prefix
+      // `Staging.sorted`) then broadcast the corpus-scale prefix
       // side of the collision self-join (measured 27× the executor CPU
       // at the 50k-doc decade point); array-heavy reread frames (the
       // kNN family's unit vectors) also measure 2.5× faster from the

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
 import org.apache.spark.storage.StorageLevel
 import java.util.concurrent.atomic.AtomicLong
 
@@ -8,7 +9,8 @@ import java.util.concurrent.atomic.AtomicLong
   * sub-plan ONCE so the 2-4 downstream subtrees (prefix, signature,
   * verify, scoring) reuse it instead of each re-scanning and
   * re-tokenizing the corpus — at 100 TB those re-scans are the dominant
-  * cost of a dedup run.
+  * cost of a dedup run. Placement of the scan-side spread and of the
+  * final global sort is `spread` and `sorted`.
   *
   * Two modes:
   * - Default: executor-storage persist (MEMORY_AND_DISK — oversized
@@ -158,40 +160,7 @@ object Staging {
       case _ => ()
     }
 
-  /** Deterministic total order over a SMALL final result whose subtree
-    * is EXPENSIVE: a global `orderBy` shuffles by RangePartitioning,
-    * and computing the range boundaries SAMPLES the sort's child — a
-    * full extra execution of everything below the sort down to the
-    * nearest materialization point. For the near-dup pair queries that
-    * point sits below the verify join, so the unstaged form runs the
-    * most expensive joins in the repo TWICE (measured at the 500k-doc
-    * decade point: the two verify stages of `q_dedup_jaccard_prefix`
-    * each appeared at 2× the executor time of the identical stages
-    * inside `q_dedup_clusters`, whose CC staging already breaks the
-    * lineage). Staging the pre-sort frame bounds the sampling pass to a
-    * cache/scratch read of the OUTPUT-sized rows.
-    *
-    * Only for outputs that are orders of magnitude smaller than the
-    * subtree's intermediates (near-dup pairs, reports, top-k lists) —
-    * a corpus-scale frame should not be persisted just to sort it.
-    *
-    * Exception, measured (r20): the EVENT-GRAIN WINDOW outputs
-    * (Windows.scala — one narrow row per input event) keep the staged
-    * form even though the frame is input-cardinality. At the 1M-event
-    * decade point the persist beats the bare orderBy's sampling
-    * double-run on every site it isn't a tie (q_window_running
-    * 0.84 vs 1.11 s, q_lookback_multiwindow 1.48 vs 1.83,
-    * q_stats_availability 1.38 vs 1.54, q_window_moving 0.99 vs 1.16;
-    * ties: asof_lookback, recurrent_delta, sessionize, streaks) —
-    * the double-run re-executes the window eval over the materialized
-    * shuffle stage, which costs more than a narrow-row cache round
-    * trip. The one site where the bare orderBy measured better
-    * (zscore: computed sort key, lineitem-grain) uses it directly.
-    */
-  def sortedOutput(df: DataFrame, name: String, sortCols: String*): DataFrame =
-    staged(df, name).orderBy(sortCols.map(org.apache.spark.sql.functions.col): _*)
-
-  /** Spread a NARROW scan before CPU-dense per-row work (r19).
+  /** Spread a NARROW scan before CPU-dense per-row work.
     *
     * Parquet split planning is byte-governed, and a split only yields
     * rows to the task owning its row group's midpoint — so a small
@@ -208,104 +177,92 @@ object Staging {
     * put the expression work on every core. Deterministic round-robin
     * (sort-before-repartition stays on), so retries and re-runs
     * reproduce the same placement; row-set semantics are unchanged.
+    * Explode→aggregate shapes skip it: their aggregation exchange
+    * already redistributes (q_vocab_topk 0.22 → 0.46 s with a spread).
+    * Hash-partitioning on doc_id instead was measured and rejected
+    * (q_decontaminate_bloom 1.29 → 2.20 s, q_line_dedup 1.01 → 1.40 s,
+    * no robust win anywhere).
     */
   def spread(df: DataFrame): DataFrame = {
-    val parts = df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
+    val parts = shufflePartitions(df)
     if (plannedNarrow(df, parts)) df.repartition(parts) else df
   }
 
+  /** Stage name that marks a corpus-scale output for `sorted`: such a
+    * frame is never persisted just to sort it, so its range sort always
+    * goes below the projection.
+    */
+  val CorpusScale = ""
+
+  /** Deterministic global sort of `project(input)` by `keys` (columns
+    * of `input` that `project` keeps, row order preserved), with the
+    * sort placed by plan shape. Both branches return the rows of
+    * `project(input).orderBy(keys)` in that order.
+    *
+    * - Range-sort first, for a narrow leaf scan (`plannedNarrow`) or a
+    *   `CorpusScale` output: `project(range-sort(input))`. One exchange
+    *   with an explicit partition count (an AQE-coalescible one would
+    *   be merged down by its narrow read bytes) buys both the output
+    *   order and the parallelism the per-row work needs; nothing is
+    *   persisted; and the range sampler's second execution re-runs only
+    *   the raw scan below the exchange, never the projection above it.
+    *   Per-partition projections keep row order and range placement, so
+    *   the projected output keeps the global order. Measured at
+    *   sf0.1/32 cores: q_pii_redact 0.92 s bare orderBy, 0.48 s
+    *   spread + staged sort, 0.25 s range-sort first.
+    * - Stage, then sort, for every other input:
+    *   `staged(project(input), name).orderBy(keys)`. A global orderBy
+    *   computes its range boundaries by SAMPLING its child — a full
+    *   extra run of everything down to the nearest materialization
+    *   point, which for the near-dup pair queries sits below the
+    *   verify join (each verify stage of q_dedup_jaccard_prefix ran at
+    *   2× the executor time at the 500k-doc decade point). Staging
+    *   bounds the sampler to a read of the output-sized rows. A wide
+    *   scan takes this branch too: range-sorting it first would shuffle
+    *   the whole input just to sort a narrow output. The event-grain
+    *   window outputs (Windows.scala) are input-sized but stage anyway:
+    *   at the 1M-event decade point the persist beat the bare orderBy
+    *   on every site that was not a tie (q_window_running 0.84 vs
+    *   1.11 s), since the sampler re-ran the window eval.
+    *
+    * The decision reads the analyzed plan only, so a non-leaf input is
+    * never planned here (see `staged` for why forcing its optimized plan
+    * is harmful). Known limit: `plannedNarrow` counts planned file
+    * splits, not row groups. Every sf0.1 table has one row group, yet at
+    * 4 cores the 11 MB lineitem plans 3 splits, so q_filter_project
+    * takes the staged branch although one task reads every row.
+    */
+  def sorted(input: DataFrame, name: String, keys: String*)(
+      project: DataFrame => DataFrame = identity): DataFrame = {
+    val parts = shufflePartitions(input)
+    val cols = keys.map(col)
+    if (name == CorpusScale || plannedNarrow(input, parts))
+      project(input.repartitionByRange(parts, cols: _*).sortWithinPartitions(cols: _*))
+    else staged(project(input), name).orderBy(cols: _*)
+  }
+
+  private def shufflePartitions(df: DataFrame): Int =
+    df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
+
   /** Whether `df` is a leaf-scan plan whose PLANNED partition count is
-    * under a quarter of `parts` — the shared spread/mapSorted probe.
-    * The probe runs only for leaf-scan analyzed plans (r20, verdict
-    * item 4): on any shuffle-bearing input, `toRdd` under AQE
-    * materializes every shuffle stage as real jobs at DECLARATION time
-    * and throws the result away; a cached input can force the cache
-    * build the same way. The guard whitelists the analyzed shapes the
-    * probe is safe for — scan, project, filter, alias — because the
-    * EXCHANGE check can't be done here (EnsureRequirements inserts
-    * distribution exchanges only inside adaptive execution, so
-    * `sparkPlan` shows none for an aggregate/join input). Anything
-    * else is already spread by its own shuffle — treated as wide.
+    * under a quarter of `parts`. The probe runs only for the analyzed
+    * shapes it is safe for — scan, project, filter, alias: on any
+    * shuffle-bearing input, `toRdd` under AQE materializes every
+    * shuffle stage as real jobs at DECLARATION time and throws the
+    * result away, and a cached input can force the cache build the
+    * same way. The exchange check can't be done on the planned plan
+    * instead (EnsureRequirements inserts distribution exchanges only
+    * inside adaptive execution, so `sparkPlan` shows none for an
+    * aggregate/join input). Anything else is already spread by its own
+    * shuffle — treated as wide.
     */
   private def plannedNarrow(df: DataFrame, parts: Int): Boolean = {
+    import org.apache.spark.sql.catalyst.plans.logical.{Filter, Project, SubqueryAlias}
     val probeSafe = !df.queryExecution.analyzed.exists {
-      case _: org.apache.spark.sql.catalyst.plans.logical.Project => false
-      case _: org.apache.spark.sql.catalyst.plans.logical.Filter => false
-      case _: org.apache.spark.sql.catalyst.plans.logical.SubqueryAlias => false
+      case _: Project | _: Filter | _: SubqueryAlias => false
       case _: org.apache.spark.sql.execution.datasources.LogicalRelation => false
       case _ => true
     }
     probeSafe && df.queryExecution.toRdd.getNumPartitions * 4 <= parts
-  }
-
-  // Keyed-spread experiment (r20, MEASURED AND REJECTED): hash-
-  // partitioning the spread on doc_id instead of round-robin looked
-  // strictly cheaper on paper (round-robin prepends the SPARK-23207
-  // local binary row sort for retry determinism; hash placement is
-  // deterministic for free), but an A/B across the spread family found
-  // no robust win anywhere and two robust regressions —
-  // q_decontaminate_bloom 1.29 → 2.20 s and q_line_dedup 1.01 → 1.40 s
-  // (isolated min-of-3, reproduced in the full bench) — with identical
-  // pre-execution plan shapes. Round-robin stays.
-
-  /** Scale-adaptive sorted map output (r20): the right global-sort
-    * shape for a NARROW-output map query (scan → expensive scan-local
-    * projection → orderBy on key columns present in the INPUT) depends
-    * on the scan's planned parallelism, so pick it per-run from the
-    * same probe `spread` uses:
-    * - NARROW scan (toy/bench regime — the whole input is a handful of
-    *   row groups): range-partition + locally sort the input BEFORE
-    *   the projection (`sortedSpread`). One exchange buys both the
-    *   parallelism and the output order, nothing persists, and the
-    *   range sampler's double-execution re-runs only the raw scan.
-    *   Measured r20 at sf0.1/32 cores: q_pii_redact 0.92 → 0.25 s vs
-    *   the r18 bare-orderBy shape, 0.48 → 0.25 vs the r19
-    *   spread+sortedOutput shape.
-    * - WIDE scan (production): the input shuffle would move the whole
-    *   corpus just to sort a narrow output — project first on the
-    *   already-parallel scan and sort the output via `sortedOutput`
-    *   (the persist is output-sized, within that helper's contract,
-    *   and bounds the sampler's re-run to a cache read).
-    * Both branches return identical rows in identical global order:
-    * per-partition projections preserve row order and range placement,
-    * so projecting above or below the sort commutes.
-    */
-  def mapSorted(input: DataFrame, name: String, keys: String*)(
-      project: DataFrame => DataFrame): DataFrame = {
-    val parts = input.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
-    if (plannedNarrow(input, parts)) project(sortedSpread(input, keys: _*))
-    else sortedOutput(project(input), name, keys: _*)
-  }
-
-  /** Global sort of a corpus-scale MAP output, paid BEFORE the map
-    * (r20): range-partition and locally sort the narrow input frame,
-    * then let the caller apply its expensive scan-local projection on
-    * top. Per-partition projections preserve row order and range
-    * placement, so the projected output keeps the global order — the
-    * same rows in the same order as `expensiveProject.orderBy(keys)`.
-    *
-    * Why this beats both r19 shapes for scan→project→sort queries:
-    * - vs bare orderBy: the range sampler's double-execution re-runs
-    *   only the NARROW scan below the exchange, never the expensive
-    *   projection (which sits above it).
-    * - vs spread + sortedOutput: ONE exchange total (the range shuffle
-    *   doubles as the parallelism spread — every core gets a range
-    *   slice before the per-row work), and nothing corpus-scale is
-    *   persisted (sortedOutput's own contract says a corpus-scale
-    *   frame should not be persisted just to sort it; the r19 sweep
-    *   violated that on the full clean-text outputs).
-    * At 100 TB the corpus crosses the network once either way (orderBy
-    * shuffles the projected corpus; this shuffles the raw corpus) —
-    * the persist and the second exchange are pure savings.
-    */
-  def sortedSpread(df: DataFrame, keys: String*): DataFrame = {
-    // Explicit partition count (REPARTITION_BY_NUM): an AQE-coalescible
-    // range shuffle would be merged down by its (narrow) read bytes and
-    // starve the expensive projection ABOVE it of parallelism — the
-    // exact failure spread() exists to fix. Scale-adaptive via the
-    // session conf, like spread.
-    val parts = df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
-    val cols = keys.map(org.apache.spark.sql.functions.col)
-    df.repartitionByRange(parts, cols: _*).sortWithinPartitions(cols: _*)
   }
 }

@@ -35,8 +35,8 @@ object Clusters {
     * empty edge set: that is how the equivalence spec pins both paths
     * on one graph, and `0 <= 0` must not silently un-force it (r14).
     * 100k edges is ~1.6 MB collected — the same bounded-by-contract
-    * collect class as `substrSearch`'s count-gated match fetch, and the
-    * count runs BEFORE the collect decides.
+    * collect class as `substrSearch`'s count-gated match fetch: the
+    * gate fetches at most cap + 1 rows.
     */
   val DriverCcEdgeCapDefault = 100000L
 
@@ -53,8 +53,8 @@ object Clusters {
     * Above the cap — the 100 TB corpus build, or a delta batch whose
     * touched-component graph outgrows the gate — the hash-min +
     * pointer-jumping loop runs unchanged. The edge frame is staged
-    * first so the gate's count() never re-runs the (expensive) pair
-    * mine that produced it, and BOTH paths read the same staged frame.
+    * first so the gate's fetch never re-runs the (expensive) pair mine
+    * that produced it, and BOTH paths read the same staged frame.
     */
   private[graft] def connectedComponentsAdaptive(
       vertices: DataFrame, pairs: DataFrame,
@@ -63,8 +63,13 @@ object Clusters {
     val cap = spark.conf.getOption("spark.graft.cc.driverEdgeCap")
       .map(_.toLong).getOrElse(DriverCcEdgeCapDefault)
     val edges = graft.Staging.staged(pairs.select("a", "b"), "cc_edges_in")
-    if (cap > 0 && edges.count() <= cap) {
-      val es = edges.collect().map(r => (r.getLong(0), r.getLong(1)))
+    // One bounded fetch both decides and collects: more than `cap` rows
+    // means the distributed loop.
+    val fetched =
+      if (cap > 0) edges.limit(math.min(cap + 1, Int.MaxValue.toLong).toInt).collect()
+      else Array.empty[org.apache.spark.sql.Row]
+    if (cap > 0 && fetched.length <= cap) {
+      val es = fetched.map(r => (r.getLong(0), r.getLong(1)))
       val parent = scala.collection.mutable.HashMap.empty[Long, Long]
       def find(x: Long): Long = {
         var r = x

@@ -1,6 +1,7 @@
 package graft.dedup
 
 import graft.{Num, Tables}
+import graft.Staging.staged
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -49,17 +50,6 @@ object Dedup {
       .agg(min("doc_id").as("keep_id"), count(lit(1)).as("n_copies"))
       .select("keep_id", "n_copies")
       .orderBy("keep_id")
-
-  /** Materialize an index once per query: the df/prefix/signature/verify
-    * subtrees otherwise EACH re-scan the tokenize+explode of the full
-    * corpus (3-5 passes at 100 TB — the dominant cost of a dedup run).
-    * Delegates to graft.Staging: executor-storage persist by default,
-    * scratch parquet when `spark.graft.scratch`/`SPARK_GRAFT_SCRATCH` is
-    * set (the 100 TB deployment mode) — mode semantics and the caller's
-    * unpersist obligation are documented there.
-    */
-  private def staged(df: DataFrame, name: String, columnarCache: Boolean = false): DataFrame =
-    graft.Staging.staged(df, name, columnarCache)
 
   /** Exact pairwise Jaccard over the FULL shingle inverted index. Kept
     * only as the spec-parity reference for the prefix filter: the
@@ -283,11 +273,11 @@ object Dedup {
     */
   private[graft] def verifyJaccardArrays(
       candidates: DataFrame, arr: DataFrame, threshold: Double): DataFrame =
-    // sortedOutput, not a bare orderBy: the range-boundary sampling of
-    // an unstaged global sort re-executed this verify join — the two
-    // most expensive stages of the whole query — a second time
-    // (measured 2× at the 500k-doc decade point, r16).
-    graft.Staging.sortedOutput(
+    // Not a bare orderBy: the range-boundary sampling of an unstaged
+    // global sort re-executed this verify join — the two most expensive
+    // stages of the whole query — a second time (measured 2× at the
+    // 500k-doc decade point, r16).
+    graft.Staging.sorted(
       candidates
         .select("a", "b")
         .join(arr.toDF("a", "sha"), "a")
@@ -297,7 +287,7 @@ object Dedup {
           col("inter") / (size(col("sha")).cast("long") + size(col("shb")).cast("long") - col("inter")))
         .filter(col("jac") >= threshold)
         .select(col("a"), col("b"), Num.round4(col("jac")).as("jac")),
-      "jac_pairs", "a", "b")
+      "jac_pairs", "a", "b")()
 
   /** One-sided set-containment join (r11): ordered pairs (a, b) with
     * C(A,B) = |sh(A) ∩ sh(B)| / |sh(A)| >= τ — doc a's 3-gram set lies
@@ -424,10 +414,10 @@ object Dedup {
       .agg(count(lit(1)).as("cc"))
       .filter(col("cc") >= cReq)
       .select("a", "b", "na")
-    // sortedOutput: same sampling-pass double-execution hazard as
+    // Not a bare orderBy: same sampling-pass double-execution hazard as
     // verifyJaccardArrays — the containment verify is the same two
     // array joins.
-    graft.Staging.sortedOutput(
+    graft.Staging.sorted(
       candidates
         .join(arr.toDF("a", "sha"), "a")
         .join(arr.toDF("b", "shb"), "b")
@@ -435,7 +425,7 @@ object Dedup {
         .withColumn("cont", col("inter") / col("na"))
         .filter(col("cont") >= threshold)
         .select(col("a"), col("b"), Num.round4(col("cont")).as("cont")),
-      "cont_pairs", "a", "b")
+      "cont_pairs", "a", "b")()
   }
 
   /** Full-index containment witness — NOT a declared query; the
@@ -665,17 +655,17 @@ object Dedup {
       .join(bands.toDF("b", "band2", "key2"), col("band") === col("band2") && col("key") === col("key2") && col("a") < col("b"))
       .select("a", "b")
       .distinct()
-    // sortedOutput: the sampling pass of a bare orderBy would re-run
-    // the two fingerprint joins (cached inputs, but the join itself
-    // re-executes below the sort).
-    graft.Staging.sortedOutput(
+    // Not a bare orderBy: its sampling pass would re-run the two
+    // fingerprint joins (cached inputs, but the join itself re-executes
+    // below the sort).
+    graft.Staging.sorted(
       candidates
         .join(fps.toDF("a2", "fpa"), col("a") === col("a2"))
         .join(fps.toDF("b2", "fpb"), col("b") === col("b2"))
         .withColumn("hamming", bit_count(col("fpa").bitwiseXOR(col("fpb"))))
         .filter(col("hamming") <= maxHamming)
         .select("a", "b", "hamming"),
-      "simhash_pairs", "a", "b")
+      "simhash_pairs", "a", "b")()
   }
 
   /** Shingle width for benchmark decontamination: 8-gram overlap is the
@@ -1019,13 +1009,13 @@ object Dedup {
         col("bb") === col("bj") && col("a") < col("b"))
       .withColumn("dot", expr("graft_dot(ea, eb)"))
       .withColumn("cos", col("dot") / (col("na") * col("nb")))
-    // sortedOutput: an unstaged sort would re-run the block join's full
-    // dot-product sweep for the range-boundary sample.
-    graft.Staging.sortedOutput(
+    // Not a bare orderBy: an unstaged sort would re-run the block
+    // join's full dot-product sweep for the range-boundary sample.
+    graft.Staging.sorted(
       pairs
         .filter(col("cos") >= threshold)
         .select(col("a"), col("b"), Num.round4(col("cos")).as("cos")),
-      "embed_pairs", "a", "b")
+      "embed_pairs", "a", "b")()
   }
 
   /** #26l contamination report: per-source contamination rates over the

@@ -58,20 +58,15 @@ object HtmlExtract {
     * extracted running text.
     */
   def htmlExtract(spark: SparkSession, dir: String): DataFrame =
-    // sortedSpread (r20): clean_text is CORPUS-scale, so r19's
-    // sortedOutput persisted a frame bigger than the input against the
-    // helper's own contract. Range-partitioning the narrow input and
-    // sorting BEFORE the projection keeps the global doc_id order with
-    // ONE exchange (which doubles as the parallelism spread), persists
-    // nothing, and bounds the range-sampler's double-execution to the
-    // raw documents scan instead of the regex pipeline.
-    graft.Staging.sortedSpread(Tables.documents(spark, dir), "doc_id")
-      .withColumn("html", plantHtml(col("doc_id"), col("text")))
-      .select(
-        col("doc_id"),
-        regexp_extract(col("html"), "<title>(.*?)</title>", 1).as("title"),
-        size(regexp_extract_all(col("html"), lit("<[^>]+>"), lit(0))).cast("long").as("n_tags"),
-        extractText(col("html")).as("clean_text"))
+    // clean_text is corpus-scale: staging it would persist a frame
+    // bigger than the input just to sort it.
+    graft.Staging.sorted(Tables.documents(spark, dir), graft.Staging.CorpusScale, "doc_id")(
+      _.withColumn("html", plantHtml(col("doc_id"), col("text")))
+        .select(
+          col("doc_id"),
+          regexp_extract(col("html"), "<title>(.*?)</title>", 1).as("title"),
+          size(regexp_extract_all(col("html"), lit("<[^>]+>"), lit(0))).cast("long").as("n_tags"),
+          extractText(col("html")).as("clean_text")))
 
   /** The composed pipeline-front variant: the corpus report card
     * (rollup over the Gopher gate) computed over EXTRACTED text instead

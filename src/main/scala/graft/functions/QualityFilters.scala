@@ -42,23 +42,20 @@ object QualityFilters {
     * those. Counts are taken BEFORE redaction.
     */
   def piiRedact(spark: SparkSession, dir: String): DataFrame =
-    // sortedSpread (r20): clean_text is corpus-scale — see
-    // HtmlExtract.htmlExtract for why the r19 sortedOutput persist is
-    // replaced by a pre-projection range sort (one exchange, no
-    // persist, sampler re-runs only the raw scan).
-    graft.Staging.sortedSpread(Tables.documents(spark, dir), "doc_id")
-      .withColumn("pii_text",
+    // clean_text is corpus-scale.
+    graft.Staging.sorted(Tables.documents(spark, dir), graft.Staging.CorpusScale, "doc_id")(
+      _.withColumn("pii_text",
         concat(
           col("text"),
           lit(" contact user"), col("doc_id"), lit("@mail.example.com or call 555-"),
           lpad(col("doc_id") % 1000, 3, "0"), lit("-"), lpad(col("doc_id") % 10000, 4, "0"),
           lit(" from 10."), col("doc_id") % 256, lit(".0.1")))
-      .select(
-        col("doc_id"),
-        size(regexp_extract_all(col("pii_text"), lit(EmailPattern), lit(0))).cast("long").as("n_emails"),
-        size(regexp_extract_all(col("pii_text"), lit(PhonePattern), lit(0))).cast("long").as("n_phones"),
-        size(regexp_extract_all(col("pii_text"), lit(Ipv4Pattern), lit(0))).cast("long").as("n_ips"),
-        redact(col("pii_text")).as("clean_text"))
+        .select(
+          col("doc_id"),
+          size(regexp_extract_all(col("pii_text"), lit(EmailPattern), lit(0))).cast("long").as("n_emails"),
+          size(regexp_extract_all(col("pii_text"), lit(PhonePattern), lit(0))).cast("long").as("n_phones"),
+          size(regexp_extract_all(col("pii_text"), lit(Ipv4Pattern), lit(0))).cast("long").as("n_ips"),
+          redact(col("pii_text")).as("clean_text")))
 
   /** Modal-word count of a token array, SCAN-LOCALLY: sort the array,
     * then the longest equal-run length is the top word's count — the
@@ -90,7 +87,7 @@ object QualityFilters {
     * without multiplying corpus reads.
     */
   def gopherQuality(spark: SparkSession, dir: String): DataFrame =
-    graft.Staging.mapSorted(Tables.documents(spark, dir), "quality_gopher_out", "doc_id")(
+    graft.Staging.sorted(Tables.documents(spark, dir), "quality_gopher_out", "doc_id")(
       gopherFrame(_)
         .select("doc_id", "n_words", "mean_word_len", "stop_hits", "top_word_n",
           "top_word_ratio", "pass_wc", "pass_mwl", "pass_stop", "pass_rep", "keep"))
@@ -139,7 +136,7 @@ object QualityFilters {
     * brace, every 7th a lorem-ipsum run, every 17th a blocklisted word.
     */
   def c4Quality(spark: SparkSession, dir: String): DataFrame =
-    graft.Staging.mapSorted(Tables.documents(spark, dir), "quality_c4_out", "doc_id")(
+    graft.Staging.sorted(Tables.documents(spark, dir), "quality_c4_out", "doc_id")(
       c4FrameOf(_)
         .select("doc_id", "url", "domain", "pass_url", "pass_brace", "pass_lorem",
           "pass_badword", "keep"))
@@ -148,7 +145,7 @@ object QualityFilters {
     * url/ptext and the rule booleans as columns (existing columns kept)
     * — the composition point curationRun shares one documents scan
     * through (r20: the composed funnel previously paid each standalone
-    * query's own spread exchange and sortedOutput persist).
+    * query's own spread exchange and staged sort).
     */
   private[graft] def c4FrameOf(docs: DataFrame): DataFrame = {
     val planted = docs
@@ -186,7 +183,7 @@ object QualityFilters {
     * and joinable on every run — no RNG state to ship.
     */
   def qualitySample(spark: SparkSession, dir: String): DataFrame =
-    graft.Staging.mapSorted(Tables.documents(spark, dir), "quality_sample_out", "doc_id")(
+    graft.Staging.sorted(Tables.documents(spark, dir), "quality_sample_out", "doc_id")(
       gopherFrame(_)
         .withColumn("n_pass",
           col("pass_wc").cast("int") + col("pass_mwl").cast("int") +

@@ -17,35 +17,11 @@ object TextFunctions {
     */
   private def toks(c: Column): Column = split(c, "\\s+")
 
-  /** The documents scan for the explode→aggregate retrieval/vocab
-    * queries in this file. r19 wrapped it in Staging.spread; r20
-    * REVERTED that after clean-host measurement: for explode→agg
-    * shapes the aggregation's own exchange already redistributes, so
-    * the up-front round-robin exchange (plus its SPARK-23207 local row
-    * sort) is pure overhead — q_vocab_topk 0.22 → 0.46 s, q_phrase_mine
-    * 0.60 → 1.12, q_vocab_topk_cms 0.68 → 1.17, q_bm25_search
-    * 1.17 → 1.57+ vs r18, reproduced across every clean bench run.
-    * The spread stays where per-row expression work dominates a
-    * SORT-OUTPUT or index-build pipeline (Dedup.shingles, mapSorted's
-    * pre-sort branch).
-    */
-  private def docsSpread(spark: SparkSession, dir: String): DataFrame =
-    Tables.documents(spark, dir)
-
-  /** The narrow-output map-query sort shape (r20): scale-adaptive
-    * pre-projection range sort / post-projection staged sort — see
-    * Staging.mapSorted. Applies to every scan→project→orderBy(doc_id)
-    * query in this file.
-    */
-  private def docsMapSorted(spark: SparkSession, dir: String, name: String)(
-      project: DataFrame => DataFrame): DataFrame =
-    graft.Staging.mapSorted(Tables.documents(spark, dir), name, "doc_id")(project)
-
   /** #29 token count. Reference analog: champion/lane list flattening
     * counts (utils.py:990 get_stats_availability counts predicates).
     */
   def tokenCount(spark: SparkSession, dir: String): DataFrame =
-    docsMapSorted(spark, dir, "token_count_out")(
+    graft.Staging.sorted(Tables.documents(spark, dir), "token_count_out", "doc_id")(
       _.select(col("doc_id"), size(toks(col("text"))).cast("long").as("n_tokens")))
 
   /** BPE-style pre-tokenizer pattern (GPT-2-family shape, simplified to
@@ -61,7 +37,7 @@ object TextFunctions {
     * whitespace count — both pure codegen'd expressions.
     */
   def tokenCountBpe(spark: SparkSession, dir: String): DataFrame =
-    docsMapSorted(spark, dir, "token_count_bpe_out")(
+    graft.Staging.sorted(Tables.documents(spark, dir), "token_count_bpe_out", "doc_id")(
       _.select(
         col("doc_id"),
         size(toks(col("text"))).cast("long").as("n_tokens_ws"),
@@ -77,7 +53,7 @@ object TextFunctions {
     * 3-gram and are excluded, like Dedup.shingles.
     */
   def docRepetition(spark: SparkSession, dir: String, n: Int = 3): DataFrame =
-    graft.Staging.mapSorted(Tables.documents(spark, dir), "doc_repetition_out", "doc_id")(
+    graft.Staging.sorted(Tables.documents(spark, dir), "doc_repetition_out", "doc_id")(
       docRepetitionOf(_, n))
 
   private[graft] def docRepetitionOf(docs: DataFrame, n: Int = 3): DataFrame =
@@ -108,7 +84,7 @@ object TextFunctions {
     * derived); production passes arbitrary token sets the same way.
     */
   def tfidfSearch(spark: SparkSession, dir: String, topK: Int = 50): DataFrame = {
-    val docs = docsSpread(spark, dir)
+    val docs = Tables.documents(spark, dir)
     val tokens = docs.select(col("doc_id"), explode(toks(col("text"))).as("tok"))
     // Staged once (graft.Staging — persist or scratch parquet): the
     // df/query-selection subtree and the scoring join would otherwise
@@ -153,7 +129,7 @@ object TextFunctions {
     * and df both derive from the staged tf frame.
     */
   def bm25Search(spark: SparkSession, dir: String, topK: Int = 50): DataFrame = {
-    val docs = docsSpread(spark, dir)
+    val docs = Tables.documents(spark, dir)
     val tokens = docs.select(col("doc_id"), explode(toks(col("text"))).as("tok"))
     val tf = graft.Staging.staged(
       tokens.groupBy("doc_id", "tok").agg(count(lit(1)).as("tf")), "bm25_tf")
@@ -191,15 +167,13 @@ object TextFunctions {
     * graft_bpe directly (ShardExport does).
     */
   def tokenizeBpe(spark: SparkSession, dir: String): DataFrame =
-    // sortedSpread (r20): token_ids is corpus-scale (every token id as
-    // text) — see HtmlExtract.htmlExtract for why the r19 sortedOutput
-    // persist is replaced by a pre-projection range sort.
-    graft.Staging.sortedSpread(Tables.documents(spark, dir), "doc_id")
-      .select(col("doc_id"), expr("graft_bpe(text)").as("ids"))
-      .select(
-        col("doc_id"),
-        array_join(col("ids"), " ").as("token_ids"),
-        size(col("ids")).cast("long").as("n_tokens"))
+    // token_ids is corpus-scale: every token id as text.
+    graft.Staging.sorted(Tables.documents(spark, dir), graft.Staging.CorpusScale, "doc_id")(
+      _.select(col("doc_id"), expr("graft_bpe(text)").as("ids"))
+        .select(
+          col("doc_id"),
+          array_join(col("ids"), " ").as("token_ids"),
+          size(col("ids")).cast("long").as("n_tokens")))
 
   /** Stopword list for quality/language heuristics. */
   val Stopwords: Seq[String] = Seq("the", "a", "of", "and", "to", "in", "is", "it")
@@ -212,7 +186,7 @@ object TextFunctions {
     * identical IEEE op sequence as the oracle SQL.
     */
   def textQuality(spark: SparkSession, dir: String): DataFrame =
-    docsMapSorted(spark, dir, "text_quality_out")(
+    graft.Staging.sorted(Tables.documents(spark, dir), "text_quality_out", "doc_id")(
       _.withColumn("tk", toks(col("text")))
       .withColumn("n_tokens", size(col("tk")))
       .withColumn("stop_hits", expr(s"size(filter(tk, t -> t IN (${inList(Stopwords)})))"))
@@ -253,7 +227,7 @@ object TextFunctions {
     * languages in sorted order with >=).
     */
   def langId(spark: SparkSession, dir: String): DataFrame =
-    docsMapSorted(spark, dir, "lang_id_out") { docs =>
+    graft.Staging.sorted(Tables.documents(spark, dir), "lang_id_out", "doc_id") { docs =>
       val base = docs.withColumn("tk", toks(col("text")))
       val withHits = LangMarkers.foldLeft(base) { case (df, (lang, markers)) =>
         df.withColumn(s"h_$lang", expr(s"size(filter(tk, t -> t IN (${inList(markers)})))"))
@@ -274,7 +248,7 @@ object TextFunctions {
     * (registered as SQL function graft_fingerprint by GraftSession).
     */
   def docFingerprint(spark: SparkSession, dir: String): DataFrame =
-    docsMapSorted(spark, dir, "doc_fingerprint_out")(
+    graft.Staging.sorted(Tables.documents(spark, dir), "doc_fingerprint_out", "doc_id")(
       _.select(col("doc_id"), expr("graft_fingerprint(text)").as("fp")))
 
   /** Chunk geometry: 32-token windows, stride 24 (8-token overlap) —
@@ -290,30 +264,27 @@ object TextFunctions {
     * runs/engines — required when chunks become training-set rows.
     */
   def docChunk(spark: SparkSession, dir: String): DataFrame =
-    // sortedSpread (r20): chunk_text is ~1.3× the corpus — see
-    // HtmlExtract.htmlExtract for why the r19 sortedOutput persist is
-    // replaced by a pre-projection range sort. Sorting by doc_id BEFORE
-    // the chunk explode keeps the (doc_id, chunk_idx) output order:
-    // explode emits a doc's windows in ascending start order, and
-    // per-partition projections/generators preserve row order.
-    graft.Staging.sortedSpread(Tables.documents(spark, dir), "doc_id")
-      .withColumn("tk", toks(col("text")))
-      .withColumn("start", explode(sequence(lit(0), size(col("tk")) - 1, lit(ChunkStride))))
-      .withColumn("chunk_idx", (col("start") / ChunkStride).cast("long"))
-      .withColumn("chunk", slice(col("tk"), col("start") + 1, lit(ChunkTokens)))
-      .select(
-        col("doc_id"),
-        col("chunk_idx"),
-        size(col("chunk")).cast("long").as("n_chunk_tokens"),
-        concat_ws(" ", col("chunk")).as("chunk_text")
-      )
+    // chunk_text is ~1.3× the corpus. Sorting by doc_id BEFORE the
+    // chunk explode keeps the (doc_id, chunk_idx) output order: explode
+    // emits a doc's windows in ascending start order, and per-partition
+    // projections/generators preserve row order.
+    graft.Staging.sorted(Tables.documents(spark, dir), graft.Staging.CorpusScale, "doc_id")(
+      _.withColumn("tk", toks(col("text")))
+        .withColumn("start", explode(sequence(lit(0), size(col("tk")) - 1, lit(ChunkStride))))
+        .withColumn("chunk_idx", (col("start") / ChunkStride).cast("long"))
+        .withColumn("chunk", slice(col("tk"), col("start") + 1, lit(ChunkTokens)))
+        .select(
+          col("doc_id"),
+          col("chunk_idx"),
+          size(col("chunk")).cast("long").as("n_chunk_tokens"),
+          concat_ws(" ", col("chunk")).as("chunk_text")))
 
   /** Corpus vocabulary: global token counts, top 50. Explode + groupBy —
     * map-side partial aggregation absorbs the token-frequency skew before
     * the shuffle, and TakeOrdered handles the limit (no global sort).
     */
   def vocabTopK(spark: SparkSession, dir: String): DataFrame =
-    docsSpread(spark, dir)
+    Tables.documents(spark, dir)
       .select(explode(toks(col("text"))).as("token"))
       .groupBy("token")
       .agg(count(lit(1)).as("n"))
@@ -369,7 +340,7 @@ object TextFunctions {
     * the exemplar string carried on the bounded frames only.
     */
   def vocabTopKCms(spark: SparkSession, dir: String): DataFrame = {
-    val docs = docsSpread(spark, dir)
+    val docs = Tables.documents(spark, dir)
     def tokens(df: DataFrame): DataFrame =
       df.select(explode(toks(col("text"))).as("token"))
         .select(col("token"), xxhash64(col("token")).as("tokh"))
@@ -428,7 +399,7 @@ object TextFunctions {
   val ProbeIdPushdownCap = 10000
 
   def substrSearch(spark: SparkSession, dir: String): DataFrame = {
-    val docs = docsSpread(spark, dir)
+    val docs = Tables.documents(spark, dir)
     // Driver-evaluated phrase hash via the same Catalyst expression the
     // index keys were written with (xxhash64, seed 42) — bit-identical
     // by construction and zero Spark jobs (the old spark.range(1)
@@ -515,7 +486,7 @@ object TextFunctions {
     * top-K runs on the bounded scored frame.
     */
   def phraseMine(spark: SparkSession, dir: String): DataFrame = {
-    val docs = docsSpread(spark, dir)
+    val docs = Tables.documents(spark, dir)
     val tk = docs.select(split(col("text"), " ").as("tk"))
     val uni = tk.select(explode(col("tk")).as("w"))
       .groupBy("w").agg(count(lit(1)).as("cw"))

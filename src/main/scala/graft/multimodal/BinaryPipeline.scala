@@ -651,9 +651,9 @@ object PixelPipeline {
         graft.Num.round4(col("sr").cast("double") / col("n_px")).as("mean_r"),
         graft.Num.round4(col("sg").cast("double") / col("n_px")).as("mean_g"),
         graft.Num.round4(col("sb").cast("double") / col("n_px")).as("mean_b"))
-      // sortedOutput (r19): the bare orderBy's sampling pass re-decoded
-      // every image a second time.
-      .transform(df => graft.Staging.sortedOutput(df, "media_pixels_out", "media_id"))
+      // The bare orderBy's sampling pass re-decoded every image a
+      // second time.
+      .transform(df => graft.Staging.sorted(df, "media_pixels_out", "media_id")())
   }
 
   /** DuckDB replay of q_media_pixels_jpeg: blocks from the id formula,
@@ -730,8 +730,8 @@ object PixelPipeline {
         graft.Num.round4(col("sr").cast("double") / col("n_px")).as("mean_r"),
         graft.Num.round4(col("sg").cast("double") / col("n_px")).as("mean_g"),
         graft.Num.round4(col("sb").cast("double") / col("n_px")).as("mean_b"))
-      // sortedOutput (r19): the bare orderBy's sampling pass re-decoded
-      // every image a second time.
-      .transform(df => graft.Staging.sortedOutput(df, "media_pixels_out", "media_id"))
+      // The bare orderBy's sampling pass re-decoded every image a
+      // second time.
+      .transform(df => graft.Staging.sorted(df, "media_pixels_out", "media_id")())
   }
 }

@@ -45,7 +45,7 @@ object CurationRun {
     // ONE spread documents scan (r20, verdict item 3): the r19 funnel
     // composed the STANDALONE gate queries, so every sub-operator paid
     // its own round-robin exchange over the same scan plus its own
-    // sortedOutput persist+range-sort — none of which the final
+    // staged persist+range-sort — none of which the final
     // aggregate needs. The C4 and Gopher rules are all scan-local
     // expressions, so both gates and the token count ride a single
     // projection over one spread scan; only the cluster table and the

@@ -28,11 +28,9 @@ object Features {
     val bin = (0 until 9)
       .map(i => when(col("value") >= Num.round4(col("bs")(i)), 1).otherwise(0))
       .reduce(_ + _)
-    // mapSorted (r20): scale-adaptive pre-projection range sort
-    // replaces the r19 sortedOutput persist (see Staging.mapSorted);
-    // the 1-row broadcast join streams the sorted side, preserving its
+    // The 1-row broadcast join streams the sorted side, preserving its
     // per-partition order.
-    graft.Staging.mapSorted(ev, "feature_bins_out", "event_id")(
+    graft.Staging.sorted(ev, "feature_bins_out", "event_id")(
       _.join(broadcast(bounds))
         .select(col("event_id"), col("value"), bin.cast("long").as("bin")))
   }

@@ -69,9 +69,9 @@ object Fights {
         col("max_click"),
         col("sum_click")
       )
-      // sortedOutput (r19): the final sort's range-sampling pass re-ran
-      // the sort-merge join; staging bounds it to a cache read.
-      .transform(df => graft.Staging.sortedOutput(df, "range_attr_merge_out", "event_id"))
+      // The final sort's range-sampling pass re-ran the sort-merge
+      // join; staging bounds it to a cache read.
+      .transform(df => graft.Staging.sorted(df, "range_attr_merge_out", "event_id")())
   }
 
   /** Downstream conditional aggregation over the merged fights: per user,

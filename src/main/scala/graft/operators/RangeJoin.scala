@@ -49,8 +49,8 @@ object RangeJoin {
       .select(col("a_id").as("event_id"))
       .join(matched.withColumnRenamed("a_id", "event_id"), Seq("event_id"), "left")
       .select(col("event_id"), coalesce(col("n_nearby"), lit(0L)).as("n_nearby"))
-      // sortedOutput (r19): the final sort's range-sampling pass re-ran
-      // the sort-merge join; staging bounds it to a cache read.
-      .transform(df => graft.Staging.sortedOutput(df, "range_join_out", "event_id"))
+      // The final sort's range-sampling pass re-ran the sort-merge
+      // join; staging bounds it to a cache read.
+      .transform(df => graft.Staging.sorted(df, "range_join_out", "event_id")())
   }
 }

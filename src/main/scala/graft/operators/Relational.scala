@@ -23,11 +23,10 @@ object Relational {
       .select("l_orderkey", "l_linenumber", "l_partkey", "l_quantity", "l_extendedprice")
       // (l_orderkey, l_linenumber) is not unique in this data — order by
       // all projected columns (here and in the oracle) for hash stability.
-      // mapSorted (r20): scale-adaptive sort shape, see Staging.mapSorted
-      // (identity projection — the choice here is persist vs a second
-      // pushed-filter scan for the range sampler).
-      .transform(df => graft.Staging.mapSorted(df, "filter_project_out",
-        "l_orderkey", "l_linenumber", "l_partkey", "l_quantity", "l_extendedprice")(identity))
+      // Identity projection: `sorted` picks between a persist and a
+      // second pushed-filter scan for the range sampler.
+      .transform(df => graft.Staging.sorted(df, "filter_project_out",
+        "l_orderkey", "l_linenumber", "l_partkey", "l_quantity", "l_extendedprice")())
 
   /** Grouped aggregation with map-side partial agg (TPC-H Q1 shape).
     * Reference: utils.py:983-986 (per-stat averages over match history).
@@ -110,9 +109,9 @@ object Relational {
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") <= 3)
       .withColumn("rn", col("rn").cast("long"))
-      // sortedOutput (r19): the sampling pass re-ran the rank window +
-      // WindowGroupLimit over the scan; the output is 3-per-group.
-      .transform(df => graft.Staging.sortedOutput(df, "topk_per_group_out", "c_mktsegment", "rn"))
+      // The sampling pass re-ran the rank window + WindowGroupLimit
+      // over the scan; the output is 3-per-group.
+      .transform(df => graft.Staging.sorted(df, "topk_per_group_out", "c_mktsegment", "rn")())
   }
 
   /** Exact distinct aggregation (HLL `approx_count_distinct` is the 100TB

@@ -59,10 +59,10 @@ object RoleAssign {
           .otherwise("other")
       )
       .select("l_orderkey", "l_linenumber", "l_partkey", "role")
-      // sortedOutput (r19): the final sort's range-sampling pass re-ran
-      // all three elimination-cascade window sorts; staging the
-      // output-sized frame bounds it to a cache read.
-      .transform(df => graft.Staging.sortedOutput(df, "role_assign_out",
-        "l_orderkey", "l_linenumber", "l_partkey", "role"))
+      // The final sort's range-sampling pass re-ran all three
+      // elimination-cascade window sorts; staging the output-sized
+      // frame bounds it to a cache read.
+      .transform(df => graft.Staging.sorted(df, "role_assign_out",
+        "l_orderkey", "l_linenumber", "l_partkey", "role")())
   }
 }

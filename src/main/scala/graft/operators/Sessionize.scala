@@ -33,11 +33,11 @@ object Sessionize {
       .withColumn("session_id", sum("brk").over(runningBrk))
       .groupBy("user_id", "session_id")
       .agg(count(lit(1)).as("n_events"))
-      // sortedOutput (r19): the groupBy shares the windows' user_id
-      // partitioning (no exchange between), so the final sort's
-      // range-sampling pass re-ran both window passes; staging bounds
-      // it to a cache read (see Windows.runningSum).
-      .transform(df => graft.Staging.sortedOutput(df, "sessionize_out", "user_id", "session_id"))
+      // The groupBy shares the windows' user_id partitioning (no
+      // exchange between), so the final sort's range-sampling pass
+      // re-ran both window passes; staging bounds it to a cache read
+      // (see Windows.runningSum).
+      .transform(df => graft.Staging.sorted(df, "sessionize_out", "user_id", "session_id")())
   }
 
   /** Session-level features rolled up per user: the second stage of the
@@ -78,6 +78,6 @@ object Sessionize {
         max("n_events").as("max_session_events"),
         graft.Num.round4(sum(col("end_ms") - col("start_ms")).cast("double")
           / (count(lit(1)) * lit(60000.0))).as("avg_session_minutes"))
-      .transform(df => graft.Staging.sortedOutput(df, "session_stats_out", "user_id"))
+      .transform(df => graft.Staging.sorted(df, "session_stats_out", "user_id")())
   }
 }

@@ -20,9 +20,7 @@ import org.apache.spark.sql.functions._
 object Splits {
 
   def splitAssign(spark: SparkSession, dir: String): DataFrame =
-    // mapSorted (r20): scale-adaptive pre-projection range sort
-    // replaces the r19 sortedOutput persist — see Staging.mapSorted.
-    graft.Staging.mapSorted(
+    graft.Staging.sorted(
       Tables.documents(spark, dir).select(col("doc_id")), "split_assign_out", "doc_id")(
       _.withColumn("bucket",
         (((col("doc_id") % 1000003L) * 1315423911L + 12345L) % 1000000007L % 100L).cast("long"))
@@ -195,10 +193,9 @@ object Splits {
     * is codegen'd and the only full-table cost is the read.
     */
   def stratifiedSample(spark: SparkSession, dir: String): DataFrame =
-    // mapSorted (r20): see Staging.mapSorted; the selective filter
-    // preserves per-partition order, so the pre-sorted branch keeps the
-    // global event_id order.
-    graft.Staging.mapSorted(
+    // The selective filter preserves per-partition order, so the
+    // range-sort-first branch keeps the global event_id order.
+    graft.Staging.sorted(
       Tables.events(spark, dir).select(col("event_id"), col("user_id"), col("event_type")),
       "stratified_sample_out", "event_id")(
       _.withColumn("bucket",

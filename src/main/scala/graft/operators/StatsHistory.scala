@@ -68,8 +68,8 @@ object StatsHistory {
       .withColumn("lane_rank", row_number().over(rankW).cast("long"))
       .select("user_id", "event_type", "n_events", "avg_value", "avg_value_7d",
         "lane_rank", "cur_streak_len", "cur_streak_win")
-      // sortedOutput (r19): the sampling pass re-ran the whole
-      // window+aggregate composite above the user_id exchange.
-      .transform(df => graft.Staging.sortedOutput(df, "stats_history_out", "user_id", "lane_rank"))
+      // The sampling pass re-ran the whole window+aggregate composite
+      // above the user_id exchange.
+      .transform(df => graft.Staging.sorted(df, "stats_history_out", "user_id", "lane_rank")())
   }
 }

@@ -25,16 +25,15 @@ object Windows {
       .select("event_id", "user_id", "ts", "value")
       .withColumn("running_value", round(sum("value").over(w), 4))
       .select("event_id", "user_id", "running_value")
-      // sortedOutput (r19): the final global sort's range-sampling pass
-      // re-runs everything above the window's hash exchange — here and
-      // in every window query below, that is the window sort+eval
-      // itself, the query's whole cost. Staging the output-sized frame
-      // bounds the sampling pass to a cache read. Re-audited r20 at the
-      // 1M-event decade point (verdict item 5) against the plain-
-      // orderBy alternative: staged wins 0.84 vs 1.11 s here and on
-      // every non-tie site in this file (see Staging.sortedOutput's
-      // event-grain exception note).
-      .transform(df => graft.Staging.sortedOutput(df, "window_running_out", "user_id", "event_id"))
+      // The final global sort's range-sampling pass re-runs everything
+      // above the window's hash exchange — here and in every window
+      // query below, that is the window sort+eval itself, the query's
+      // whole cost. Staging the output-sized frame bounds the sampling
+      // pass to a cache read. Re-audited r20 at the 1M-event decade
+      // point (verdict item 5) against the plain-orderBy alternative:
+      // staged wins 0.84 vs 1.11 s here and on every non-tie site in
+      // this file (see Staging.sorted).
+      .transform(df => graft.Staging.sorted(df, "window_running_out", "user_id", "event_id")())
   }
 
   /** Trailing moving average over the previous N rows.
@@ -51,7 +50,7 @@ object Windows {
       .withColumn("avg3", round(avg("value").over(w(3)), 4))
       .withColumn("avg4", round(avg("value").over(w(4)), 4))
       .select("event_id", "user_id", "avg2", "avg3", "avg4")
-      .transform(df => graft.Staging.sortedOutput(df, "window_moving_out", "user_id", "event_id"))
+      .transform(df => graft.Staging.sorted(df, "window_moving_out", "user_id", "event_id")())
   }
 
   /** Longest win/loss streak per entity, gaps-and-islands in one linear
@@ -74,10 +73,10 @@ object Windows {
         max(when(col("w") === 1, col("len")).otherwise(0)).as("max_win_streak"),
         max(when(col("w") === 0, col("len")).otherwise(0)).as("max_loss_streak")
       )
-      // sortedOutput (r19): the two groupBys share the window's user_id
-      // partitioning (no exchange between), so the sampling pass re-ran
-      // both ranking windows; see runningSum.
-      .transform(df => graft.Staging.sortedOutput(df, "streaks_out", "user_id"))
+      // The two groupBys share the window's user_id partitioning (no
+      // exchange between), so the sampling pass re-ran both ranking
+      // windows; see runningSum.
+      .transform(df => graft.Staging.sorted(df, "streaks_out", "user_id")())
   }
 
   /** Time-bounded lookback aggregate: for every event, the average over
@@ -112,7 +111,7 @@ object Windows {
         graft.Num.round4(
           sum("v100").over(w).cast("double") / (count("v100").over(w) * lit(100.0))))
       .select("event_id", "user_id", "avg_7d")
-      .transform(df => graft.Staging.sortedOutput(df, "asof_lookback_out", "event_id"))
+      .transform(df => graft.Staging.sorted(df, "asof_lookback_out", "event_id")())
   }
 
   /** Event-type transition counts: for each user-ordered event pair,
@@ -152,9 +151,9 @@ object Windows {
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") === 1)
       .select("user_id", "event_id", "event_type", "value")
-      // sortedOutput (r19): the sampling pass re-ran the rank window +
-      // WindowGroupLimit over the events scan; the output is key-sized.
-      .transform(df => graft.Staging.sortedOutput(df, "latest_snapshot_out", "user_id"))
+      // The sampling pass re-ran the rank window + WindowGroupLimit
+      // over the events scan; the output is key-sized.
+      .transform(df => graft.Staging.sorted(df, "latest_snapshot_out", "user_id")())
   }
 
   /** Multi-horizon trailing lookback: for every event, that user's
@@ -192,7 +191,7 @@ object Windows {
       .withColumn("n_7d", count(lit(1)).over(trailing(7)))
       .withColumn("avg_7d_type", exactAvg(byType))
       .select("event_id", "user_id", "avg_7d", "avg_14d", "avg_21d", "n_7d", "avg_7d_type")
-      .transform(df => graft.Staging.sortedOutput(df, "lookback_multiwindow_out", "event_id"))
+      .transform(df => graft.Staging.sorted(df, "lookback_multiwindow_out", "event_id")())
   }
 
   /** Pre-flight stats availability: for every event, how much usable
@@ -230,7 +229,7 @@ object Windows {
       .withColumn("n_counted_7d", condCount(col("value") >= 10, trailing(7)))
       .withColumn("n_same_type_7d", count(lit(1)).over(byType))
       .select("event_id", "user_id", "n_7d", "n_21d", "n_high_7d", "n_counted_7d", "n_same_type_7d")
-      .transform(df => graft.Staging.sortedOutput(df, "stats_availability_out", "event_id"))
+      .transform(df => graft.Staging.sorted(df, "stats_availability_out", "event_id")())
   }
 
   /** Recurrent-delta training frame: per (user, event_type) sequence,
@@ -263,7 +262,7 @@ object Windows {
       .withColumn("delta3", delta(3))
       .withColumn("delta4", delta(4))
       .select("event_id", "user_id", "event_type", "value", "delta2", "delta3", "delta4")
-      .transform(df => graft.Staging.sortedOutput(df, "recurrent_delta_out", "event_id"))
+      .transform(df => graft.Staging.sorted(df, "recurrent_delta_out", "event_id")())
   }
 
   /** Exact interpolated percentiles per group (oracle-matched); the 100TB
@@ -336,10 +335,10 @@ object Windows {
         est("b50").as("p50"),
         est("b90").as("p90"),
         est("b99").as("p99"))
-      // sortedOutput (r19): the cumulative window + final aggregate sit
-      // above the histogram exchange with no boundary before the output
-      // sort — the sampling pass re-ran them; see runningSum.
-      .transform(df => graft.Staging.sortedOutput(df, "percentiles_approx_out", "event_type"))
+      // The cumulative window + final aggregate sit above the histogram
+      // exchange with no boundary before the output sort — the sampling
+      // pass re-ran them; see runningSum.
+      .transform(df => graft.Staging.sorted(df, "percentiles_approx_out", "event_type")())
   }
 
   /** Global z-score normalization `(x - mean) / (2 * stddev_pop)`:
@@ -362,12 +361,11 @@ object Windows {
       .select("l_orderkey", "l_linenumber", "znorm")
       // (l_orderkey, l_linenumber) is NOT unique in this data; znorm added
       // to the sort (here and in the oracle) for a total, hash-stable order.
-      // Bare orderBy (r20, reverted from the r19 sortedOutput): the
-      // pre-sort frame is lineitem-cardinality — persisting it to sort
-      // it violates sortedOutput's contract and measured 0.73 → 1.23 s
-      // at sf0.1/32c; the sampler's double-run is one extra scan +
-      // broadcast-join of cheap arithmetic. (mapSorted's pre-sort
-      // branch doesn't apply: znorm is a computed sort key.)
+      // Bare orderBy, not Staging.sorted: the pre-sort frame is
+      // lineitem-cardinality, and staging it measured 0.73 → 1.23 s at
+      // sf0.1/32c; the sampler's double-run is one extra scan +
+      // broadcast-join of cheap arithmetic. Range-sorting the input
+      // first doesn't apply: znorm is a computed sort key.
       .orderBy("l_orderkey", "l_linenumber", "znorm")
   }
 

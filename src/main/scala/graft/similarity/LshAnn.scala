@@ -119,16 +119,16 @@ object LshAnn {
         col("band") === col("band2") && col("key") === col("key2") && col("a") < col("b"))
       .select("a", "b")
       .distinct()
-    // sortedOutput: an unstaged sort's sampling pass would re-run the
-    // candidate verify joins and their dot products.
-    graft.Staging.sortedOutput(
+    // Not a bare orderBy: an unstaged sort's sampling pass would re-run
+    // the candidate verify joins and their dot products.
+    graft.Staging.sorted(
       candidates
         .join(v.select(col("vec_id").as("a2"), col("e").as("ea"), col("norm").as("na")), col("a") === col("a2"))
         .join(v.select(col("vec_id").as("b2"), col("e").as("eb"), col("norm").as("nb")), col("b") === col("b2"))
         .withColumn("cos", expr("graft_dot(ea, eb)") / (col("na") * col("nb")))
         .filter(col("cos") >= threshold)
         .select(col("a"), col("b"), Num.round4(col("cos")).as("cos")),
-      "lsh_pairs", "a", "b")
+      "lsh_pairs", "a", "b")()
   }
 
   /** Top-k approximate neighbors for each query vector (same query set

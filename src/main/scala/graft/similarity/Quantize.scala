@@ -38,12 +38,9 @@ object Quantize {
         when(col("scale") === 0d, expr("transform(e, x -> 0)"))
           .otherwise(expr(s"transform(e, x -> cast(floor(x / scale + 0.5d) as int))")))
 
-  /** Declared query: per-vector quantization diagnostics. mapSorted
-    * (r20): scale-adaptive pre-projection range sort replaces the r19
-    * sortedOutput persist — see Staging.mapSorted.
-    */
+  /** Declared query: per-vector quantization diagnostics. */
   def quantizeStats(spark: SparkSession, dir: String): DataFrame =
-    graft.Staging.mapSorted(Tables.embeddings(spark, dir), "embed_quantize_out", "vec_id")(
+    graft.Staging.sorted(Tables.embeddings(spark, dir), "embed_quantize_out", "vec_id")(
       quantizedOf(_)
         .withColumn(
           "max_abs_err",

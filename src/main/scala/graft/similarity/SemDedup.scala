@@ -31,14 +31,14 @@ object SemDedup {
     val v = graft.Staging.staged(
       IvfAnn.assignedVectors(spark, dir),
       "semdedup_cells")
-    // sortedOutput: an unstaged sort's sampling pass would re-run the
-    // within-cell self-join and its dot products.
-    graft.Staging.sortedOutput(
+    // Not a bare orderBy: an unstaged sort's sampling pass would re-run
+    // the within-cell self-join and its dot products.
+    graft.Staging.sorted(
       v.toDF("a", "ea", "na", "cell")
         .join(v.toDF("b", "eb", "nb", "cell2"), col("cell") === col("cell2") && col("a") < col("b"))
         .withColumn("cos", expr("graft_dot(ea, eb)") / (col("na") * col("nb")))
         .filter(col("cos") >= threshold)
         .select(col("a"), col("b"), Num.round4(col("cos")).as("cos")),
-      "semdedup_pairs", "a", "b")
+      "semdedup_pairs", "a", "b")()
   }
 }

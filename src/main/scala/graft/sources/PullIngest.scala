@@ -182,9 +182,9 @@ object PullIngest {
         lit(0L).as("attempt"))
     schedule(reqs, GateLimits)
       .select(col("api_key"), col("req_id"), col("req_seq"), col("issue_tick"))
-      // sortedOutput (r19): the range-sampling pass re-ran the whole
-      // schedule recurrence (map-side after its window exchange).
-      .transform(df => graft.Staging.sortedOutput(df, "pull_schedule_out", "api_key", "req_seq"))
+      // The range-sampling pass re-ran the whole schedule recurrence
+      // (map-side after its window exchange).
+      .transform(df => graft.Staging.sorted(df, "pull_schedule_out", "api_key", "req_seq")())
   }
 
   /** RateMonitor composition: the ledger's issue ticks become event

@@ -134,7 +134,7 @@ object ScdHistory {
       valueCol = "event_type",
       tsMsCol = "ts_ms",
       tieCols = Seq("event_id")
-      // sortedOutput (r19): the sampling pass re-ran the run-detection
-      // windows above the user_id exchange (see Windows.runningSum).
-    ).transform(df => graft.Staging.sortedOutput(df, "scd_history_out", "user_id", "version"))
+      // The sampling pass re-ran the run-detection windows above the
+      // user_id exchange (see Windows.runningSum).
+    ).transform(df => graft.Staging.sorted(df, "scd_history_out", "user_id", "version")())
 }

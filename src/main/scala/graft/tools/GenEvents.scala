@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 /** Deterministic events-scale generator for the WINDOW-family decade
   * measurements (r20): GenScale covers documents/embeddings, but the
   * Windows/Sessionize/StatsHistory operators run over `events`, so the
-  * persist-vs-double-run question for their event-grain sortedOutput
+  * persist-vs-double-run question for their event-grain staged-sort
   * sites needs an events table a decade above sf0.1. This unions N
   * id-shifted copies of the sf0.1 events table — scaling USERS (each
   * copy is a disjoint user population), which keeps per-user event
@@ -32,7 +32,7 @@ object GenEvents {
       .repartition(32)
       .write.mode("overwrite").parquet(s"$out/events.parquet")
     // The zscore site sorts lineitem, not events — copy it the same way
-    // so the one lineitem-based sortedOutput site can A/B on the same dir.
+    // so the one lineitem-based sort site can A/B on the same dir.
     val li = spark.read.parquet(s"$src/lineitem.parquet")
     val maxOk = li.agg(max("l_orderkey")).head().getLong(0) + 1
     (0 until copies)

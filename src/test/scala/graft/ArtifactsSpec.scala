@@ -155,7 +155,7 @@ class ArtifactsSpec extends SparkSpec {
     // incident gather), so staging it would materialize the whole
     // corpus-scale index into executor storage ahead of a single scan.
     // The prefix stays staged — its consumers filter/self-join it twice.
-    // r16 re-expression: `Staging.sortedOutput` now stages the
+    // r16 re-expression: `Staging.sorted` now stages the
     // PAIR-SIZED verify output, whose build subtree legitimately
     // contains the one direct shingle scan — so the invariant is no
     // longer "no cached plan mentions the shingle parquet" but "no
@@ -176,7 +176,7 @@ class ArtifactsSpec extends SparkSpec {
         // index would pass it. Anchor to the pair-sized exact-verify
         // shape instead: the scan-local `array_intersect` and the
         // jaccard threshold literal only exist in the verify projection
-        // that sortedOutput stages (`jac_pairs`), never in a raw index
+        // that `sorted` stages (`jac_pairs`), never in a raw index
         // scan or a candidate-mine self-join.
         assert(p.contains("Join"),
           "a staged frame reading the published shingle index must be a " +

@@ -127,6 +127,35 @@ class ClustersSpec extends SparkSpec {
       s"edge-incident non-vertices must be labeled too: $fastS")
   }
 
+  test("adaptive CC: cap = |edges| runs the driver path, |edges| - 1 the loop, same rows") {
+    // The gate fetches at most cap + 1 edges and takes the driver path
+    // only when it got no more than cap. Edges spread over 3 partitions
+    // so the bounded fetch has to read past the first one. Which path
+    // ran is visible in the result's plan: only the distributed loop
+    // reads local checkpoints (LogicalRDD leaves).
+    import org.apache.spark.sql.execution.LogicalRDD
+    val pairs = Seq((1L, 2L), (2L, 3L), (5L, 6L), (7L, 6L), (9L, 8L)).toDF("a", "b").repartition(3)
+    val vertices = (1L to 10L).toDF("id")
+    def run(cap: Long): (Map[Long, Long], Boolean) = {
+      spark.conf.set("spark.graft.cc.driverEdgeCap", cap.toString)
+      try {
+        val out = Clusters.connectedComponentsAdaptive(vertices, pairs)
+        val distributed = out.queryExecution.analyzed.exists(_.isInstanceOf[LogicalRDD])
+        (out.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap, distributed)
+      } finally {
+        spark.conf.unset("spark.graft.cc.driverEdgeCap")
+        spark.catalog.clearCache()
+      }
+    }
+    val (atCap, atCapDistributed) = run(5L)
+    val (belowCap, belowCapDistributed) = run(4L)
+    assert(!atCapDistributed, "cap = |edges| must take the driver union-find")
+    assert(belowCapDistributed, "cap = |edges| - 1 must take the distributed loop")
+    assert(atCap == belowCap, s"labels differ across the cap boundary: $atCap vs $belowCap")
+    assert(atCap == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 4L, 5L -> 5L, 6L -> 5L, 7L -> 5L,
+      8L -> 8L, 9L -> 8L, 10L -> 10L))
+  }
+
   test("driverEdgeCap=0 forces the distributed loop even on an empty edge set") {
     // `0 <= 0` used to admit the driver path for empty graphs, silently
     // un-forcing the spec's pin (r14: gate is now cap > 0 && count <= cap).

@@ -6,7 +6,6 @@ import org.apache.parquet.example.data.simple.SimpleGroupFactory
 import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.hadoop.util.HadoopOutputFile
 import org.apache.parquet.schema.MessageTypeParser
-import org.apache.spark.GraftJobCounter
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.{BinaryType, StringType}
 
@@ -30,15 +29,6 @@ class ParquetSchemaMemoSpec extends SparkSpec {
     "events" -> Tables.events,
     "documents" -> Tables.documents,
     "embeddings" -> Tables.embeddings)
-
-  private def jobsOf(f: => Any): Long = {
-    val counter = new GraftJobCounter(spark.sparkContext)
-    try {
-      val before = counter.jobs
-      f
-      counter.jobs - before
-    } finally counter.close()
-  }
 
   private def tempPath(): String =
     Files.createTempDirectory("graft_schema_memo").resolve("t.parquet").toString

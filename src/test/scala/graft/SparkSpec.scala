@@ -11,6 +11,16 @@ trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
   val sfDir = "/root/testdata/sf0.001"
 
+  /** Spark jobs started while `f` runs, listener bus drained. */
+  def jobsOf(f: => Any): Long = {
+    val counter = new org.apache.spark.GraftJobCounter(spark.sparkContext)
+    try {
+      val before = counter.jobs
+      f
+      counter.jobs - before
+    } finally counter.close()
+  }
+
   /** The COMPLETE physical plan text of an executed frame, for
     * plan-shape assertions: AQE's final-plan rendering elides
     * materialized query-stage and cached subtrees behind one-line

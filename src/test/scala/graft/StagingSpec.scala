@@ -1,11 +1,14 @@
 package graft
 
 import java.nio.file.Files
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{col, length}
 
 /** Pins the 100 TB deployment mode of graft.Staging: with
   * `spark.graft.scratch` set, every staged index is written to scratch
   * parquet and re-read instead of persisted to executor storage — and a
-  * staged query's rows must be identical in both modes.
+  * staged query's rows must be identical in both modes. Also pins the
+  * two placement helpers, `spread` and each branch of `sorted`.
   */
 class StagingSpec extends SparkSpec {
 
@@ -35,7 +38,7 @@ class StagingSpec extends SparkSpec {
       "the session default must keep AQE in cached plans (r16: static " +
         "estimates broadcast corpus-scale join sides under the staged " +
         "pair verifies)")
-    def cachedPlanOf(df: org.apache.spark.sql.DataFrame, columnar: Boolean): String = {
+    def cachedPlanOf(df: DataFrame, columnar: Boolean): String = {
       val staged = Staging.staged(df, "aqe_scope_probe", columnarCache = columnar)
       staged.count()
       // Fresh Dataset: `staged`'s own QueryExecution was memoized before
@@ -77,21 +80,12 @@ class StagingSpec extends SparkSpec {
     // queryExecution.toRdd.getNumPartitions unconditionally — on an
     // exchange-bearing input under AQE that materializes every shuffle
     // stage as real jobs at DECLARATION time and discards the result.
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
     val agg = Tables.documents(spark, sfDir).groupBy("source").count()
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val out = Staging.spread(agg)
-      // Same-object return proves the guard took the no-probe branch.
-      assert(out eq agg, "shuffle-bearing input must pass through spread untouched")
-      Thread.sleep(1000) // listener bus is async; drain before counting
-      assert(jobs.get() == 0, s"spread ran ${jobs.get()} jobs at declaration")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    var out: DataFrame = null
+    val jobs = jobsOf { out = Staging.spread(agg) }
+    // Same-object return proves the guard took the no-probe branch.
+    assert(out eq agg, "shuffle-bearing input must pass through spread untouched")
+    assert(jobs == 0, s"spread ran $jobs jobs at declaration")
     // The leaf-scan call sites keep their conditional round-robin: the
     // sf0.001 documents scan plans 1 partition against 4 shuffle
     // partitions, so the probe fires and spreads.
@@ -101,28 +95,82 @@ class StagingSpec extends SparkSpec {
       s"leaf-scan spread must still round-robin a narrow scan:\n$scanPlan")
   }
 
-  test("sortedSpread: projected output keeps global key order, one exchange, no persist") {
-    import org.apache.spark.sql.functions._
-    val docs = Tables.documents(spark, sfDir)
-    val projected = Staging.sortedSpread(docs, "doc_id")
-      .select(col("doc_id"), length(col("text")).as("n"))
-    // Plan BEFORE execution (the AQE final rendering hides exchange
-    // bodies behind query stages): exactly one exchange — the range
-    // shuffle doubles as the parallelism spread — and nothing persisted.
-    val plan = projected.queryExecution.executedPlan.toString
+  // `sorted` must return exactly project(input).orderBy(keys) on every
+  // branch; the branches differ only in where the sort sits.
+  private def project(df: DataFrame): DataFrame =
+    df.select(col("doc_id"), length(col("text")).as("n"))
+
+  private def assertSortedRows(out: DataFrame, input: DataFrame): Unit =
+    assert(out.collect().toSeq == project(input).orderBy("doc_id").collect().toSeq,
+      "sorted must equal project + global orderBy, row for row")
+
+  // Plan BEFORE execution (the AQE final rendering hides exchange bodies
+  // behind query stages): exactly one exchange — the range shuffle
+  // doubles as the parallelism spread — nothing persisted, and the
+  // projection ABOVE the within-partition sort (the sampler double-runs
+  // only the subtree below the exchange).
+  private def assertRangeSortFirst(out: DataFrame): Unit = {
+    val plan = out.queryExecution.executedPlan.toString
     assert("Exchange".r.findAllIn(plan).length == 1,
-      s"sortedSpread must plan exactly one (range) exchange:\n$plan")
+      s"range-sort-first must plan exactly one (range) exchange:\n$plan")
     assert(plan.contains("rangepartitioning"), s"expected a range exchange:\n$plan")
-    assert(!plan.contains("InMemoryTableScan"), s"sortedSpread must not persist:\n$plan")
-    // The projection must sit ABOVE the sort (that is the whole point:
-    // the sampler double-runs only the subtree BELOW the exchange).
+    assert(!plan.contains("InMemoryTableScan"), s"range-sort-first must not persist:\n$plan")
     val sortIdx = plan.indexOf("Sort ")
     val projIdx = plan.indexOf("Project ")
     assert(projIdx >= 0 && sortIdx > projIdx,
       s"projection must stay above the within-partition sort:\n$plan")
-    val viaSort = docs.select(col("doc_id"), length(col("text")).as("n")).orderBy("doc_id")
-    assert(projected.collect().toSeq == viaSort.collect().toSeq,
-      "sortedSpread + projection must equal project + global orderBy, row for row")
+  }
+
+  /** Runs `f` with the documents scan split into many planned partitions. */
+  private def withWideScan[T](f: => T): T = {
+    val key = "spark.sql.files.maxPartitionBytes"
+    spark.conf.set(key, "4096")
+    try f finally spark.conf.unset(key)
+  }
+
+  test("sorted, range-sort first: narrow scan keeps key order, one exchange, no persist") {
+    val docs = Tables.documents(spark, sfDir)
+    val out = Staging.sorted(docs, "narrow_probe", "doc_id")(project)
+    assertRangeSortFirst(out)
+    assertSortedRows(out, docs)
+  }
+
+  test("sorted, corpus-scale output: range-sorts first even on a wide leaf scan") {
+    withWideScan {
+      val docs = Tables.documents(spark, sfDir)
+      assert(docs.queryExecution.toRdd.getNumPartitions * 4 > spark.conf.get("spark.sql.shuffle.partitions").toInt,
+        "the spec's small maxPartitionBytes must make the scan wide")
+      val out = Staging.sorted(docs, Staging.CorpusScale, "doc_id")(project)
+      assertRangeSortFirst(out)
+      assertSortedRows(out, docs)
+    }
+  }
+
+  test("sorted, stage then sort: wide leaf scan is projected, staged and sorted") {
+    spark.catalog.clearCache()
+    try withWideScan {
+      val docs = Tables.documents(spark, sfDir)
+      val out = Staging.sorted(docs, "wide_probe", "doc_id")(project)
+      val plan = out.queryExecution.executedPlan.toString
+      val (rangeIdx, cacheIdx) = (plan.indexOf("rangepartitioning"), plan.indexOf("InMemoryTableScan"))
+      assert(cacheIdx >= 0, s"a wide scan's output must be staged:\n$plan")
+      assert(rangeIdx >= 0 && rangeIdx < cacheIdx, s"the range sort must sit above the staged frame:\n$plan")
+      assertSortedRows(out, docs)
+    } finally spark.catalog.clearCache()
+  }
+
+  test("sorted, stage then sort: a non-leaf input is staged with zero jobs at declaration") {
+    spark.catalog.clearCache()
+    try {
+      val agg = Tables.documents(spark, sfDir).groupBy("source").count()
+      var out: DataFrame = null
+      val jobs = jobsOf { out = Staging.sorted(agg, "agg_probe", "source")() }
+      assert(jobs == 0, s"sorted ran $jobs jobs declaring a non-leaf input")
+      val plan = deepPlan(out)
+      assert(plan.contains("InMemoryTableScan"), s"a non-leaf input must be staged:\n$plan")
+      assert(out.collect().toSeq == agg.orderBy("source").collect().toSeq,
+        "sorted must equal a global orderBy, row for row")
+    } finally spark.catalog.clearCache()
   }
 
   test("scratch conf takes precedence per-session and unsetting restores persist mode") {
