@@ -49,12 +49,13 @@ object Clusters {
     * the distributed loop's per-round fixed job overhead dwarfs the
     * actual propagation work: a graph under the edge cap is solved as
     * one driver union-find (min-root union = min-label by induction)
-    * and one broadcast join, replacing ~8-12 scheduled jobs with two.
-    * Above the cap — the 100 TB corpus build, or a delta batch whose
-    * touched-component graph outgrows the gate — the hash-min +
-    * pointer-jumping loop runs unchanged. The edge frame is staged
-    * first so the gate's fetch never re-runs the (expensive) pair mine
-    * that produced it, and BOTH paths read the same staged frame.
+    * and one broadcast join, replacing ~8-12 scheduled jobs with one
+    * bounded fetch. Above the cap — the 100 TB corpus build, or a delta
+    * batch whose touched-component graph outgrows the gate — the
+    * hash-min + pointer-jumping loop runs unchanged. The edge frame is
+    * staged first so the gate's fetch never re-runs the (expensive)
+    * pair mine that produced it, and BOTH paths read the same staged
+    * frame.
     */
   private[graft] def connectedComponentsAdaptive(
       vertices: DataFrame, pairs: DataFrame,
@@ -115,14 +116,14 @@ object Clusters {
           parent.keys.toSeq.filterNot(presentEndpoints)
             .map(id => (id, find(id))).toDF("id", "label")
         }
-      val out = graft.Staging.staged(
+      // No eager count: this path holds no checkpoint to release, so the
+      // staged labels are built by their first consumer.
+      graft.Staging.staged(
         vertices
           .join(broadcast(labelDf), Seq("id"), "left")
           .select(col("id"), coalesce(col("label"), col("id")).as("label"))
           .unionByName(extra),
         "cc_labels")
-      out.count()
-      out
     } else connectedComponents(vertices, edges)
   }
 

@@ -738,43 +738,38 @@ object Dedup {
     * ParquetSink's partition list.
     */
   def decontaminateBloom(spark: SparkSession, dir: String): DataFrame =
-    graft.sources.Artifacts.rootDir(spark) match {
-      case Some(_) =>
-        // Deployment shape: the eval index is lake-resident (published
-        // once from the static benchmark set); only the corpus side is
-        // shingled here.
-        val docs = Tables.documents(spark, dir)
-        val (bloom, evalSh) = evalDecontamIndexPublished(spark, dir)
-        val isEval = pmod(col("doc_id"), lit(20)) === 0
-        val corpusSh = shingles(docs.filter(!isEval), DecontamN)
-          .select(col("doc_id"), xxhash64(col("sg")).as("sg"))
-        bloomConfirm(docs.filter(!isEval), corpusSh, bloom, evalSh)
-      case None => decontaminateBloomOf(Tables.documents(spark, dir))
-    }
+    // Deployment shape: the eval index is lake-resident (published once
+    // from the static benchmark set, or computed in place without a
+    // root); only the corpus side is shingled here.
+    bloomDecontam(Tables.documents(spark, dir), evalDecontamIndexPublished(spark, dir))
 
-  private[graft] def decontaminateBloomOf(docs: DataFrame): DataFrame = {
-    val isEval = pmod(col("doc_id"), lit(20)) === 0
-    val sh = staged(
-      shingles(docs, DecontamN).select(col("doc_id"), xxhash64(col("sg")).as("sg")),
-      "decontam_sh")
-    val evalSh = sh.filter(isEval).select("sg").distinct()
-    val bloom = evalSh
+  /** The same over an arbitrary documents frame, its eval slice indexed
+    * in place by `evalDecontamIndex`.
+    */
+  private[graft] def decontaminateBloomOf(docs: DataFrame): DataFrame =
+    bloomDecontam(docs, evalDecontamIndex(docs.filter(pmod(col("doc_id"), lit(20)) === 0)))
+
+  /** The eval set's bloom sketch: one bounded aggregate over the
+    * distinct eval shingles, fetched to the driver. An empty eval set
+    * aggregates to a NULL sketch (see `bloomDecontam`).
+    */
+  private def bloomOf(evalSh: DataFrame): Array[Byte] =
+    evalSh
       .agg(call_function("graft_bloom_agg", col("sg"), lit(BloomCapacity)).as("bloom"))
       .head()
       .getAs[Array[Byte]]("bloom")
-    bloomConfirm(docs.filter(!isEval), sh.filter(!isEval), bloom, evalSh)
-  }
 
-  /** Shared bloom-prune + exact-confirm tail: scan-side might-contain
-    * prunes the corpus shingles, the equi-join against the eval
-    * shingles removes false positives, and every non-eval doc gets a
-    * verdict. `nonEvalDocs` must already exclude the eval slice.
+  /** Shared bloom-prune + exact-confirm over the non-eval docs, given
+    * the eval index (bloom, distinct eval shingles): scan-side
+    * might-contain prunes the corpus shingles, the equi-join against
+    * the eval shingles removes false positives, and every non-eval doc
+    * gets a verdict.
     */
-  private def bloomConfirm(
-      nonEvalDocs: DataFrame,
-      corpusSh: DataFrame,
-      bloom: Array[Byte],
-      evalSh: DataFrame): DataFrame = {
+  private def bloomDecontam(docs: DataFrame, evalIndex: (Array[Byte], DataFrame)): DataFrame = {
+    val (bloom, evalSh) = evalIndex
+    val isEval = pmod(col("doc_id"), lit(20)) === 0
+    val corpusSh = shingles(docs.filter(!isEval), DecontamN)
+      .select(col("doc_id"), xxhash64(col("sg")).as("sg"))
     // An empty eval set aggregates to a NULL sketch: nothing can be
     // contaminated, so the candidate set is empty by definition.
     val candidates =
@@ -784,7 +779,7 @@ object Dedup {
       .join(evalSh, "sg")
       .groupBy("doc_id")
       .agg(count(lit(1)).as("n_overlap"))
-    nonEvalDocs
+    docs.filter(!isEval)
       .select("doc_id")
       .join(hits, Seq("doc_id"), "left")
       .select(
@@ -804,11 +799,7 @@ object Dedup {
   private[graft] def evalDecontamIndex(evalDocs: DataFrame): (Array[Byte], DataFrame) = {
     val evalSh = shingles(evalDocs, DecontamN)
       .select(xxhash64(col("sg")).as("sg")).distinct()
-    val bloom = evalSh
-      .agg(call_function("graft_bloom_agg", col("sg"), lit(BloomCapacity)).as("bloom"))
-      .head()
-      .getAs[Array[Byte]]("bloom")
-    (bloom, evalSh)
+    (bloomOf(evalSh), evalSh)
   }
 
   /** Version tag for the published eval index (bump on any change to
@@ -836,11 +827,7 @@ object Dedup {
         Tables.documents(spark, dir).filter(pmod(col("doc_id"), lit(20)) === 0),
         DecontamN)
         .select(xxhash64(col("sg")).as("sg")).distinct())
-    val bloom = evalSh
-      .agg(call_function("graft_bloom_agg", col("sg"), lit(BloomCapacity)).as("bloom"))
-      .head()
-      .getAs[Array[Byte]]("bloom")
-    (bloom, evalSh)
+    (bloomOf(evalSh), evalSh)
   }
 
   /** Ingest-time decontamination gate: drop documents sharing an 8-gram
@@ -931,6 +918,7 @@ object Dedup {
     // point-probe argument `substrSearch` already documents). The
     // prefix stays staged either way: its consumers self-join or
     // filter it twice per query.
+    // Root check kept: a parquet read is not cached, a computed table is.
     val published = graft.sources.Artifacts.rootDir(spark).nonEmpty
     val shRaw = publishedShingleIndex(spark, dir)
     val sh = if (published) shRaw else staged(shRaw, "shingle_standing")

@@ -380,21 +380,22 @@ object TextFunctions {
     * dedup) maps xxhash64(3-gram) → doc_id, so the phrase hash prunes
     * to candidate docs WITHOUT a corpus scan, and only candidates pay
     * the exact position count (the index stores per-doc distinct
-    * shingles — membership, not positions). Inline mode computes the
-    * same shape scan-side, keeping Verify self-contained.
+    * shingles — membership, not positions). Without an artifacts root
+    * `publishedShingleIndex` computes the index frame in place and the
+    * same probe runs over it, keeping Verify self-contained.
     *
     * Exactness: the hash prune can only over-admit (collision), never
     * miss; the per-candidate exact trigram count filters n_hits > 0, so
     * collisions cannot forge a hit. Output == the oracle's LIKE scan.
     *
-    * In published mode the candidate id set (bounded by the phrase's
-    * document frequency — a point-lookup result, not corpus-scale) is
-    * fetched to the driver and pushed into the documents scan as an
-    * `In` filter, so BOTH sides of the confirm are pruned reads: the
-    * index probe dies at row-group stats on sg, the corpus read dies
-    * at row-group stats on doc_id. A pathological phrase with more
-    * than `ProbeIdPushdownCap` candidate docs falls back to the
-    * distributed join (same rows, corpus scan pays).
+    * The candidate id set (bounded by the phrase's document frequency
+    * — a point-lookup result, not corpus-scale) is fetched to the
+    * driver and pushed into the documents scan as an `In` filter, so
+    * BOTH sides of the confirm are pruned reads: the index probe dies
+    * at row-group stats on sg, the corpus read dies at row-group stats
+    * on doc_id. A pathological phrase with more than
+    * `ProbeIdPushdownCap` candidate docs falls back to the distributed
+    * join (same rows, corpus scan pays).
     */
   val ProbeIdPushdownCap = 10000
 
@@ -409,47 +410,38 @@ object TextFunctions {
         Seq(org.apache.spark.sql.catalyst.expressions.Literal.create(
           SearchPhrase, org.apache.spark.sql.types.StringType)), 42L)
       .eval(null).asInstanceOf[Long]
-    val published = graft.sources.Artifacts.rootDir(spark).isDefined
-    if (published) {
-      // Direct probe of the published (sg-sorted) index — NOT
-      // `standingIndex`, whose staging would materialize the whole
-      // index into cache before the filter could prune. The equality
-      // predicate pushes into the parquet scan and the sorted layout's
-      // row-group stats skip everything else. No distinct: the index
-      // stores per-doc DISTINCT shingles, so each candidate doc
-      // appears exactly once — the probe-collect is one shuffle-free
-      // stage (bounded-by-contract driver fetch: df(phrase), capped).
-      val probe = graft.dedup.Dedup.publishedShingleIndex(spark, dir)
-        .filter(col("sg") === phraseHash)
-        .select("doc_id")
-      // Count-gate BEFORE the collect: df(phrase) is usually tiny (a
-      // point lookup), but a boilerplate phrase ("all rights reserved")
-      // in a web corpus can have an unbounded posting list, and
-      // collecting it first would be a multi-hundred-MB driver fetch
-      // with the cap only consulted afterwards. The count is the same
-      // pruned one-stage scan (deliberately NOT limit(cap+1):
-      // CollectLimit on a selective filter schedules incremental
-      // partition rounds — 1→4→16→all, sequential — to prove the limit
-      // can't be met; count runs one parallel wave). Only a ≤cap id set
-      // (8 bytes × df) ever reaches the driver; above the cap the
-      // confirm goes straight to the distributed join.
-      val df = probe.count()
-      val confirmSide =
-        if (df <= ProbeIdPushdownCap) {
-          val ids = probe.collect().map(_.getLong(0)).distinct
-          docs.filter(col("doc_id").isInCollection(ids.toSeq))
-        } else docs.join(probe.distinct(), "doc_id")
-      confirmCount(confirmSide)
-    } else {
-      val candidates = graft.dedup.Dedup.shingles(docs)
-        .select(col("doc_id"), xxhash64(col("sg")).as("sg"))
-        .filter(col("sg") === phraseHash)
-        .select("doc_id").distinct()
-      confirmCount(docs.join(candidates, "doc_id"))
-    }
+    // Direct probe of the published (sg-sorted) index — NOT
+    // `standingIndex`, whose staging would materialize the whole
+    // index into cache before the filter could prune. The equality
+    // predicate pushes into the parquet scan and the sorted layout's
+    // row-group stats skip everything else. No distinct: the index
+    // stores per-doc DISTINCT shingles, so each candidate doc
+    // appears exactly once — the probe-collect is one shuffle-free
+    // stage (bounded-by-contract driver fetch: df(phrase), capped).
+    val probe = graft.dedup.Dedup.publishedShingleIndex(spark, dir)
+      .filter(col("sg") === phraseHash)
+      .select("doc_id")
+    // Count-gate BEFORE the collect: df(phrase) is usually tiny (a
+    // point lookup), but a boilerplate phrase ("all rights reserved")
+    // in a web corpus can have an unbounded posting list, and
+    // collecting it first would be a multi-hundred-MB driver fetch
+    // with the cap only consulted afterwards. The count is the same
+    // pruned one-stage scan (deliberately NOT limit(cap+1):
+    // CollectLimit on a selective filter schedules incremental
+    // partition rounds — 1→4→16→all, sequential — to prove the limit
+    // can't be met; count runs one parallel wave). Only a ≤cap id set
+    // (8 bytes × df) ever reaches the driver; above the cap the
+    // confirm goes straight to the distributed join.
+    val df = probe.count()
+    val confirmSide =
+      if (df <= ProbeIdPushdownCap) {
+        val ids = probe.collect().map(_.getLong(0)).distinct
+        docs.filter(col("doc_id").isInCollection(ids.toSeq))
+      } else docs.join(probe.distinct(), "doc_id")
+    confirmCount(confirmSide)
   }
 
-  /** Exact per-candidate phrase count (shared by both probe modes). */
+  /** Exact per-candidate phrase count over the pruned confirm side. */
   private def confirmCount(confirmSide: DataFrame): DataFrame =
     confirmSide
       .select(col("doc_id"), col("source"), split(col("text"), " ").as("tk"))

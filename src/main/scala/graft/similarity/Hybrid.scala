@@ -29,7 +29,7 @@ import org.apache.spark.sql.expressions.Window
   * - INDEX-BACKED (artifacts root configured — the production shape a
   *   standing retrieval stack runs): the BM25 list reads the published
   *   lexical inverted index (postings/terms/doclens/totals — built
-  *   once per corpus snapshot, see [[lexIndexFor]]) instead of
+  *   once per corpus snapshot, see [[LexIndex.lexIndexFor]]) instead of
   *   re-tokenizing the corpus per query, and the semantic list probes
   *   the published IVF coarse index (`IvfAnn.coarseFor` — trained
   *   once, centroids + assignments lake-resident) instead of scanning
@@ -59,17 +59,6 @@ object Hybrid {
   /** RRF smoothing constant (Cormack et al.'s k = 60). */
   val RrfK = 60
 
-  /** The standing lexical inverted index: postings (tok, doc_id, tf),
-    * term stats (tok, df, ttf), doc lengths (doc_id, dl), and
-    * collection totals (n_docs, t_tok) — the Lucene-shaped quartet
-    * every BM25 query needs. Build + publication live in [[LexIndex]]
-    * since r17 (the index gained incremental maintenance `lexDelta`
-    * and the `lexStats` health report, so it is its own component, not
-    * a hybrid-retrieval internal).
-    */
-  def lexIndexFor(spark: SparkSession, dir: String): (DataFrame, DataFrame, DataFrame, DataFrame) =
-    LexIndex.lexIndexFor(spark, dir)
-
   /** q_hybrid_search: doc_id, lex_rank, sem_rank (−1 = absent from that
     * list), rrf — fused candidates ordered by fused score. Dispatches
     * on the artifacts root: inline (oracle authority) vs index-backed
@@ -88,8 +77,9 @@ object Hybrid {
         Seq("doc_id"), "left_semi")
       .agg(max(struct(col("n_chars"), (-col("doc_id")).as("neg_id"))).as("m"))
       .select((-col("m.neg_id")).as("q_doc"))
-    val (post, terms, dls, totals) = lexIndexFor(spark, dir)
+    val (post, terms, dls, totals) = LexIndex.lexIndexFor(spark, dir)
     val lex = lexTopN(qdoc, post, terms, dls, totals)
+    // Root check kept: the exact scan and the IVF probe are different algorithms.
     val sem = graft.sources.Artifacts.rootDir(spark) match {
       case None    => semTopNExact(spark, dir, qdoc)
       case Some(_) => semTopNIndexed(spark, dir, qdoc)

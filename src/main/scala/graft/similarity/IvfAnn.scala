@@ -74,8 +74,9 @@ object IvfAnn {
     * a CONSTANT recall knob at scale.
     *
     * 32 (r18, was 16): set from the measured recall-vs-nprobe curve
-    * (`tools.IvfSweep`) across THREE corpus scales — 2k vectors/64
-    * cells, 20k/147, 200k/473:
+    * (micro-recall@k of the IVF top-k against `Knn.bruteTopK`, one
+    * balanced index per corpus, nprobe swept) across THREE corpus
+    * scales — 2k vectors/64 cells, 20k/147, 200k/473:
     *
     * {{{
     * nprobe:        8      16      24      32
@@ -430,8 +431,9 @@ object IvfAnn {
     * SemDeDup, diversity sampling, IVF-PQ's coarse stage) reads the
     * committed parquet instead of re-fitting k-means per query.
     * `q_ann_ivf` deliberately stays inline as the timed build authority
-    * (the q_dedup_jaccard_prefix convention). Without a root everything
-    * computes inline and stays self-contained.
+    * (the q_dedup_jaccard_prefix convention). Without a root
+    * `publishedOrCompute` hands back the computed frames, so the same
+    * join runs over them and the query stays self-contained.
     *
     * The k-means fit is LAZY: with both artifacts already published, no
     * training happens at all — consumers pay one slim (vec_id, cell)
@@ -442,27 +444,19 @@ object IvfAnn {
     */
   private[graft] def coarseFor(spark: SparkSession, dir: String): (DataFrame, CoarseIndex) = {
     val v = stagedUnit(Knn.vectors(spark, dir))
-    graft.sources.Artifacts.rootDir(spark) match {
-      case Some(_) =>
-        lazy val q = balancedQuantizerOf(spark, v) // forced only on artifact miss
-        val deps = Seq(s"$dir/embeddings.parquet")
-        val centroids = graft.sources.Artifacts.publishedOrCompute(
-          spark, "ivf_centroids", IndexArtifactVersion, deps)(
-          q.index.centroids.select("cell", "centroid"))
-        val assignments = graft.sources.Artifacts.publishedOrCompute(
-          spark, "ivf_assignments", IndexArtifactVersion, deps)(
-          q.assign(spark, v).select(col("vec_id"), col("cell")))
-        val idx = CoarseIndex(
-          centroids.withColumn("cnorm2", expr("graft_dot(centroid, centroid)")),
-          centroids.count().toInt)
-        (v.join(assignments, "vec_id")
-          .select(col("vec_id"), col("e"), col("norm"), col("u"), col("cell")), idx)
-      case None =>
-        val q = balancedQuantizerOf(spark, v)
-        (q.assign(spark, v)
-          .select(col("vec_id"), col("e"), col("norm"), col("u"), col("cell")),
-          q.index)
-    }
+    lazy val q = balancedQuantizerOf(spark, v) // forced only when a frame is computed
+    val deps = Seq(s"$dir/embeddings.parquet")
+    val centroids = graft.sources.Artifacts.publishedOrCompute(
+      spark, "ivf_centroids", IndexArtifactVersion, deps)(
+      q.index.centroids.select("cell", "centroid"))
+    val assignments = graft.sources.Artifacts.publishedOrCompute(
+      spark, "ivf_assignments", IndexArtifactVersion, deps)(
+      q.assign(spark, v).select(col("vec_id"), col("cell")))
+    val idx = CoarseIndex(
+      centroids.withColumn("cnorm2", expr("graft_dot(centroid, centroid)")),
+      centroids.count().toInt)
+    (v.join(assignments, "vec_id")
+      .select(col("vec_id"), col("e"), col("norm"), col("u"), col("cell")), idx)
   }
 
   /** Probed (query, cell) pairs for a query-side frame: rank every
@@ -479,22 +473,13 @@ object IvfAnn {
     * the same frame; extra query-side columns pass through untouched.
     */
   private[graft] def probeCells(
-      spark: SparkSession, queries: DataFrame, index: CoarseIndex): DataFrame =
-    probeCells(spark, queries, index, numProbesFor(index.k))
-
-  /** Explicit-nprobe overload — the recall/cost sweep (`tools.IvfSweep`)
-    * drives this directly; production paths derive nprobe from the cell
-    * count via `numProbesFor`.
-    */
-  private[graft] def probeCells(
-      spark: SparkSession, queries: DataFrame, index: CoarseIndex,
-      nProbes: Int): DataFrame = {
+      spark: SparkSession, queries: DataFrame, index: CoarseIndex): DataFrame = {
     val wCell = Window.partitionBy("q_id").orderBy(col("score").asc, col("cell").asc)
     queries
       .crossJoin(broadcast(index.centroids))
       .withColumn("score", col("cnorm2") - lit(2d) * expr("graft_dot(u, centroid)"))
       .withColumn("crn", row_number().over(wCell))
-      .filter(col("crn") <= nProbes)
+      .filter(col("crn") <= numProbesFor(index.k))
       .drop("centroid", "cnorm2", "score", "crn")
   }
 
@@ -682,44 +667,41 @@ object IvfAnn {
     * all-or-nothing before shipping such a change.
     */
   private[graft] def settledQuantizerFor(
-      spark: SparkSession, settled: => DataFrame, deps: Seq[String]): Quantizer =
-    graft.sources.Artifacts.rootDir(spark) match {
-      case None => balancedQuantizerOf(spark, settled)
-      case Some(_) =>
-        import spark.implicits._
-        lazy val q = balancedQuantizerOf(spark, settled) // forced only on artifact miss
-        def pub(name: String)(frame: => DataFrame): DataFrame =
-          graft.sources.Artifacts.publishedOrCompute(
-            spark, name, SettledIndexVersion, deps)(frame)
-        val baseDf = pub("ivf_settled_base")(
-          q.baseCents.zipWithIndex.toSeq
-            .map { case (c, i) => (i.toLong, c.toSeq) }
-            .toDF("idx", "centroid"))
-        val planesDf = pub("ivf_settled_planes")(
-          q.rounds.zipWithIndex.flatMap { case (ps, r) =>
-            ps.map(p =>
-              (r.toLong, p.cell.toLong, p.w.toSeq, p.b, p.left.toLong, p.right.toLong))
-          }.toDF("round", "cell", "w", "b", "lcell", "rcell"))
-        val remapDf = pub("ivf_settled_remap")(
-          q.remap.toSeq.map { case (c, l) => (c.toLong, l.toLong) }.toDF("cell", "leaf"))
-        val centsDf = pub("ivf_settled_centroids")(q.index.centroids.select("cell", "centroid"))
-        def vecOf(a: Any): Array[Double] =
-          a.asInstanceOf[scala.collection.Seq[Any]]
-            .map(_.asInstanceOf[Number].doubleValue).toArray
-        val baseCents = baseDf.orderBy("idx").collect().map(r => vecOf(r.get(1)))
-        val rounds = planesDf.collect()
-          .map(r => (r.getLong(0).toInt, SplitPlane(
-            r.getLong(1).toInt, vecOf(r.get(2)), r.getDouble(3),
-            r.getLong(4).toInt, r.getLong(5).toInt)))
-          .groupBy(_._1).toSeq.sortBy(_._1)
-          .map { case (_, ps) => ps.map(_._2).toSeq }
-        val remap = remapDf.collect()
-          .map(r => r.getLong(0).toInt -> r.getLong(1).toInt).toMap
-        Quantizer(baseCents, rounds, remap,
-          CoarseIndex(
-            centsDf.withColumn("cnorm2", expr("graft_dot(centroid, centroid)")),
-            remap.size))
-    }
+      spark: SparkSession, settled: => DataFrame, deps: Seq[String]): Quantizer = {
+    import spark.implicits._
+    lazy val q = balancedQuantizerOf(spark, settled) // forced only when a frame is computed
+    def pub(name: String)(frame: => DataFrame): DataFrame =
+      graft.sources.Artifacts.publishedOrCompute(
+        spark, name, SettledIndexVersion, deps)(frame)
+    val baseDf = pub("ivf_settled_base")(
+      q.baseCents.zipWithIndex.toSeq
+        .map { case (c, i) => (i.toLong, c.toSeq) }
+        .toDF("idx", "centroid"))
+    val planesDf = pub("ivf_settled_planes")(
+      q.rounds.zipWithIndex.flatMap { case (ps, r) =>
+        ps.map(p =>
+          (r.toLong, p.cell.toLong, p.w.toSeq, p.b, p.left.toLong, p.right.toLong))
+      }.toDF("round", "cell", "w", "b", "lcell", "rcell"))
+    val remapDf = pub("ivf_settled_remap")(
+      q.remap.toSeq.map { case (c, l) => (c.toLong, l.toLong) }.toDF("cell", "leaf"))
+    val centsDf = pub("ivf_settled_centroids")(q.index.centroids.select("cell", "centroid"))
+    def vecOf(a: Any): Array[Double] =
+      a.asInstanceOf[scala.collection.Seq[Any]]
+        .map(_.asInstanceOf[Number].doubleValue).toArray
+    val baseCents = baseDf.orderBy("idx").collect().map(r => vecOf(r.get(1)))
+    val rounds = planesDf.collect()
+      .map(r => (r.getLong(0).toInt, SplitPlane(
+        r.getLong(1).toInt, vecOf(r.get(2)), r.getDouble(3),
+        r.getLong(4).toInt, r.getLong(5).toInt)))
+      .groupBy(_._1).toSeq.sortBy(_._1)
+      .map { case (_, ps) => ps.map(_._2).toSeq }
+    val remap = remapDf.collect()
+      .map(r => r.getLong(0).toInt -> r.getLong(1).toInt).toMap
+    Quantizer(baseCents, rounds, remap,
+      CoarseIndex(
+        centsDf.withColumn("cnorm2", expr("graft_dot(centroid, centroid)")),
+        remap.size))
+  }
 
   /** q_ivf_delta: merge an ingest batch (vec_id % 10 == 7 — the repo's
     * standing ingest-slice convention) into the standing coarse index
@@ -840,6 +822,7 @@ object IvfAnn {
     }
     val dueIx = row.fieldIndex("refit_due")
     val due = !row.isNullAt(dueIx) && row.getBoolean(dueIx)
+    // Root check kept: without a root there is no published index to refresh.
     if (due && graft.sources.Artifacts.rootDir(spark).isDefined) {
       // The scheduled refit: force the whole-corpus index build through
       // the artifact layer. coarseFor trains (on a miss) the balanced

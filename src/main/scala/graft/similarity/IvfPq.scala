@@ -72,21 +72,6 @@ object IvfPq {
     */
   val PqLloydIters = 10
 
-  /** Shared build: the coarse IVF index plus m per-subspace codebooks
-    * (codebook j covers u[j·dsub, (j+1)·dsub), as kPq × dsub centroid
-    * arrays).
-    */
-  private[graft] def indexOf(
-      spark: org.apache.spark.sql.SparkSession,
-      vectors: DataFrame): (DataFrame, IvfAnn.Quantizer, Array[Array[Array[Double]]], Int) = {
-    val (v, coarse) = IvfAnn.indexOf(spark, vectors)
-    val d = v.select(size(col("u"))).head().getInt(0)
-    val m = subspacesFor(d)
-    val dsub = d / m
-    val kPq = numCodesFor(v.count())
-    (v, coarse, fitCodebooks(v, kPq, m, dsub), dsub)
-  }
-
   /** Train the m per-subspace codebooks on a hash-ordered capped sample
     * of any frame carrying a unit-vector column `u` — ONE driver
     * collect shared by all m fits (each fit slices its subspace out of
@@ -106,85 +91,45 @@ object IvfPq {
     }
   }
 
-  /** The m per-subspace code columns: each is one scan-local
-    * `graft_argmin_cell` over the sliced unit vector (the codebook
-    * rides along as a bounded flat literal object — m·kPq·dsub doubles
-    * ≤ 128 KB total by the one-byte-code contract).
-    */
-  private def withCodeCols(v: DataFrame, codebooks: Array[Array[Array[Double]]], dsub: Int): DataFrame =
-    codebooks.zipWithIndex.foldLeft(v) { case (df, (cb, j)) =>
-      df.withColumn(s"code$j",
-        call_function("graft_argmin_cell",
-          expr(s"slice(u, ${j * dsub + 1}, $dsub)"), typedLit(cb.flatten), lit(cb.length)))
-    }
-
-  /** Corpus PQ codes alone: (vec_id, codes) via the m scan-local
-    * argmin expressions — no coarse assignment involved (codes depend
-    * only on the subspace codebooks).
+  /** Corpus PQ codes: (vec_id, codes) with codes an m-length array of
+    * ints in [0, k_pq) — the 8-byte searchable representation. Each
+    * code is one scan-local `graft_argmin_cell` over the sliced unit
+    * vector (the codebook rides along as a bounded flat literal object
+    * — m·kPq·dsub doubles ≤ 128 KB total by the one-byte-code
+    * contract); no coarse assignment involved, no shuffle.
     */
   private[graft] def encodeCodes(
-      v: DataFrame, codebooks: Array[Array[Array[Double]]], dsub: Int): DataFrame = {
-    val m = codebooks.length
-    withCodeCols(v, codebooks, dsub)
-      .select(col("vec_id"), array((0 until m).map(j => col(s"code$j")): _*).as("codes"))
-  }
-
-  /** Corpus encoding: (vec_id, e, norm, cell, codes) with codes an
-    * m-length array of ints in [0, k_pq) — the 8-byte searchable
-    * representation. m+1 scan-local argmin expressions, no extra
-    * shuffle.
-    */
-  private[graft] def encodedOf(
-      spark: org.apache.spark.sql.SparkSession,
-      v: DataFrame, coarse: IvfAnn.Quantizer,
-      codebooks: Array[Array[Array[Double]]], dsub: Int): DataFrame = {
-    val m = codebooks.length
-    withCodeCols(coarse.assign(spark, v), codebooks, dsub)
-      .select(
-        col("vec_id"), col("e"), col("norm"), col("cell"),
-        array((0 until m).map(j => col(s"code$j")): _*).as("codes"))
-  }
+      v: DataFrame, codebooks: Array[Array[Array[Double]]], dsub: Int): DataFrame =
+    v.select(col("vec_id"), array(codebooks.zipWithIndex.map { case (cb, j) =>
+      call_function("graft_argmin_cell",
+        expr(s"slice(u, ${j * dsub + 1}, $dsub)"), typedLit(cb.flatten), lit(cb.length))
+    }.toIndexedSeq: _*).as("codes"))
 
   /** Version tag for the published PQ artifacts (codebook + codes). */
   val PqArtifactVersion = "ivfpq-msub-kpq-sqrtn-hashinit-v3"
 
-  /** Top-k approximate neighbors, ADC-selected and exactly reranked —
-    * same query set and output shape as `Knn.bruteTopK` / `IvfAnn
-    * .ivfTopK`, so recall is directly comparable across the family.
+  /** The PQ index through the Artifacts contract: the coarse
+    * centroids + assignments from `IvfAnn.coarseFor`, and the PQ
+    * codebook + corpus codes (`pq_codebook` rows (subspace, code,
+    * centroid); `pq_codes` rows (vec_id, codes)). With an artifacts
+    * root the ENTIRE index is lake-resident: a later query session fits
+    * NOTHING and encodes NOTHING — it reads four small-to-slim parquet
+    * tables and goes straight to probing, which is precisely how a
+    * production vector index deploys. Without a root the same frames
+    * are computed in place.
     *
-    * With an artifacts root, the ENTIRE index is lake-resident: the
-    * coarse centroids + assignments come from `IvfAnn.coarseFor`, and
-    * the PQ codebook + corpus codes are published once (`pq_codebook`
-    * rows (subspace, code, centroid); `pq_codes` rows (vec_id, codes)).
-    * A later query session fits NOTHING and encodes NOTHING — it reads
-    * four small-to-slim parquet tables and goes straight to probing,
-    * which is precisely how a production vector index deploys. Inline
-    * without a root (the timed build stays self-contained).
+    * Returns (assigned, coarse index, codebook, codes, m, dsub).
     */
-  def ivfPqTopK(spark: SparkSession, dir: String): DataFrame =
-    graft.sources.Artifacts.rootDir(spark) match {
-      case Some(_) => ivfPqTopKPublished(spark, dir)
-      case None    => ivfPqTopKInline(spark, dir)
-    }
-
-  private def ivfPqTopKInline(spark: SparkSession, dir: String): DataFrame = {
-    val (v, coarse, codebooks, dsub) = indexOf(spark, Knn.vectors(spark, dir))
-    val m = codebooks.length
-    val kPq = codebooks.head.length
-    val encoded = encodedOf(spark, v, coarse, codebooks, dsub)
-    val flatCb: Array[Double] = codebooks.flatten.flatten
-    adcQuery(spark, v, encoded, coarse.index, flatCb, m, kPq, dsub)
-  }
-
-  private def ivfPqTopKPublished(spark: SparkSession, dir: String): DataFrame = {
+  private def pqIndexFor(spark: SparkSession, dir: String)
+      : (DataFrame, IvfAnn.CoarseIndex, DataFrame, DataFrame, Int, Int) = {
     import spark.implicits._
     val (assigned, idx) = IvfAnn.coarseFor(spark, dir)
     val d = assigned.select(size(col("u"))).head().getInt(0)
     val m = subspacesFor(d)
     val dsub = d / m
     val deps = Seq(s"$dir/embeddings.parquet")
-    // Codebooks train only on artifact miss; the lazy is shared by both
-    // closures, so a cold publish pays ONE training round.
+    // Codebooks train only when a frame is computed; the lazy is shared
+    // by both closures, so a cold publish pays ONE training round.
     lazy val codebooks = fitCodebooks(assigned, numCodesFor(assigned.count()), m, dsub)
     val codebook = graft.sources.Artifacts.publishedOrCompute(
       spark, "pq_codebook", PqArtifactVersion, deps)(
@@ -194,6 +139,16 @@ object IvfPq {
     val codes = graft.sources.Artifacts.publishedOrCompute(
       spark, "pq_codes", PqArtifactVersion, deps)(
       encodeCodes(assigned, codebooks, dsub))
+    (assigned, idx, codebook, codes, m, dsub)
+  }
+
+  /** Top-k approximate neighbors, ADC-selected and exactly reranked —
+    * same query set and output shape as `Knn.bruteTopK` / `IvfAnn
+    * .ivfTopK`, so recall is directly comparable across the family.
+    * The index comes from `pqIndexFor`.
+    */
+  def ivfPqTopK(spark: SparkSession, dir: String): DataFrame = {
+    val (assigned, idx, codebook, codes, m, dsub) = pqIndexFor(spark, dir)
     val kPq = codebook.agg(max("code")).head().getInt(0) + 1
     val flatCb: Array[Double] = codebook.orderBy("subspace", "code")
       .select("centroid").collect().flatMap(_.getSeq[Double](0))
@@ -253,10 +208,9 @@ object IvfPq {
   }
 
   /** Codes frame alone (vec_id, codes), exposed for the storage-contract
-    * and determinism specs — same build as ivfPqTopK by construction.
+    * and determinism specs — the frame ivfPqTopK joins, from the same
+    * `pqIndexFor` build.
     */
-  private[graft] def codes(spark: SparkSession, dir: String): DataFrame = {
-    val (v, coarse, codebooks, dsub) = indexOf(spark, Knn.vectors(spark, dir))
-    encodedOf(spark, v, coarse, codebooks, dsub).select(col("vec_id"), col("codes"))
-  }
+  private[graft] def codes(spark: SparkSession, dir: String): DataFrame =
+    pqIndexFor(spark, dir)._4
 }

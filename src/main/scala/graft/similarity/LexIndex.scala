@@ -54,30 +54,27 @@ object LexIndex {
     tf.groupBy("doc_id").agg(sum("tf").as("dl")),
     tf.agg(count_distinct(col("doc_id")).as("n_docs"), sum("tf").as("t_tok")))
 
-  /** The standing index over an arbitrary documents frame, published
-    * under `prefix`-named artifacts when a root is configured (one
-    * staged tokenize feeds all four publishes on a miss), derived
-    * inline otherwise. Derived stats are PUBLISHED rather than
+  /** The standing index over an arbitrary documents frame, through
+    * `prefix`-named artifacts: published when a root is configured,
+    * computed in place otherwise — either way one staged tokenize
+    * feeds all four frames. Derived stats are PUBLISHED rather than
     * recomputed per query: re-deriving df from postings is a full
     * index shuffle at 100 TB, which is exactly what a standing term
     * dictionary exists to avoid.
     */
   private[graft] def lexIndexOf(
       spark: SparkSession, docs: => DataFrame, deps: Seq[String],
-      prefix: String): (DataFrame, DataFrame, DataFrame, DataFrame) =
-    graft.sources.Artifacts.rootDir(spark) match {
-      case None => derive(graft.Staging.staged(tokenizedTf(docs), s"${prefix}_tf"))
-      case Some(_) =>
-        // Lazy: forced only on artifact miss, and then only one
-        // tokenize feeds all four publishes.
-        lazy val tf = graft.Staging.staged(tokenizedTf(docs), s"${prefix}_publish_tf")
-        lazy val derived = derive(tf)
-        def pub(name: String, frame: => DataFrame): DataFrame =
-          graft.sources.Artifacts.publishedOrCompute(
-            spark, name, LexIndexVersion, deps)(frame)
-        (pub(s"${prefix}_postings", derived._1), pub(s"${prefix}_terms", derived._2),
-          pub(s"${prefix}_doclens", derived._3), pub(s"${prefix}_totals", derived._4))
-    }
+      prefix: String): (DataFrame, DataFrame, DataFrame, DataFrame) = {
+    // Lazy: forced only when a frame is computed (an artifact miss, or
+    // no root), and then one tokenize feeds all four frames.
+    lazy val tf = graft.Staging.staged(tokenizedTf(docs), s"${prefix}_publish_tf")
+    lazy val derived = derive(tf)
+    def pub(name: String, frame: => DataFrame): DataFrame =
+      graft.sources.Artifacts.publishedOrCompute(
+        spark, name, LexIndexVersion, deps)(frame)
+    (pub(s"${prefix}_postings", derived._1), pub(s"${prefix}_terms", derived._2),
+      pub(s"${prefix}_doclens", derived._3), pub(s"${prefix}_totals", derived._4))
+  }
 
   /** The whole-corpus standing index (hybrid retrieval's quartet). */
   def lexIndexFor(spark: SparkSession, dir: String): (DataFrame, DataFrame, DataFrame, DataFrame) =
@@ -250,6 +247,7 @@ object LexIndex {
     }
     val dueIx = row.fieldIndex("rerank_due")
     val due = !row.isNullAt(dueIx) && row.getBoolean(dueIx)
+    // Root check kept: without a root there is no published index to refresh.
     if (due && graft.sources.Artifacts.rootDir(spark).isDefined) {
       // The re-rank: force the whole-corpus quartet through the
       // artifact layer — publishedOrCompute materializes eagerly, so

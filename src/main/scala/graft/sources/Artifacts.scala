@@ -21,6 +21,20 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *   naming the artifacts root. Unset → every consumer computes inline
   *   and queries stay self-contained (Verify's correctness gate runs
   *   this way, so correctness never depends on published state).
+  * - ONE SWITCH: `publishedOrCompute` is the only place that chooses
+  *   between reading a stored artifact and computing it. A consumer
+  *   builds the same plan over whichever frame it gets, so the
+  *   no-root oracle run checks the code the benches time with a root.
+  *   Four call sites still read `rootDir`, none of them to pick a read
+  *   or a compute:
+  *   - `Hybrid.hybridSearch`: its semantic list is an exact scan
+  *     without a root and an IVF probe with one — a different
+  *     algorithm by design;
+  *   - `IvfAnn.ivfRefit` and `LexIndex.lexRerank`: a due refresh
+  *     republishes the index, and without a root there is none;
+  *   - `Dedup.standingIndex`: a computed shingle table is staged for
+  *     its two reads, a published one is a parquet read scanned once
+  *     and not cached.
   * - FRESHNESS is structural, not temporal: an artifact directory is
   *   keyed by a fingerprint of its input snapshot (every input file's
   *   path, length, mtime — the lake-less stand-in for a table-format

@@ -223,6 +223,18 @@ class ArtifactsSpec extends SparkSpec {
   }
 
   test("substrSearch probes the published index and stays equal to the inline scan") {
+    // The confirm side pushes the collected candidate ids as an
+    // In(doc_id) filter, so the corpus read prunes (no corpus-scale join
+    // in the plan) — with a root and without one, since both modes run
+    // the same probe code.
+    def assertPrunedConfirm(mode: String): Unit = {
+      val confirmPlan = graft.functions.TextFunctions.substrSearch(spark, sfDir)
+        .queryExecution.executedPlan.toString
+      assert(confirmPlan.contains("PushedFilters: [In(doc_id"),
+        s"$mode: candidate ids not pushed into the corpus scan:\n$confirmPlan")
+      assert(!confirmPlan.contains("SortMergeJoin") && !confirmPlan.contains("BroadcastHashJoin"),
+        s"$mode: confirm should be a pruned scan, not a join")
+    }
     spark.catalog.clearCache()
     val inline = graft.functions.TextFunctions.substrSearch(spark, sfDir)
       .collect().map(_.toSeq).toSeq
@@ -239,9 +251,7 @@ class ArtifactsSpec extends SparkSpec {
       // BOTH halves must be PRUNED reads. The index probe pushes the
       // hash equality into the published (sg-sorted) parquet with no
       // staging cache in between — a cached index would materialize
-      // fully before the filter could prune. The confirm side pushes
-      // the collected candidate ids as an In(doc_id) filter, so the
-      // corpus read prunes too (no corpus-scale join in the plan).
+      // fully before the filter could prune.
       spark.catalog.clearCache()
       val probePlan = graft.dedup.Dedup.publishedShingleIndex(spark, sfDir)
         .filter(org.apache.spark.sql.functions.col("sg") === 42L)
@@ -250,13 +260,10 @@ class ArtifactsSpec extends SparkSpec {
         s"probe predicate not pushed into the index scan:\n$probePlan")
       assert(!probePlan.contains("InMemoryTableScan"),
         "probe routes through a staging cache instead of the pruned parquet read")
-      val confirmPlan = graft.functions.TextFunctions.substrSearch(spark, sfDir)
-        .queryExecution.executedPlan.toString
-      assert(confirmPlan.contains("PushedFilters: [In(doc_id"),
-        s"candidate ids not pushed into the corpus scan:\n$confirmPlan")
-      assert(!confirmPlan.contains("SortMergeJoin") && !confirmPlan.contains("BroadcastHashJoin"),
-        "published-mode confirm should be a pruned scan, not a join")
+      assertPrunedConfirm("published")
     }
+    spark.catalog.clearCache()
+    assertPrunedConfirm("no root")
     spark.catalog.clearCache()
   }
 

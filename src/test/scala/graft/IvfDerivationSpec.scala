@@ -23,8 +23,8 @@ class IvfDerivationSpec extends SparkSpec {
     assert(IvfAnn.numProbesFor(64) == IvfAnn.MaxProbes
         && IvfAnn.numProbesFor(1024) == IvfAnn.MaxProbes
         && IvfAnn.numProbesFor(IvfAnn.MaxCells) == IvfAnn.MaxProbes,
-      "nprobe is a flat CONSTANT (r18, set from the three-scale IvfSweep " +
-        "recall curve — a cells/8 fraction measured recall 0.500 on the " +
+      "nprobe is a flat CONSTANT (r18, set from the three-scale recall " +
+        "curve in MaxProbes' scaladoc — a cells/8 fraction measured recall 0.500 on the " +
         "64-cell sf0.1 index); an unbounded fraction made probed-candidate " +
         "volume n²/8 (caught by the 50k→500k decade)")
   }

@@ -92,7 +92,7 @@ class SimilaritySpec extends SparkSpec {
     val micro = rows.map(_.getLong(3)).sum.toDouble / rows.map(_.getLong(1)).sum
     info(f"IVF micro recall@${graft.similarity.Knn.TopK}: $micro%.3f")
     // r18 floor: the constant-nprobe policy (IvfAnn.MaxProbes = 32, set
-    // from the five-scale IvfSweep curve) measures 0.91–1.00 everywhere
+    // from the recall curve in its scaladoc) measures 0.91–1.00 everywhere
     // (2k/20k/200k-vector corpora and both 500-vector fixtures); 0.8 is
     // the gate with margin — matching the LSH leg's bar.
     assert(micro >= 0.8, s"IVF recall below the r18 floor: $micro")
