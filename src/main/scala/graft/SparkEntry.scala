@@ -1119,11 +1119,14 @@ object SparkEntry {
     // constants extracted from the live Spark helper. See HllOracle.
     "q_distinct_agg_approx" -> graft.operators.HllOracle.sql,
     // Hybrid RRF fusion: BM25's exact-rational int64 scoring (see
-    // q_bm25_search) for the query doc's top-3 terms + bit-identical
-    // cosine ranking (see q_knn_cosine), fused as two IEEE divisions
-    // of exact integers summed in fixed order before round4.
+    // q_bm25_search) for the query doc's top-3 terms + the IVF probe's
+    // cosine list for its vector (the quantizer replay of q_ann_ivf),
+    // fused as two IEEE divisions of exact integers summed in fixed
+    // order before round4.
     "q_hybrid_search" ->
-      raw"""WITH toks AS (
+      raw"""WITH RECURSIVE
+           |${graft.similarity.KMeansOracle.quantCtes.mkString(",\n")},
+           |toks AS (
            |  SELECT doc_id, unnest(string_split_regex(text, '\s+')) AS tok FROM documents
            |), qdoc AS (
            |  SELECT d.doc_id AS q_doc FROM documents d
@@ -1154,20 +1157,7 @@ object SparkEntry {
            |), lex AS (
            |  SELECT doc_id, row_number() OVER (ORDER BY s4 DESC, doc_id) AS lex_rank
            |  FROM (SELECT * FROM lexs ORDER BY s4 DESC, doc_id LIMIT 50)
-           |), vec AS (
-           |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-           |  FROM embeddings
-           |), nv AS (
-           |  SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS nrm FROM vec
-           |), qv AS (
-           |  SELECT nv.* FROM nv JOIN qdoc ON nv.vec_id = qdoc.q_doc
-           |), sems AS (
-           |  SELECT c.vec_id AS doc_id, list_dot_product(qv.v, c.v) / (qv.nrm * c.nrm) AS cos
-           |  FROM nv c, qv WHERE c.vec_id <> qv.vec_id
-           |), sem AS (
-           |  SELECT doc_id, row_number() OVER (ORDER BY cos DESC, doc_id) AS sem_rank
-           |  FROM (SELECT * FROM sems ORDER BY cos DESC, doc_id LIMIT 50)
-           |)
+           |), ${graft.similarity.KMeansOracle.hybridSemCtes}
            |SELECT coalesce(l.doc_id, s.doc_id) AS doc_id,
            |  CAST(coalesce(l.lex_rank, -1) AS BIGINT) AS lex_rank,
            |  CAST(coalesce(s.sem_rank, -1) AS BIGINT) AS sem_rank,

@@ -29,11 +29,11 @@ object Clusters {
     */
   val MaxIterations = 40
 
-  /** Edge-count gate for the driver-local CC fast path (default; the
-    * `spark.graft.cc.driverEdgeCap` conf overrides, and a cap of 0 — or
-    * any non-positive value — NEVER takes the driver path, even on an
-    * empty edge set: that is how the equivalence spec pins both paths
-    * on one graph, and `0 <= 0` must not silently un-force it (r14).
+  /** Edge-count gate for the driver-local CC fast path (the default of
+    * `connectedComponentsAdaptive`'s `edgeCap`). A cap of 0 — or any
+    * non-positive value — NEVER takes the driver path, even on an empty
+    * edge set: that is how the equivalence spec pins both paths on one
+    * graph, and `0 <= 0` must not silently un-force it (r14).
     * 100k edges is ~1.6 MB collected — the same bounded-by-contract
     * collect class as `substrSearch`'s count-gated match fetch: the
     * gate fetches at most cap + 1 rows.
@@ -59,17 +59,16 @@ object Clusters {
     */
   private[graft] def connectedComponentsAdaptive(
       vertices: DataFrame, pairs: DataFrame,
-      verticesCoverEdges: Boolean = false): DataFrame = {
+      verticesCoverEdges: Boolean = false,
+      edgeCap: Long = DriverCcEdgeCapDefault): DataFrame = {
     val spark = vertices.sparkSession
-    val cap = spark.conf.getOption("spark.graft.cc.driverEdgeCap")
-      .map(_.toLong).getOrElse(DriverCcEdgeCapDefault)
     val edges = graft.Staging.staged(pairs.select("a", "b"), "cc_edges_in")
-    // One bounded fetch both decides and collects: more than `cap` rows
-    // means the distributed loop.
+    // One bounded fetch both decides and collects: more than `edgeCap`
+    // rows means the distributed loop.
     val fetched =
-      if (cap > 0) edges.limit(math.min(cap + 1, Int.MaxValue.toLong).toInt).collect()
+      if (edgeCap > 0) edges.limit(math.min(edgeCap + 1, Int.MaxValue.toLong).toInt).collect()
       else Array.empty[org.apache.spark.sql.Row]
-    if (cap > 0 && fetched.length <= cap) {
+    if (edgeCap > 0 && fetched.length <= edgeCap) {
       val es = fetched.map(r => (r.getLong(0), r.getLong(1)))
       val parent = scala.collection.mutable.HashMap.empty[Long, Long]
       def find(x: Long): Long = {

@@ -51,35 +51,6 @@ object Dedup {
       .select("keep_id", "n_copies")
       .orderBy("keep_id")
 
-  /** Exact pairwise Jaccard over the FULL shingle inverted index. Kept
-    * only as the spec-parity reference for the prefix filter: the
-    * candidate join is Σ df² over shingle document-frequencies — one
-    * viral shingle melts a reducer even with AQE skew-splitting, so the
-    * declared queries all route through prefixIndex instead.
-    */
-  private[graft] def jaccardPairs(sh: DataFrame): DataFrame = {
-    val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n"))
-    val inter = sh
-      .toDF("a", "sg")
-      .join(sh.toDF("b", "sg2"), col("sg") === col("sg2") && col("a") < col("b"))
-      .groupBy("a", "b")
-      .agg(count(lit(1)).as("inter"))
-    inter
-      .join(sizes.toDF("a2", "na"), col("a") === col("a2"))
-      .join(sizes.toDF("b2", "nb"), col("b") === col("b2"))
-      .withColumn("jac", col("inter") / (col("na") + col("nb") - col("inter")))
-      .select("a", "b", "jac")
-  }
-
-  /** Naive full-index variant of ngramJaccard — NOT a declared query;
-    * the DedupSpec losslessness test runs it against jaccardPrefix.
-    */
-  private[graft] def ngramJaccardNaive(spark: SparkSession, dir: String): DataFrame =
-    jaccardPairs(shingles(Tables.documents(spark, dir)))
-      .filter(col("jac") >= 0.8)
-      .select(col("a"), col("b"), Num.round4(col("jac")).as("jac"))
-      .orderBy("a", "b")
-
   /** Near-dup pairs with 3-gram Jaccard >= 0.8. Candidate generation
     * delegates to the prefix-filtered index (LOSSLESS — identical rows
     * to the full inverted index, same DuckDB oracle): the full-index
@@ -309,7 +280,7 @@ object Dedup {
     *   `ppjoinCandidates`; the bound must reach ceil(τ·na)).
     * Both only drop pairs provably below τ; the array-intersect verify
     * makes the output exactly the full-index answer (spec-pinned vs
-    * `containmentNaive`).
+    * the test-side `DedupWitnesses.containmentNaive`).
     */
   def containment(spark: SparkSession, dir: String, threshold: Double = 0.8): DataFrame =
     containmentOf(Tables.documents(spark, dir), threshold)
@@ -426,28 +397,6 @@ object Dedup {
         .filter(col("cont") >= threshold)
         .select(col("a"), col("b"), Num.round4(col("cont")).as("cont")),
       "cont_pairs", "a", "b")()
-  }
-
-  /** Full-index containment witness — NOT a declared query; the
-    * spec-parity oracle `containmentOf` must equal on any corpus.
-    */
-  private[graft] def containmentNaive(docs: DataFrame, threshold: Double = 0.8): DataFrame = {
-    val sh = staged(
-      docs
-        .select(col("doc_id"), split(col("text"), " ").as("toks"))
-        .filter(size(col("toks")) >= 3)
-        .select(col("doc_id"), explode(expr(ShingleArraySql)).as("sg")),
-      "cont_naive_sh")
-    val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n"))
-    sh.toDF("a", "sga")
-      .join(sh.toDF("b", "sgb"), col("sga") === col("sgb") && col("a") =!= col("b"))
-      .groupBy("a", "b")
-      .agg(count(lit(1)).as("inter"))
-      .join(sizes.toDF("a2", "na"), col("a") === col("a2"))
-      .withColumn("cont", col("inter") / col("na"))
-      .filter(col("cont") >= threshold)
-      .select(col("a"), col("b"), Num.round4(col("cont")).as("cont"))
-      .orderBy("a", "b")
   }
 
   /** Version tag for the PUBLISHED near-dup pair table: keyed by the
@@ -876,15 +825,17 @@ object Dedup {
     */
   val IndexArtifactVersion = "3gram-xxhash64-prefix-tau0.8-v2"
 
-  /** The published shingle table alone, UNstaged: for single-probe
-    * consumers (`substrSearch`) that want one pruned parquet read, not
-    * a cache build — staging materializes the whole index into
-    * executor storage before the first filter can prune, turning a
-    * point lookup into a corpus-index scan. Published SORTED by sg:
-    * range-partitioned sorted files give every file and row group a
-    * narrow sg min/max, so an equality probe on the hash key dies at
-    * the footer for all but ~one split (the lake answer to "is this
-    * phrase anywhere?" must not read the index, only its statistics).
+  /** The published shingle table alone, not staged again: for
+    * single-probe consumers (`substrSearch`) that want one pruned
+    * parquet read, not a cache build — staging materializes the whole
+    * index into executor storage before the first filter can prune,
+    * turning a point lookup into a corpus-index scan. (Without a root
+    * the switch computes and stages it; there is no parquet to prune.)
+    * Published SORTED by sg: range-partitioned sorted files give every
+    * file and row group a narrow sg min/max, so an equality probe on
+    * the hash key dies at the footer for all but ~one split (the lake
+    * answer to "is this phrase anywhere?" must not read the index, only
+    * its statistics).
     */
   private[graft] def publishedShingleIndex(spark: SparkSession, dir: String): DataFrame =
     graft.sources.Artifacts.publishedOrCompute(
@@ -907,21 +858,14 @@ object Dedup {
     */
   private[graft] def standingIndex(
       spark: SparkSession, dir: String, threshold: Double = 0.8): (DataFrame, DataFrame) = {
-    // The shingle table is staged only when computed INLINE (no
-    // artifacts root): there it feeds both the prefix build and the
-    // exact verify, so the persist saves a corpus re-scan. With a root
-    // configured it is a published parquet read and every consumer
-    // (dedupDelta, sourceOverlap, clusterDelta) touches it exactly ONCE
-    // — inside `verifyJaccardIndexed`'s candidate-incident gather — so
-    // staging would materialize the whole corpus-scale index into
-    // executor storage ahead of a single scan (r13; the same
-    // point-probe argument `substrSearch` already documents). The
-    // prefix stays staged either way: its consumers self-join or
-    // filter it twice per query.
-    // Root check kept: a parquet read is not cached, a computed table is.
-    val published = graft.sources.Artifacts.rootDir(spark).nonEmpty
-    val shRaw = publishedShingleIndex(spark, dir)
-    val sh = if (published) shRaw else staged(shRaw, "shingle_standing")
+    // The shingle table is used as the switch returns it: a published
+    // parquet read is scanned once by every consumer (inside
+    // `verifyJaccardIndexed`'s candidate-incident gather), so staging it
+    // would materialize the corpus-scale index ahead of a single scan
+    // (r13); a computed one comes back staged for its two reads (the
+    // prefix build and the exact verify). The prefix stays staged in
+    // both modes: its consumers self-join or filter it twice per query.
+    val sh = publishedShingleIndex(spark, dir)
     val prefix = staged(
       graft.sources.Artifacts.publishedOrCompute(
         spark, "shingle_index_prefix", IndexArtifactVersion, Seq(s"$dir/documents.parquet"))(

@@ -381,8 +381,9 @@ object TextFunctions {
     * to candidate docs WITHOUT a corpus scan, and only candidates pay
     * the exact position count (the index stores per-doc distinct
     * shingles — membership, not positions). Without an artifacts root
-    * `publishedShingleIndex` computes the index frame in place and the
-    * same probe runs over it, keeping Verify self-contained.
+    * `publishedShingleIndex` computes and stages the index frame (built
+    * once for the count and the collect below) and the same probe runs
+    * over it, keeping Verify self-contained.
     *
     * Exactness: the hash prune can only over-admit (collision), never
     * miss; the per-candidate exact trigram count filters n_hits > 0, so

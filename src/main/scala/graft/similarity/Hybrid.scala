@@ -18,32 +18,22 @@ import org.apache.spark.sql.expressions.Window
   * construction of the corpus). Lexical query terms are that doc's
   * top-3 tokens by term frequency; the semantic query is its vector.
   *
-  * TWO deployment modes sharing one scoring/fusion algebra (r16):
+  * ONE algorithm in both artifact modes: the BM25 list reads the
+  * lexical inverted index (postings/terms/doclens/totals, see
+  * [[LexIndex.lexIndexFor]]) instead of re-tokenizing the corpus per
+  * query, and the semantic list probes the IVF coarse index
+  * (`IvfAnn.coarseFor`) instead of scanning every vector: per-query
+  * lexical work is a 3-term postings probe, per-query semantic work
+  * nprobe cells ≈ nprobe·n/k candidates. With an artifacts root both
+  * indexes are published once per corpus snapshot and read; without
+  * one `Artifacts.publishedOrCompute` computes and stages them, and the
+  * same probe runs over them. The semantic list is therefore the IVF
+  * probe's, with its measured recall against an exact scan
+  * (spec-pinned floor) — the disclosed approximation every vector
+  * index trades for its scan-free query path.
   *
-  * - INLINE (no artifacts root — the oracle authority): the corpus
-  *   pays ONE tokenize into the staged tf frame; the semantic list is
-  *   the exact cosine scan. Query side — query doc, 3-token idf table,
-  *   query vector, totals — is all 1-to-3-row broadcasts; both lists
-  *   reduce through TakeOrderedAndProject and fusion joins two
-  *   ≤TopN-row frames.
-  * - INDEX-BACKED (artifacts root configured — the production shape a
-  *   standing retrieval stack runs): the BM25 list reads the published
-  *   lexical inverted index (postings/terms/doclens/totals — built
-  *   once per corpus snapshot, see [[LexIndex.lexIndexFor]]) instead of
-  *   re-tokenizing the corpus per query, and the semantic list probes
-  *   the published IVF coarse index (`IvfAnn.coarseFor` — trained
-  *   once, centroids + assignments lake-resident) instead of scanning
-  *   every vector. Per-query lexical work drops to a 3-term postings
-  *   probe (pushdown-pruned scan; term-bucketed postings make it a
-  *   pruned read at 100 TB); per-query semantic work drops to nprobe
-  *   cells ≈ nprobe·n/k candidates. The LEXICAL list is identical in
-  *   both modes by construction (same exact-integer BM25 over the same
-  *   tf rows — spec-pinned); the SEMANTIC list differs only by the
-  *   IVF probe's measured recall (floor spec-pinned), which is the
-  *   disclosed approximation every vector index trades for its
-  *   scan-free query path.
-  *
-  * Oracle-exact end-to-end (inline mode): BM25 scores are the repo's
+  * Oracle-exact end-to-end (the DuckDB replay runs the same quantizer
+  * and probe, `KMeansOracle.hybridSemCtes`): BM25 scores are the repo's
   * exact-rational int64 formulation (see `TextFunctions.bm25Search`),
   * cosines are bit-identical across engines (`graft_dot` ≡
   * `list_dot_product` accumulation order), ranks are integer
@@ -60,9 +50,7 @@ object Hybrid {
   val RrfK = 60
 
   /** q_hybrid_search: doc_id, lex_rank, sem_rank (−1 = absent from that
-    * list), rrf — fused candidates ordered by fused score. Dispatches
-    * on the artifacts root: inline (oracle authority) vs index-backed
-    * (production/bench mode; see object doc for the contract).
+    * list), rrf — fused candidates ordered by fused score.
     */
   def hybridSearch(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
@@ -78,19 +66,12 @@ object Hybrid {
       .agg(max(struct(col("n_chars"), (-col("doc_id")).as("neg_id"))).as("m"))
       .select((-col("m.neg_id")).as("q_doc"))
     val (post, terms, dls, totals) = LexIndex.lexIndexFor(spark, dir)
-    val lex = lexTopN(qdoc, post, terms, dls, totals)
-    // Root check kept: the exact scan and the IVF probe are different algorithms.
-    val sem = graft.sources.Artifacts.rootDir(spark) match {
-      case None    => semTopNExact(spark, dir, qdoc)
-      case Some(_) => semTopNIndexed(spark, dir, qdoc)
-    }
-    fuse(lex, sem)
+    fuse(lexTopN(qdoc, post, terms, dls, totals), semTopN(spark, dir, qdoc))
   }
 
   /** Lexical BM25 top-N for the query doc's top-3 terms, over whatever
-    * index frames the caller supplies — THE shared algebra of both
-    * modes (exact integer scoring; identical rows in, identical list
-    * out).
+    * index frames the caller supplies (exact integer scoring; identical
+    * rows in, identical list out).
     */
   private[graft] def lexTopN(
       qdoc: DataFrame, tf: DataFrame, dfreq: DataFrame,
@@ -128,31 +109,15 @@ object Hybrid {
       .select("doc_id", "lex_rank")
   }
 
-  /** Semantic list, inline mode: exact cosine of every vector vs the
-    * query vector. Re-aggregated keyless after the 1-row equi probe for
-    * the same provable-single-row broadcast shape (first() is
-    * deterministic on a one-row frame).
+  /** Semantic top-N: probe the IVF coarse index — rank centroids for
+    * the one query vector, score exact cosine ONLY within the nprobe
+    * nearest cells. Candidate volume ≈ nprobe·n/k instead of n; the
+    * cell-keyed equi join replaces the full scan. Same deterministic
+    * quantizer the rest of the IVF family consumes. The global limit
+    * runs before the row_number window (TakeOrderedAndProject over the
+    * candidates, then a window over ≤TopN rows).
     */
-  private def semTopNExact(spark: SparkSession, dir: String, qdoc: DataFrame): DataFrame = {
-    val vecs = Knn.vectors(spark, dir) // vec_id, e, norm
-    val qv = vecs
-      .join(broadcast(qdoc), col("vec_id") === col("q_doc"))
-      .agg(first(col("vec_id")).as("q_id"), first(col("e")).as("qe"), first(col("norm")).as("qn"))
-    val semScored = vecs
-      .join(broadcast(qv))
-      .filter(col("vec_id") =!= col("q_id"))
-      .withColumn("cos", expr("graft_dot(qe, e)") / (col("qn") * col("norm")))
-    rankTopN(semScored)
-  }
-
-  /** Semantic list, index-backed mode: probe the published IVF coarse
-    * index — rank centroids for the one query vector, score exact
-    * cosine ONLY within the nprobe nearest cells. Candidate volume
-    * ≈ nprobe·n/k instead of n; the cell-keyed equi join replaces the
-    * full scan. Same deterministic quantizer the rest of the IVF
-    * family consumes (published centroids/assignments, trained once).
-    */
-  private def semTopNIndexed(spark: SparkSession, dir: String, qdoc: DataFrame): DataFrame = {
+  private def semTopN(spark: SparkSession, dir: String, qdoc: DataFrame): DataFrame = {
     val (assigned, idx) = IvfAnn.coarseFor(spark, dir)
     val corpus = graft.Staging.staged(
       assigned.select(col("vec_id"), col("e"), col("norm"), col("cell")), "hybrid_sem_corpus")
@@ -162,28 +127,18 @@ object Hybrid {
         first(col("norm")).as("qn"), first(col("u")).as("u"))
     val probes = IvfAnn.probeCells(spark, qv, idx)
       .select("q_id", "qe", "qn", "cell")
-    val semScored = probes
+    probes
       .join(corpus.toDF("vec_id", "e", "norm", "cell2"),
         col("cell2") === col("cell") && col("vec_id") =!= col("q_id"))
       .withColumn("cos", expr("graft_dot(qe, e)") / (col("qn") * col("norm")))
-    rankTopN(semScored)
-  }
-
-  /** Shared top-N ranking of a (vec_id, cos) scored stream: global
-    * limit + row_number over the ≤TopN survivors (TakeOrderedAndProject
-    * before any window — no full-corpus window in either mode).
-    */
-  private def rankTopN(scored: DataFrame): DataFrame =
-    scored
       .orderBy(col("cos").desc, col("vec_id").asc)
       .limit(TopN)
       .withColumn("sem_rank",
         row_number().over(Window.orderBy(col("cos").desc, col("vec_id").asc)).cast("long"))
       .select(col("vec_id").as("doc_id"), col("sem_rank"))
+  }
 
-  /** RRF fusion over the two ≤TopN-row lists — mode-agnostic by
-    * construction (list-source-agnostic algebra).
-    */
+  /** RRF fusion over the two ≤TopN-row lists. */
   private[graft] def fuse(lex: DataFrame, sem: DataFrame): DataFrame =
     lex
       .join(sem, Seq("doc_id"), "full_outer")

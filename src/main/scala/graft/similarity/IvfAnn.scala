@@ -432,8 +432,8 @@ object IvfAnn {
     * committed parquet instead of re-fitting k-means per query.
     * `q_ann_ivf` deliberately stays inline as the timed build authority
     * (the q_dedup_jaccard_prefix convention). Without a root
-    * `publishedOrCompute` hands back the computed frames, so the same
-    * join runs over them and the query stays self-contained.
+    * `publishedOrCompute` computes and stages the two frames, so the
+    * same join runs over them and the query stays self-contained.
     *
     * The k-means fit is LAZY: with both artifacts already published, no
     * training happens at all — consumers pay one slim (vec_id, cell)

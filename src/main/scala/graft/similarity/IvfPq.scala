@@ -116,7 +116,7 @@ object IvfPq {
     * NOTHING and encodes NOTHING — it reads four small-to-slim parquet
     * tables and goes straight to probing, which is precisely how a
     * production vector index deploys. Without a root the same frames
-    * are computed in place.
+    * are computed and staged.
     *
     * Returns (assigned, coarse index, codebook, codes, m, dsub).
     */

@@ -443,6 +443,18 @@ object KMeansOracle {
        |${quantCtes.mkString(",\n")},
        |${topKTail(s"WHERE vec_id < ${Knn.NumQueries}")}""".stripMargin
 
+  /** `q_hybrid_search`'s semantic list — `Hybrid.semTopN` replayed: the
+    * probe for the one query doc of a `qdoc(q_doc)` CTE, exact cosine
+    * within its probed cells, top `Hybrid.TopN` as `sem(doc_id,
+    * sem_rank)`. Goes after `quantCtes` and `qdoc` in one WITH.
+    */
+  private[graft] lazy val hybridSemCtes: String =
+    s"""${probeScoredCtes("WHERE vec_id = (SELECT q_doc FROM qdoc)")},
+       |sem AS (
+       |  SELECT doc_id, row_number() OVER (ORDER BY cos DESC, doc_id) AS sem_rank
+       |  FROM (SELECT nbr_id AS doc_id, cos FROM scored ORDER BY cos DESC, nbr_id LIMIT ${Hybrid.TopN})
+       |)""".stripMargin
+
   /** `q_knn_graph`: the all-vectors variant — `IvfAnn.knnGraph`. */
   lazy val knnGraphSql: String =
     s"""WITH RECURSIVE

@@ -56,7 +56,7 @@ object LexIndex {
 
   /** The standing index over an arbitrary documents frame, through
     * `prefix`-named artifacts: published when a root is configured,
-    * computed in place otherwise — either way one staged tokenize
+    * computed and staged otherwise — either way one staged tokenize
     * feeds all four frames. Derived stats are PUBLISHED rather than
     * recomputed per query: re-deriving df from postings is a full
     * index shuffle at 100 TB, which is exactly what a standing term

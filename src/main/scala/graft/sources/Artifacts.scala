@@ -22,19 +22,17 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *   and queries stay self-contained (Verify's correctness gate runs
   *   this way, so correctness never depends on published state).
   * - ONE SWITCH: `publishedOrCompute` is the only place that chooses
-  *   between reading a stored artifact and computing it. A consumer
-  *   builds the same plan over whichever frame it gets, so the
-  *   no-root oracle run checks the code the benches time with a root.
-  *   Four call sites still read `rootDir`, none of them to pick a read
-  *   or a compute:
-  *   - `Hybrid.hybridSearch`: its semantic list is an exact scan
-  *     without a root and an IVF probe with one — a different
-  *     algorithm by design;
-  *   - `IvfAnn.ivfRefit` and `LexIndex.lexRerank`: a due refresh
-  *     republishes the index, and without a root there is none;
-  *   - `Dedup.standingIndex`: a computed shingle table is staged for
-  *     its two reads, a published one is a parquet read scanned once
-  *     and not cached.
+  *   between reading a stored artifact and computing it, and the only
+  *   difference between the two modes. A computed artifact is staged
+  *   (`Staging.staged`), so it is built once per query just as a
+  *   published one is read once, and a consumer that reads it twice
+  *   does not compute it twice. A consumer builds the same plan over
+  *   whichever frame it gets, so the no-root oracle run checks the code
+  *   the benches time with a root. Two call sites outside this file
+  *   still read `rootDir`, neither to pick a read or a compute:
+  *   `IvfAnn.ivfRefit` and `LexIndex.lexRerank` republish their index
+  *   when a refresh is due, and without a root there is no published
+  *   index to refresh.
   * - FRESHNESS is structural, not temporal: an artifact directory is
   *   keyed by a fingerprint of its input snapshot (every input file's
   *   path, length, mtime — the lake-less stand-in for a table-format
@@ -141,12 +139,14 @@ object Artifacts {
     * compute it, publish, and read back (read-back rather than returning
     * the computed plan, so consumer scan parallelism is governed by file
     * splits either way and the artifact is what was actually committed).
-    * No artifacts root configured → compute inline. A consumer racing a
-    * prune of its directory falls back to recompute-and-republish with a
-    * stderr warning; if even the fresh publish is pruned out from under
-    * the read-back (retention misconfigured to 0, or a prune keyed on a
-    * different input snapshot), the computed plan itself is served so
-    * correctness never depends on retention policy.
+    * No artifacts root configured → compute inline and stage the
+    * result under `name`, so the artifact is built once per query. A
+    * consumer racing a prune of its directory falls back to
+    * recompute-and-republish with a stderr warning; if even the fresh
+    * publish is pruned out from under the read-back (retention
+    * misconfigured to 0, or a prune keyed on a different input
+    * snapshot), the computed plan itself is served so correctness never
+    * depends on retention policy.
     */
   def publishedOrCompute(
       spark: SparkSession,
@@ -154,7 +154,7 @@ object Artifacts {
       version: String,
       inputPaths: Seq[String])(compute: => DataFrame): DataFrame =
     rootDir(spark) match {
-      case None => compute
+      case None => graft.Staging.staged(compute, name)
       case Some(root) =>
         val fp = fingerprint(spark, version, inputPaths)
         val path = artifactPath(root, name, fp)

@@ -74,8 +74,8 @@ object ScaleBench {
     val names = args.lift(1).filter(_.nonEmpty)
       .map(_.split(",").toSeq).getOrElse(DefaultQueries)
     val spark = graft.GraftSession.local()
-    // Optional third arg: comma-list of k=v session confs (e.g. force
-    // the distributed CC path with spark.graft.cc.driverEdgeCap=0).
+    // Optional third arg: comma-list of k=v session confs (e.g. stage
+    // to scratch parquet with spark.graft.scratch=/tmp/graft_scratch).
     args.lift(2).foreach(_.split(",").filter(_.contains("=")).foreach { kv =>
       val Array(k, v) = kv.split("=", 2)
       spark.conf.set(k, v)

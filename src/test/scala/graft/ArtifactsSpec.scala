@@ -31,6 +31,24 @@ class ArtifactsSpec extends SparkSpec {
     assert(computes == 2, "without a root the contract must stay self-contained")
   }
 
+  test("no artifacts root: a computed artifact is built once however often it is read") {
+    // Each row passes a counting UDF as the artifact is built; a
+    // consumer that reads the returned frame twice must not build it twice.
+    val n = 100L
+    val built = spark.sparkContext.longAccumulator("artifact_rows_built")
+    val countRow = org.apache.spark.sql.functions.udf { (_: Long) => built.add(1L); true }
+    spark.catalog.clearCache()
+    try {
+      val df = Artifacts.publishedOrCompute(spark, "counted", "v1", Seq(s"$sfDir/region.parquet")) {
+        spark.range(0L, n, 1L, 4).toDF().filter(countRow(org.apache.spark.sql.functions.col("id")))
+      }
+      assert(df.count() == n)
+      assert(df.collect().length == n)
+      assert(built.value == n,
+        s"computed artifact built ${built.value.toDouble / n}x for two reads, not once")
+    } finally spark.catalog.clearCache()
+  }
+
   test("published once, consumed thereafter, rows identical to inline") {
     withRoot { root =>
       import spark.implicits._

@@ -60,7 +60,7 @@ class ClustersSpec extends SparkSpec {
   }
 
   test("adaptive CC: driver union-find fast path equals the distributed loop exactly") {
-    // The conf cap forces each path in turn on the SAME graph: a huge
+    // The edge cap forces each path in turn on the SAME graph: a huge
     // cap takes the driver union-find, cap 0 the hash-min loop. Random
     // multi-edge graphs with self-dups and both orientations exercise
     // the min-label invariant beyond the fixed testdata.
@@ -72,14 +72,11 @@ class ClustersSpec extends SparkSpec {
         .filter { case (a, b) => a != b }
         .toDF("a", "b")
       val vertices = (1L to n).toDF("id")
-      spark.conf.set("spark.graft.cc.driverEdgeCap", "1000000")
-      val fast = Clusters.connectedComponentsAdaptive(vertices, pairs)
+      val fast = Clusters.connectedComponentsAdaptive(vertices, pairs, edgeCap = 1000000L)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       spark.catalog.clearCache()
-      spark.conf.set("spark.graft.cc.driverEdgeCap", "0")
-      val dist = Clusters.connectedComponentsAdaptive(vertices, pairs)
+      val dist = Clusters.connectedComponentsAdaptive(vertices, pairs, edgeCap = 0L)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      spark.conf.unset("spark.graft.cc.driverEdgeCap")
       spark.catalog.clearCache()
       assert(fast.size == n && fast == dist,
         s"trial $trial: paths disagree on ${fast.toSet.diff(dist.toSet).take(5)}")
@@ -94,14 +91,11 @@ class ClustersSpec extends SparkSpec {
       (Long.MaxValue - 1, Long.MaxValue),
       (-7L, 5L)).toDF("a", "b")
     val extremeVerts = ids.toDF("id")
-    spark.conf.set("spark.graft.cc.driverEdgeCap", "1000000")
-    val fastX = Clusters.connectedComponentsAdaptive(extremeVerts, extremePairs)
+    val fastX = Clusters.connectedComponentsAdaptive(extremeVerts, extremePairs, edgeCap = 1000000L)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     spark.catalog.clearCache()
-    spark.conf.set("spark.graft.cc.driverEdgeCap", "0")
-    val distX = Clusters.connectedComponentsAdaptive(extremeVerts, extremePairs)
+    val distX = Clusters.connectedComponentsAdaptive(extremeVerts, extremePairs, edgeCap = 0L)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    spark.conf.unset("spark.graft.cc.driverEdgeCap")
     spark.catalog.clearCache()
     assert(fastX == distX, s"extreme-id graph: $fastX vs $distX")
     assert(fastX(Long.MaxValue) == Long.MinValue + 1 && fastX(-7L) == -7L && fastX(0L) == 0L,
@@ -113,14 +107,11 @@ class ClustersSpec extends SparkSpec {
     // vertices — otherwise results would depend on the cap.
     val vSub = Seq(1L, 2L, 9L).toDF("id")             // 3 and 4 only appear in pairs
     val pSub = Seq((1L, 3L), (3L, 4L)).toDF("a", "b") // component {1,3,4}, 2 and 9 singletons
-    spark.conf.set("spark.graft.cc.driverEdgeCap", "1000000")
-    val fastS = Clusters.connectedComponentsAdaptive(vSub, pSub)
+    val fastS = Clusters.connectedComponentsAdaptive(vSub, pSub, edgeCap = 1000000L)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     spark.catalog.clearCache()
-    spark.conf.set("spark.graft.cc.driverEdgeCap", "0")
-    val distS = Clusters.connectedComponentsAdaptive(vSub, pSub)
+    val distS = Clusters.connectedComponentsAdaptive(vSub, pSub, edgeCap = 0L)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    spark.conf.unset("spark.graft.cc.driverEdgeCap")
     spark.catalog.clearCache()
     assert(fastS == distS, s"endpoint-outside-vertices graph: $fastS vs $distS")
     assert(fastS == Map(1L -> 1L, 2L -> 2L, 3L -> 1L, 4L -> 1L, 9L -> 9L),
@@ -136,17 +127,12 @@ class ClustersSpec extends SparkSpec {
     import org.apache.spark.sql.execution.LogicalRDD
     val pairs = Seq((1L, 2L), (2L, 3L), (5L, 6L), (7L, 6L), (9L, 8L)).toDF("a", "b").repartition(3)
     val vertices = (1L to 10L).toDF("id")
-    def run(cap: Long): (Map[Long, Long], Boolean) = {
-      spark.conf.set("spark.graft.cc.driverEdgeCap", cap.toString)
+    def run(cap: Long): (Map[Long, Long], Boolean) =
       try {
-        val out = Clusters.connectedComponentsAdaptive(vertices, pairs)
+        val out = Clusters.connectedComponentsAdaptive(vertices, pairs, edgeCap = cap)
         val distributed = out.queryExecution.analyzed.exists(_.isInstanceOf[LogicalRDD])
         (out.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap, distributed)
-      } finally {
-        spark.conf.unset("spark.graft.cc.driverEdgeCap")
-        spark.catalog.clearCache()
-      }
-    }
+      } finally spark.catalog.clearCache()
     val (atCap, atCapDistributed) = run(5L)
     val (belowCap, belowCapDistributed) = run(4L)
     assert(!atCapDistributed, "cap = |edges| must take the driver union-find")
@@ -163,16 +149,12 @@ class ClustersSpec extends SparkSpec {
     // creates and releases; the driver path creates none.
     import spark.implicits._
     spark.catalog.clearCache()
-    spark.conf.set("spark.graft.cc.driverEdgeCap", "0")
     try {
       val out = Clusters.connectedComponentsAdaptive(
-        (1L to 4L).toDF("id"), Seq.empty[(Long, Long)].toDF("a", "b"))
+        (1L to 4L).toDF("id"), Seq.empty[(Long, Long)].toDF("a", "b"), edgeCap = 0L)
       assert(out.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap ==
         (1L to 4L).map(i => i -> i).toMap)
-    } finally {
-      spark.conf.unset("spark.graft.cc.driverEdgeCap")
-      spark.catalog.clearCache()
-    }
+    } finally spark.catalog.clearCache()
   }
 
   test("leakage-safe split keeps every near-dup cluster inside one split") {

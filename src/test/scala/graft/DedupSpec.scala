@@ -1,6 +1,6 @@
 package graft
 
-import graft.dedup.Dedup
+import graft.dedup.{Dedup, DedupWitnesses}
 import org.apache.spark.sql.functions._
 
 class DedupSpec extends SparkSpec {
@@ -78,7 +78,7 @@ class DedupSpec extends SparkSpec {
   test("prefix-filtered jaccard is lossless vs the full inverted index") {
     // q_dedup_ngram_jaccard now delegates to the prefix filter, so the
     // losslessness witness is the retained naive full-index variant.
-    val full = Dedup.ngramJaccardNaive(spark, sfDir)
+    val full = DedupWitnesses.ngramJaccardNaive(spark, sfDir)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     val pref = SparkEntry.queries("q_dedup_jaccard_prefix")(spark, sfDir)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet

@@ -1,6 +1,6 @@
 package graft
 
-import graft.dedup.Dedup
+import graft.dedup.{Dedup, DedupWitnesses}
 import graft.sources.ScdHistory
 import org.apache.spark.sql.functions._
 
@@ -37,7 +37,7 @@ class PropertySpec extends SparkSpec {
     import spark.implicits._
     for (trial <- 1 to 3) {
       val docs = randomCorpus(60).toDF("doc_id", "text")
-      val naive = Dedup.jaccardPairs(Dedup.shingles(docs))
+      val naive = DedupWitnesses.jaccardPairs(Dedup.shingles(docs))
         .filter(col("jac") >= 0.8)
         .select(col("a"), col("b"), Num.round4(col("jac")).as("jac"))
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
@@ -79,7 +79,7 @@ class PropertySpec extends SparkSpec {
     import spark.implicits._
     for (trial <- 1 to 3) {
       val docs = randomCorpus(60).toDF("doc_id", "text")
-      val naive = Dedup.containmentNaive(docs)
+      val naive = DedupWitnesses.containmentNaive(docs)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
       val pruned = Dedup.containmentOf(docs)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
