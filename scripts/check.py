@@ -2,16 +2,21 @@
 """Dev-only correctness checker mirroring the driver's t2 gate:
 run graft.Verify output parquet vs DuckDB oracle SQL on the same tables.
 Each query's line ends with its DuckDB wall seconds; the total is printed last.
-Usage: python3 scripts/check.py <sfDir> <outDir>"""
+Usage: python3 scripts/check.py <sfDir> <outDir> [q1,q2,...]
+The optional comma list checks only the named queries, as graft.Verify's
+third argument runs only them."""
 import sys, json, glob, os, time
 import duckdb, pandas as pd, numpy as np
 
 sfdir, outdir = sys.argv[1], sys.argv[2]
+only = set(sys.argv[3].split(',')) if len(sys.argv) > 3 else None
 con = duckdb.connect()
 for t in ['region','nation','customer','supplier','part','orders','lineitem','events','documents','embeddings']:
     con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sfdir}/{t}.parquet'")
 
 oracle = json.load(open(f'{outdir}/oracle_sql.json'))
+if only is not None:
+    oracle = {n: q for n, q in oracle.items() if n in only}
 ok = fail = 0
 duck_total = 0.0
 for name, sql in sorted(oracle.items()):

@@ -216,12 +216,7 @@ object Dedup {
     * derived from it.
     */
   private[graft] def jaccardPrefixOf(docs: DataFrame, threshold: Double = 0.8): DataFrame = {
-    val arr = staged(
-      graft.Staging.spread(docs.select(col("doc_id"), col("text")))
-        .select(col("doc_id"), split(col("text"), " ").as("toks"))
-        .filter(size(col("toks")) >= 3)
-        .select(col("doc_id"), expr(ShingleArraySql).as("sh")),
-      "shingle_arr_pp")
+    val arr = shingleArraysOf(docs, "shingle_arr_pp")
     val sh = arr.select(col("doc_id"), explode(col("sh")).as("sg"))
     val prefix = staged(prefixIndex(sh, threshold), "prefix_pp")
     val candidates = ppjoinCandidates(
@@ -334,16 +329,7 @@ object Dedup {
   private[graft] def containmentOf(
       docs: DataFrame, threshold: Double = 0.8, dfCap: Long = ContainmentDfCap): DataFrame = {
     val eps = 1e-9
-    val arr = staged(
-      graft.Staging.spread(docs.select(col("doc_id"), col("text")))
-        .select(col("doc_id"), split(col("text"), " ").as("toks"))
-        .filter(size(col("toks")) >= 3)
-        .select(col("doc_id"), expr(ShingleArraySql).as("sh")),
-      // NOT columnarCache: this array frame is REREAD twice by the
-      // pair-bounded verify gather, and the read side dominates —
-      // flagging it measured 2× the query wall at 50k docs (7.0 →
-      // 14.9 s, r17), the knn-family direction, not the substr one.
-      "shingle_arr_cont")
+    val arr = shingleArraysOf(docs, "shingle_arr_cont")
     val sh = arr.select(col("doc_id"), explode(col("sh")).as("sg"))
     val indexed = staged(dfOrderedIndex(sh), "cont_index")
     // Required overlap t = ceil(τ·na) and the count-filter demand
@@ -501,13 +487,22 @@ object Dedup {
     * every hashed index here makes).
     */
   private[graft] def shingleArrays(spark: SparkSession, dir: String): DataFrame =
+    shingleArraysOf(Tables.documents(spark, dir), "shingle_arr")
+
+  /** The staged (doc_id, sh) shingle-hash array frame of any (doc_id,
+    * text) frame; docs under 3 tokens have no shingle. NOT
+    * columnarCache: the consumers REREAD the array frame (the
+    * containment verify gathers it twice) and the read side dominates
+    * — flagging it measured 2× the containment query wall at 50k docs
+    * (7.0 → 14.9 s, r17), the knn-family direction, not the substr one.
+    */
+  private def shingleArraysOf(docs: DataFrame, name: String): DataFrame =
     staged(
-      graft.Staging.spread(
-        Tables.documents(spark, dir).select(col("doc_id"), col("text")))
+      graft.Staging.spread(docs.select(col("doc_id"), col("text")))
         .select(col("doc_id"), split(col("text"), " ").as("toks"))
         .filter(size(col("toks")) >= 3)
         .select(col("doc_id"), expr(ShingleArraySql).as("sh")),
-      "shingle_arr")
+      name)
 
   /** The exploded LSH band-key frame (doc_id, band, key) the bucket
     * equi-join runs on — also the frame `DedupQa.indexStats` audits.

@@ -197,8 +197,7 @@ object QualityFilters {
         // would make every downweighted doc satisfy bucket%100 < rate,
         // i.e. land in 'train' — samplers must thin independently of the
         // split and of each other.
-        .withColumn("bucket",
-          (((col("doc_id") % 1000003L) * 1315423911L + 32452843L) % 1000000007L % 1000L).cast("long"))
+        .withColumn("bucket", Num.hashBucket(col("doc_id"), 32452843L, 1000L))
         .filter(col("bucket") < col("rate_pm"))
         .select(col("doc_id"), col("n_pass").cast("long").as("n_pass"), col("rate_pm"), col("bucket")))
 

@@ -97,8 +97,7 @@ object TextFunctions {
     val queryToks = dfreq.orderBy(col("df").desc, col("tok").asc).limit(3)
     val idf = queryToks
       .join(broadcast(total))
-      .withColumn("idf4",
-        floor((col("n_docs") - col("df") + 0.5) / (col("df") + 0.5) * 10000 + 0.5).cast("long"))
+      .withColumn("idf4", Num.idf4(col("n_docs"), col("df")))
       .select("tok", "idf4")
     tf.join(broadcast(idf), "tok")
       .groupBy("doc_id")
@@ -139,18 +138,13 @@ object TextFunctions {
     val queryToks = dfreq.orderBy(col("df").desc, col("tok").asc).limit(3)
     val idf = queryToks
       .join(broadcast(totals))
-      .withColumn("idf4",
-        floor((col("n_docs") - col("df") + 0.5) / (col("df") + 0.5) * 10000 + 0.5).cast("long"))
+      .withColumn("idf4", Num.idf4(col("n_docs"), col("df")))
       .select("tok", "idf4")
     tf.join(broadcast(idf), "tok")
       .join(dl, "doc_id")
       .join(broadcast(totals))
       .withColumn("score4",
-        floor(
-          (col("idf4") * 22L * col("tf") * col("t_tok")).cast("double")
-            / (lit(10L) * col("tf") * col("t_tok") + lit(3L) * col("t_tok")
-                + lit(9L) * col("dl") * col("n_docs")).cast("double")
-            + 0.5).cast("long"))
+        Num.bm25Score4(col("idf4"), col("tf"), col("dl"), col("n_docs"), col("t_tok")))
       .groupBy("doc_id")
       .agg((sum(col("score4")).cast("double") / lit(10000.0)).as("score"))
       .orderBy(col("score").desc, col("doc_id").asc)

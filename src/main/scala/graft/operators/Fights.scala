@@ -13,16 +13,16 @@ import org.apache.spark.sql.functions._
   * ±15 s, and calc_participant_aggressiveness_and_judgment (utils.py:630)
   * then folds the merged fights into solo/skirmish/team win-loss ratios.
   *
-  * Same bucketed equi-join shape as RangeJoin (bucket + explode-to-3 —
-  * no theta join), but the aggregation carries attribute merges
+  * The same range join as RangeJoin, planned by `plans.RangeJoinRewrite`
+  * (no theta join), but the aggregation carries attribute merges
   * (count/max/sum of the joined side).
   */
 object Fights {
   val WindowMicros: Long = 15L * 60 * 1000 * 1000
 
   /** Anchor ('error') events joined to that user's 'click' events within
-    * ±W via the bucketed equi-join — the shared front half of both
-    * operators below. Columns: a_id, a_user, a_value, c_ts, c_value.
+    * ±W — the shared front half of both operators below. Columns: a_id,
+    * a_user, a_ts, a_value, c_user, c_ts, c_value.
     */
   private def anchorClickPairs(spark: SparkSession, dir: String): (DataFrame, DataFrame) = {
     val anchors = Tables
@@ -30,19 +30,16 @@ object Fights {
       .filter(col("event_type") === "error")
       .select(col("event_id").as("a_id"), col("user_id").as("a_user"),
         unix_micros(col("ts")).as("a_ts"), col("value").as("a_value"))
-      .withColumn("bucket", floor(col("a_ts") / WindowMicros).cast("long"))
 
     val nearby = Tables
       .events(spark, dir)
       .filter(col("event_type") === "click")
       .select(col("user_id").as("c_user"), unix_micros(col("ts")).as("c_ts"), col("value").as("c_value"))
-      .withColumn("b0", floor(col("c_ts") / WindowMicros).cast("long"))
-      .withColumn("bucket", explode(array(col("b0") - 1, col("b0"), col("b0") + 1)))
-      .drop("b0")
 
-    val pairs = anchors
-      .join(nearby, col("a_user") === col("c_user") && anchors("bucket") === nearby("bucket"))
-      .filter(col("c_ts") >= col("a_ts") - WindowMicros && col("c_ts") <= col("a_ts") + WindowMicros)
+    val pairs = anchors.join(nearby,
+      col("a_user") === col("c_user") &&
+        col("c_ts") >= col("a_ts") - WindowMicros &&
+        col("c_ts") <= col("a_ts") + WindowMicros)
     (anchors, pairs)
   }
 

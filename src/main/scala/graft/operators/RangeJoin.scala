@@ -4,12 +4,11 @@ import graft.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Bucketed time-range join: for each anchor event, count that entity's
-  * events within ±window. A naive theta-join is a broadcast-nested-loop
-  * (quadratic at scale); instead each anchor equi-joins on
-  * (entity, time-bucket) against candidates exploded into the 3 adjacent
-  * buckets, then refines the exact predicate — a plain shuffled hash join
-  * with bounded fanout that AQE can skew-split.
+/** Time-range join: for each anchor event, count that entity's events
+  * within ±window. Written as the join it means (same user, other
+  * event, |Δts| ≤ W); `plans.RangeJoinRewrite` plans it as an equi-join
+  * on (user, time bucket) with the range as the refinement filter, not
+  * as a quadratic theta join.
   *
   * Reference: utils.py:539-541 (fight events within ±15 s of each kill).
   */
@@ -17,30 +16,21 @@ object RangeJoin {
   val WindowMicros: Long = 15L * 60 * 1000 * 1000 // +-15 min on the events table
 
   def nearbyCounts(spark: SparkSession, dir: String): DataFrame = {
-    val ev = Tables
-      .events(spark, dir)
-      .select(col("event_id"), col("user_id"), unix_micros(col("ts")).as("ts_us"))
-
     val anchors = Tables
       .events(spark, dir)
       .filter(col("event_type") === "error")
       .select(col("event_id").as("a_id"), col("user_id").as("a_user"), unix_micros(col("ts")).as("a_ts"))
-      .withColumn("bucket", floor(col("a_ts") / WindowMicros).cast("long"))
 
-    // Candidates appear in their own bucket plus both neighbors, so every
-    // anchor finds all rows within +-window via a single equi-join.
-    val candidates = ev
-      .withColumn("b0", floor(col("ts_us") / WindowMicros).cast("long"))
-      .withColumn("bucket", explode(array(col("b0") - 1, col("b0"), col("b0") + 1)))
-      .select(col("event_id").as("c_id"), col("user_id").as("c_user"), col("ts_us").as("c_ts"), col("bucket"))
+    val events = Tables
+      .events(spark, dir)
+      .select(col("event_id").as("c_id"), col("user_id").as("c_user"), unix_micros(col("ts")).as("c_ts"))
 
     val matched = anchors
-      .join(candidates, col("a_user") === col("c_user") && anchors("bucket") === candidates("bucket"))
-      .filter(
-        col("c_id") =!= col("a_id") &&
+      .join(events,
+        col("a_user") === col("c_user") &&
+          col("c_id") =!= col("a_id") &&
           col("c_ts") >= col("a_ts") - WindowMicros &&
-          col("c_ts") <= col("a_ts") + WindowMicros
-      )
+          col("c_ts") <= col("a_ts") + WindowMicros)
       .groupBy(col("a_id"))
       .agg(count(lit(1)).as("n_nearby"))
 

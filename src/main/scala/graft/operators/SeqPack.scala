@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{Num, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -246,12 +246,8 @@ object SeqPack {
     val docs = Tables
       .documents(spark, dir)
       .select(col("doc_id"), size(split(col("text"), "\\s+")).cast("long").as("n_tokens"))
-      .withColumn("bucket",
-        ((col("doc_id") % 1000003L) * 1315423911L + 12345L) % 1000000007L % 100L)
-      .withColumn("split",
-        when(col("bucket") < 80, "train")
-          .when(col("bucket") < 90, "valid")
-          .otherwise("test"))
+      .withColumn("bucket", Num.hashBucket(col("doc_id"), 12345L, 100L))
+      .withColumn("split", Splits.splitOf(col("bucket")))
       .drop("bucket")
     seqPackWithin(docs, "split")
       .groupBy("split")

@@ -1,7 +1,7 @@
 package graft.operators
 
-import graft.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.{Num, Tables}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Deterministic train/valid/test assignment.
@@ -12,22 +12,20 @@ import org.apache.spark.sql.functions._
   * pure hash of the stable id — same row, same split, on every run and
   * every engine, no state to persist.
   *
-  * The hash is explicit integer arithmetic (multiplicative mix + mod)
-  * rather than a builtin hash so the DuckDB oracle can evaluate the
-  * identical function; the pre-mod keeps every intermediate well inside
-  * int64 in both engines.
+  * The hash is `Num.hashBucket`: explicit integer arithmetic the DuckDB
+  * oracle evaluates identically.
   */
 object Splits {
+
+  /** The 80/10/10 train/valid/test cut of a [0, 100) hash bucket. */
+  def splitOf(bucket: Column): Column =
+    when(bucket < 80, "train").when(bucket < 90, "valid").otherwise("test")
 
   def splitAssign(spark: SparkSession, dir: String): DataFrame =
     graft.Staging.sorted(
       Tables.documents(spark, dir).select(col("doc_id")), "split_assign_out", "doc_id")(
-      _.withColumn("bucket",
-        (((col("doc_id") % 1000003L) * 1315423911L + 12345L) % 1000000007L % 100L).cast("long"))
-        .withColumn("split",
-          when(col("bucket") < 80, "train")
-            .when(col("bucket") < 90, "valid")
-            .otherwise("test")))
+      _.withColumn("bucket", Num.hashBucket(col("doc_id"), 12345L, 100L))
+        .withColumn("split", splitOf(col("bucket"))))
 
   /** Leakage-safe split: hash the near-dup CLUSTER id, not the doc id,
     * so every member of a near-dup cluster lands in the same split — a
@@ -45,12 +43,8 @@ object Splits {
     graft.dedup.Clusters
       .publishedClusters(spark, dir)
       .select(col("doc_id"), col("cluster_id"))
-      .withColumn("bucket",
-        (((col("cluster_id") % 1000003L) * 1315423911L + 12345L) % 1000000007L % 100L).cast("long"))
-      .withColumn("split",
-        when(col("bucket") < 80, "train")
-          .when(col("bucket") < 90, "valid")
-          .otherwise("test"))
+      .withColumn("bucket", Num.hashBucket(col("cluster_id"), 12345L, 100L))
+      .withColumn("split", splitOf(col("bucket")))
       .orderBy("doc_id")
 
   /** Source-balanced mixture sampling: downsample every `source` to
@@ -85,8 +79,7 @@ object Splits {
       // and the splitter must decorrelate — with a shared hash, a doc
       // kept at rate r also satisfies bucket%100 < r, so thinned
       // sources would land exclusively in the train split.
-      .withColumn("bucket",
-        (((col("doc_id") % 1000003L) * 1315423911L + 2038074743L) % 1000000007L % 1000L).cast("long"))
+      .withColumn("bucket", Num.hashBucket(col("doc_id"), 2038074743L, 1000L))
       .filter(col("bucket") < col("rate_pm"))
       .select("doc_id", "source", "bucket")
       .orderBy("doc_id")
@@ -127,8 +120,7 @@ object Splits {
       .select("source", "rate_pm")
     docs
       .join(broadcast(rates), "source")
-      .withColumn("bucket",
-        (((col("doc_id") % 1000003L) * 1315423911L + 1442695040L) % 1000000007L % 1000L).cast("long"))
+      .withColumn("bucket", Num.hashBucket(col("doc_id"), 1442695040L, 1000L))
       .filter(col("bucket") < col("rate_pm"))
       .select("doc_id", "source", "bucket")
       .orderBy("doc_id")
@@ -173,8 +165,7 @@ object Splits {
       .select("source", "epochs_pm")
     docs
       .join(broadcast(rates), "source")
-      .withColumn("frac_bucket",
-        (((col("doc_id") % 1000003L) * 1315423911L + 824633720L) % 1000000007L % 1000L).cast("long"))
+      .withColumn("frac_bucket", Num.hashBucket(col("doc_id"), 824633720L, 1000L))
       .withColumn("n_copies",
         expr("epochs_pm div 1000") +
           when(col("frac_bucket") < col("epochs_pm") % 1000L, 1L).otherwise(0L))
@@ -198,8 +189,7 @@ object Splits {
     graft.Staging.sorted(
       Tables.events(spark, dir).select(col("event_id"), col("user_id"), col("event_type")),
       "stratified_sample_out", "event_id")(
-      _.withColumn("bucket",
-        (((col("event_id") % 1000003L) * 1315423911L + 12345L) % 1000000007L % 100L).cast("long"))
+      _.withColumn("bucket", Num.hashBucket(col("event_id"), 12345L, 100L))
         .withColumn("rate", when(col("event_type").isin("view", "click"), 20L).otherwise(80L))
         .filter(col("bucket") < col("rate"))
         .select("event_id", "user_id", "event_type", "bucket"))

@@ -6,42 +6,45 @@ import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.types.LongType
 
-/** Optimizer rule: rewrite a naive time-range theta join into the
-  * bucketed equi-join RangeJoin builds by hand.
+/** Optimizer rule: the engine's one range-join strategy. It rewrites a
+  * time-range theta join into a bucketed equi-join.
   *
-  * A user writing
+  * A query writes the join it means:
   * {{{ a.join(b, a("k") === b("k") && b("ts") >= a("ts") - W && b("ts") <= a("ts") + W) }}}
-  * gets a join whose only equi conjunct is k — fine — but with NO equi
-  * conjunct (or a low-cardinality k) Spark must fall back to
-  * BroadcastNestedLoopJoin: quadratic, a 100 TB killer. The reference
-  * meets exactly this shape when attaching timeline events within ±15 s
-  * of each kill (utils.py:541-580).
+  * With no equi conjunct Spark must plan a BroadcastNestedLoopJoin:
+  * quadratic, a 100 TB killer. With only a low-cardinality k, each key's
+  * rows meet on one reducer. The reference meets exactly this shape when
+  * attaching timeline events within ±15 s of each kill
+  * (utils.py:541-580); `RangeJoin` and `Fights` are those joins.
   *
   * The rewrite floors both timestamps into W-sized buckets, explodes the
-  * right side into its bucket ±1, and joins on the bucket equi-key with
-  * the original predicate kept as a refinement filter — same semantics
-  * (every pair within ±W shares at least one bucket), but now a shuffled
-  * hash/sort-merge join with bounded 3x fanout that AQE can skew-split.
+  * right side into its bucket ±1, and adds the bucket equality beside
+  * the original condition. Any equi conjunct stays, so
+  * ExtractEquiJoinKeys plans the join on (k, bucket), and the range
+  * predicate stays as the refinement filter. The rows are the same:
+  * two values within W always share a bucket or sit in adjacent ones,
+  * so the buckets only pick candidate pairs. The join becomes a
+  * shuffled hash/sort-merge join with bounded 3x fanout that AQE can
+  * skew-split.
   *
-  * Conservative trigger: inner join, both range conjuncts present with
-  * the same positive integer W on a LongType column pair, and NO
-  * existing attribute-to-attribute equi conjunct — a join that already
-  * has an equi key (including the hand-bucketed RangeJoin/Fights
-  * operators, whose refine filter gets pushed back into the join
-  * condition by PushPredicateThroughJoin) plans as a shuffled join
-  * without help, and re-bucketing it would only add a redundant 3x
-  * explode. Already-rewritten joins are also skipped via the marker
-  * column name.
+  * Trigger: an inner join whose condition holds both range conjuncts
+  * with the same positive integer W on a LongType attribute pair,
+  * whether or not it also has an equi key. Joins already rewritten are
+  * skipped by the marker column name. The trade: for a
+  * high-cardinality k, the key alone already spreads the join, and the
+  * rule still adds the 3x explode of the right side. The rule cannot
+  * see key cardinality without CBO stats, and none of the declared
+  * queries has that shape. `spark.sql.optimizer.excludedRules` turns
+  * the rule off.
   */
-object RangeJoinRewrite extends Rule[LogicalPlan] {
+object RangeJoinRewrite extends Rule[LogicalPlan] with PredicateHelper {
 
   private val BucketName = "__graft_range_bucket"
 
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transformUp {
     case j @ Join(left, right, Inner, Some(cond), hint)
-        if j.resolved && !alreadyBucketed(cond) && !hasEquiConjunct(cond, left, right) =>
-      val conjuncts = splitConjuncts(cond)
-      detectRange(conjuncts, left, right) match {
+        if j.resolved && !alreadyBucketed(cond) =>
+      detectRange(splitConjunctivePredicates(cond), left, right) match {
         case Some((lTs, rTs, w)) =>
           // left: project bucket = floor(ts / w)
           val lBucket = Alias(floorDiv(lTs, w), BucketName + "_l")()
@@ -52,7 +55,8 @@ object RangeJoinRewrite extends Rule[LogicalPlan] {
             Subtract(rBase, Literal(1L)), rBase, Add(rBase, Literal(1L)))))
           val rBucketAttr = AttributeReference(BucketName + "_r", LongType)()
           val newRight = Generate(gen, Nil, outer = false, None, Seq(rBucketAttr), right)
-          val newCond = And(EqualTo(lBucket.toAttribute, rBucketAttr), cond)
+          // equi keys already in cond come first: (k, bucket)
+          val newCond = And(cond, EqualTo(lBucket.toAttribute, rBucketAttr))
           // restore the original schema
           Project(j.output, Join(newLeft, newRight, Inner, Some(newCond), hint))
         case None => j
@@ -64,30 +68,6 @@ object RangeJoinRewrite extends Rule[LogicalPlan] {
       case a: Attribute => a.name.startsWith(BucketName)
       case _ => false
     }
-
-  /** Any equality conjunct whose two sides reference only-left and
-    * only-right already makes the join equi-plannable (this is exactly
-    * ExtractEquiJoinKeys' criterion — expression keys like
-    * f(l.k) === f(r.k) count, not just bare attributes) — leave it
-    * alone; re-bucketing would only add a redundant 3x explode.
-    */
-  private def hasEquiConjunct(cond: Expression, left: LogicalPlan, right: LogicalPlan): Boolean = {
-    def crossSides(a: Expression, b: Expression): Boolean = {
-      def onlyLeft(e: Expression) = e.references.nonEmpty && e.references.subsetOf(left.outputSet)
-      def onlyRight(e: Expression) = e.references.nonEmpty && e.references.subsetOf(right.outputSet)
-      (onlyLeft(a) && onlyRight(b)) || (onlyLeft(b) && onlyRight(a))
-    }
-    splitConjuncts(cond).exists {
-      case EqualTo(a, b) => crossSides(a, b)
-      case EqualNullSafe(a, b) => crossSides(a, b)
-      case _ => false
-    }
-  }
-
-  private def splitConjuncts(e: Expression): Seq[Expression] = e match {
-    case And(a, b) => splitConjuncts(a) ++ splitConjuncts(b)
-    case other => Seq(other)
-  }
 
   /** Exact integer floor division: (ts - pmod(ts, w)) div w. A
     * float-based floor(ts/w) is lossy for longs above 2^53 (nanosecond

@@ -84,8 +84,7 @@ object Hybrid {
     val idf = dfreq
       .join(broadcast(qtoks), "tok")
       .join(broadcast(totals))
-      .withColumn("idf4",
-        floor((col("n_docs") - col("df") + 0.5) / (col("df") + 0.5) * 10000 + 0.5).cast("long"))
+      .withColumn("idf4", Num.idf4(col("n_docs"), col("df")))
       .select("tok", "idf4")
     val lexScored = tf
       .join(broadcast(idf), "tok")
@@ -94,11 +93,7 @@ object Hybrid {
       .join(broadcast(qdoc))
       .filter(col("doc_id") =!= col("q_doc"))
       .withColumn("score4",
-        floor(
-          (col("idf4") * 22L * col("tf") * col("t_tok")).cast("double")
-            / (lit(10L) * col("tf") * col("t_tok") + lit(3L) * col("t_tok")
-                + lit(9L) * col("dl") * col("n_docs")).cast("double")
-            + 0.5).cast("long"))
+        Num.bm25Score4(col("idf4"), col("tf"), col("dl"), col("n_docs"), col("t_tok")))
       .groupBy("doc_id")
       .agg(sum("score4").as("s4"))
     lexScored

@@ -23,16 +23,34 @@ class HostLoadSpec extends AnyFunSuite {
   }
 
   test("externalCpuFrac: self-only burn reports ~zero external share") {
+    // The share itself, on synthetic snapshots: other processes' load
+    // on the host must not decide this test.
+    val n = Runtime.getRuntime.availableProcessors().toDouble
+    assert(HostLoad.externalCpuFrac((1000L, 200L), (1300L, 500L), 2.0) == 0.0)
+    assert(HostLoad.externalCpuFrac((1000L, 200L), (1400L, 500L), 2.0) == 100.0 / (n * 2.0 * 100.0))
+
+    // The probes see a real self burn: 300 ms of this thread's CPU time,
+    // the same work however busy the host is.
+    val mx = java.lang.management.ManagementFactory.getThreadMXBean
+    assert(mx.isCurrentThreadCpuTimeSupported)
     val before = HostLoad.cpuJiffies()
-    val t0 = System.nanoTime()
+    val cpu0 = mx.getCurrentThreadCpuTime
+    val deadline = System.nanoTime() + 60e9.toLong
     var h = 1L
-    while (System.nanoTime() - t0 < 300e6) { h = h * 6364136223846793005L + 1 }
+    while (mx.getCurrentThreadCpuTime - cpu0 < 300e6 && System.nanoTime() < deadline) {
+      var i = 0
+      while (i < 100000) { h = h * 6364136223846793005L + 1; i += 1 }
+    }
     assert(h != 0)
-    val wall = (System.nanoTime() - t0) / 1e9
-    val frac = HostLoad.externalCpuFrac(before, HostLoad.cpuJiffies(), wall)
-    // other test threads / JVM background can contribute a little, but
-    // a single-thread self-burn must not read as heavy external load
-    assert(frac >= 0.0 && frac < 0.5, s"frac=$frac")
+    assert(mx.getCurrentThreadCpuTime - cpu0 >= 300e6, "burn did not finish in 60 s")
+    val after = HostLoad.cpuJiffies()
+    val self = after._2 - before._2
+    val busy = after._1 - before._1
+    // USER_HZ = 100: 300 ms is 30 jiffies; tick sampling may drop a few
+    assert(self >= 25, s"self jiffies=$self")
+    // the host's busy jiffies include this process's; the two files are
+    // not read at the same instant, so allow a few jiffies of skew
+    assert(busy >= self - 5, s"busy=$busy self=$self")
   }
 
   test("externalCpuFrac flags sentinel on unreadable snapshots") {

@@ -42,6 +42,40 @@ class RangeJoinRewriteSpec extends SparkSpec {
     } finally spark.conf.unset("spark.sql.optimizer.excludedRules")
   }
 
+  // q_range_join's shape: a user key beside the ±W pair.
+  private def keyedRangeJoin() = {
+    val a = Tables.events(spark, sfDir)
+      .filter(col("event_type") === "error")
+      .select(col("event_id").as("a_id"), col("user_id").as("a_user"), unix_micros(col("ts")).as("a_ts"))
+    val b = Tables.events(spark, sfDir)
+      .select(col("event_id").as("b_id"), col("user_id").as("b_user"), unix_micros(col("ts")).as("b_ts"))
+    a.join(b, col("a_user") === col("b_user") && col("b_id") =!= col("a_id") &&
+        col("b_ts") >= col("a_ts") - W && col("b_ts") <= col("a_ts") + W)
+      .groupBy("a_id").agg(count(lit(1)).as("n"))
+  }
+
+  test("keyed range join is bucketed beside its equi key, rows unchanged") {
+    val df = keyedRangeJoin()
+    assert(df.queryExecution.optimizedPlan.toString.contains("__graft_range_bucket"),
+      s"keyed range join not rewritten:\n${df.queryExecution.optimizedPlan}")
+    val keys = df.queryExecution.optimizedPlan.collect {
+      case org.apache.spark.sql.catalyst.planning.ExtractEquiJoinKeys(_, lk, rk, _, _, _, _, _) =>
+        (lk ++ rk).flatMap(_.references.map(_.name))
+    }
+    assert(keys.size == 1, s"expected one equi-join, got $keys")
+    assert(keys.head.contains("a_user") && keys.head.contains("b_user"), s"user key lost: $keys")
+    assert(keys.head.exists(_.startsWith("__graft_range_bucket")), s"bucket key missing: $keys")
+
+    val actual = df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    spark.conf.set("spark.sql.optimizer.excludedRules", graft.plans.RangeJoinRewrite.ruleName)
+    try {
+      val baseline = keyedRangeJoin()
+      assert(!baseline.queryExecution.optimizedPlan.toString.contains("__graft_range_bucket"))
+      val expected = baseline.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      assert(actual.nonEmpty && actual == expected)
+    } finally spark.conf.unset("spark.sql.optimizer.excludedRules")
+  }
+
   test("ordinary equi-joins are left untouched") {
     val joined = Tables.customer(spark, sfDir)
       .join(Tables.orders(spark, sfDir), col("c_custkey") === col("o_custkey"))
