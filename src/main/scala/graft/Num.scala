@@ -29,6 +29,10 @@ object Num {
   def hashBucket(id: Column, salt: Long, m: Long): Column =
     (((id % 1000003L) * 1315423911L + salt) % 1000000007L % m).cast("long")
 
+  /** `hashBucket` as DuckDB SQL over the id expression `id`, for oracle strings. */
+  def hashBucketSql(id: String, salt: Long, m: Long): String =
+    s"(($id % 1000003) * 1315423911 + $salt) % 1000000007 % $m"
+
   /** Linearized idf ×10⁴ as an exact long, floor((N − df + ½)/(df + ½)·10⁴ + ½):
     * the rational form of BM25's idf, because ln differs across libms
     * (see `TextFunctions.tfidfSearch`).

@@ -1,6 +1,6 @@
 package graft.dedup
 
-import graft.Tables
+import graft.{Query, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -457,4 +457,71 @@ object Clusters {
       .select(col("cluster_id"), col("doc_id").as("keep_doc"), col("mean_rank"))
       .orderBy("cluster_id")
   }
+
+  /** Shared recursive-closure CTEs (DuckDB): 3-gram shingles → >= 0.8
+    * Jaccard pairs → undirected edges → `walk` = transitive reachability
+    * from every doc. Used by the clustering oracles below and by the
+    * `Splits` leakage-safe-split and `CurationRun` funnel oracles.
+    */
+  private[graft] lazy val ClusterWalkCtes =
+    """tok AS (
+      |  SELECT doc_id, unnest(string_split(text, ' ')) AS w,
+      |         generate_subscripts(string_split(text, ' '), 1) AS i
+      |  FROM documents
+      |), sh AS (
+      |  SELECT DISTINCT t1.doc_id, t1.w || ' ' || t2.w || ' ' || t3.w AS sg
+      |  FROM tok t1
+      |  JOIN tok t2 ON t1.doc_id = t2.doc_id AND t2.i = t1.i + 1
+      |  JOIN tok t3 ON t1.doc_id = t3.doc_id AND t3.i = t1.i + 2
+      |), cand AS (
+      |  SELECT x.doc_id AS a, y.doc_id AS b, count(*) AS inter
+      |  FROM sh x JOIN sh y ON x.sg = y.sg AND x.doc_id < y.doc_id
+      |  GROUP BY 1, 2
+      |), sizes AS (
+      |  SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id
+      |), pairs AS (
+      |  SELECT c.a, c.b
+      |  FROM cand c
+      |  JOIN sizes sa ON c.a = sa.doc_id
+      |  JOIN sizes sb ON c.b = sb.doc_id
+      |  WHERE c.inter * 1.0 / (sa.n + sb.n - c.inter) >= 0.8
+      |), edges AS (
+      |  SELECT a AS src, b AS dst FROM pairs
+      |  UNION ALL
+      |  SELECT b, a FROM pairs
+      |), walk(id, r) AS (
+      |  SELECT doc_id, doc_id FROM documents
+      |  UNION
+      |  SELECT w.id, e.dst FROM walk w JOIN edges e ON w.r = e.src
+      |)""".stripMargin
+
+  val queries: Seq[Query] = Seq(
+    // Transitive closure over the same >= 0.8 Jaccard edge set via a
+    // recursive CTE: min reachable doc_id = cluster id.
+    Query("q_dedup_clusters", (s, d) => dedupClusters(s, d),
+      s"""WITH RECURSIVE $ClusterWalkCtes
+        |SELECT id AS doc_id, min(r) AS cluster_id, (id = min(r)) AS is_keeper
+        |FROM walk GROUP BY id ORDER BY doc_id""".stripMargin),
+    // The incremental maintainer is held to the FULL-RECOMPUTE answer:
+    // identical oracle to q_dedup_clusters — merging standing components
+    // along batch-incident edges must reproduce corpus-wide CC exactly.
+    Query("q_cluster_delta", (s, d) => clusterDelta(s, d),
+      s"""WITH RECURSIVE $ClusterWalkCtes
+        |SELECT id AS doc_id, min(r) AS cluster_id, (id = min(r)) AS is_keeper
+        |FROM walk GROUP BY id ORDER BY doc_id""".stripMargin),
+    // Same closure joined to the freq-rank score: per cluster the
+    // winner is argmin (mean_rank, doc_id) — row_number in both engines
+    Query("q_dedup_keep_best", (s, d) => keepBest(s, d),
+      s"""WITH RECURSIVE $ClusterWalkCtes, cl AS (
+        |  SELECT id AS doc_id, min(r) AS cluster_id FROM walk GROUP BY id
+        |), fr AS (
+        |${graft.functions.QualityFilters.FreqRankSql}
+        |), ranked AS (
+        |  SELECT cl.cluster_id, f.doc_id, f.mean_rank,
+        |    row_number() OVER (PARTITION BY cl.cluster_id ORDER BY f.mean_rank ASC, f.doc_id ASC) AS rn
+        |  FROM cl JOIN fr f ON cl.doc_id = f.doc_id
+        |)
+        |SELECT cluster_id, doc_id AS keep_doc, mean_rank
+        |FROM ranked WHERE rn = 1 ORDER BY cluster_id""".stripMargin)
+  )
 }

@@ -1,6 +1,6 @@
 package graft.dedup
 
-import graft.{Num, Tables}
+import graft.{Num, Query, Tables}
 import graft.Staging.staged
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -860,6 +860,8 @@ object Dedup {
     // (r13); a computed one comes back staged for its two reads (the
     // prefix build and the exact verify). The prefix stays staged in
     // both modes: its consumers self-join or filter it twice per query.
+    // A computed prefix comes back staged already, and `staged` hands
+    // it back as is.
     val sh = publishedShingleIndex(spark, dir)
     val prefix = staged(
       graft.sources.Artifacts.publishedOrCompute(
@@ -977,4 +979,170 @@ object Dedup {
           .as("contamination_rate"))
       .orderBy("source")
   }
+
+  private lazy val NgramJaccardSql =
+    """WITH tok AS (
+      |  SELECT doc_id, unnest(string_split(text, ' ')) AS w,
+      |         generate_subscripts(string_split(text, ' '), 1) AS i
+      |  FROM documents
+      |), sh AS (
+      |  SELECT DISTINCT t1.doc_id, t1.w || ' ' || t2.w || ' ' || t3.w AS sg
+      |  FROM tok t1
+      |  JOIN tok t2 ON t1.doc_id = t2.doc_id AND t2.i = t1.i + 1
+      |  JOIN tok t3 ON t1.doc_id = t3.doc_id AND t3.i = t1.i + 2
+      |), pairs AS (
+      |  SELECT x.doc_id AS a, y.doc_id AS b, count(*) AS inter
+      |  FROM sh x JOIN sh y ON x.sg = y.sg AND x.doc_id < y.doc_id
+      |  GROUP BY 1, 2
+      |), sizes AS (
+      |  SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id
+      |)
+      |SELECT p.a, p.b, floor(p.inter * 1.0 / (sa.n + sb.n - p.inter) * 10000 + 0.5) / 10000 AS jac
+      |FROM pairs p
+      |JOIN sizes sa ON p.a = sa.doc_id
+      |JOIN sizes sb ON p.b = sb.doc_id
+      |WHERE p.inter * 1.0 / (sa.n + sb.n - p.inter) >= 0.8
+      |ORDER BY a, b""".stripMargin
+
+  /** Shared by q_decontaminate and q_decontaminate_bloom: the bloom
+    * pre-filter has no false negatives and exact-confirms candidates, so
+    * both queries have the SAME exact output.
+    */
+  private lazy val DecontamSql =
+    """WITH t AS (
+      |  SELECT doc_id, string_split(text, ' ') AS tk FROM documents
+      |), s AS (
+      |  SELECT doc_id, unnest(range(1, len(tk) - 6)) AS i, tk FROM t WHERE len(tk) >= 8
+      |), sh AS (
+      |  SELECT DISTINCT doc_id, array_to_string(tk[i : i + 7], ' ') AS sg FROM s
+      |), ev AS (
+      |  SELECT DISTINCT sg FROM sh WHERE doc_id % 20 = 0
+      |), hits AS (
+      |  SELECT sh.doc_id, count(*) AS n_overlap
+      |  FROM sh JOIN ev USING (sg)
+      |  WHERE sh.doc_id % 20 != 0
+      |  GROUP BY sh.doc_id
+      |)
+      |SELECT d.doc_id,
+      |  CAST(coalesce(h.n_overlap, 0) AS BIGINT) AS n_overlap,
+      |  coalesce(h.n_overlap, 0) > 0 AS contaminated
+      |FROM documents d LEFT JOIN hits h ON d.doc_id = h.doc_id
+      |WHERE d.doc_id % 20 != 0
+      |ORDER BY d.doc_id""".stripMargin
+
+  val queries: Seq[Query] = Seq(
+    // The exact dedup family is SQL-matched; the MinHash/SimHash
+    // variants below replay Spark's seeded XXH64 (MinHashOracle).
+    Query("q_dedup_exact", (s, d) => exact(s, d),
+      """SELECT min(doc_id) AS keep_id, count(*) AS n_copies
+        |FROM documents GROUP BY text ORDER BY keep_id""".stripMargin),
+    Query("q_dedup_ngram_jaccard", (s, d) => ngramJaccard(s, d), NgramJaccardSql),
+    // prefix-filtered variant is LOSSLESS — identical oracle.
+    Query("q_dedup_jaccard_prefix", (s, d) => jaccardPrefix(s, d), NgramJaccardSql),
+    // One-sided containment: same shingle CTEs, ORDERED pairs (<>), the
+    // divisor is the contained side's set size only. The one-sided
+    // prefix + positional pruning is lossless, so the oracle is the
+    // full-index derivation.
+    Query("q_dedup_containment", (s, d) => containment(s, d),
+      """WITH tok AS (
+        |  SELECT doc_id, unnest(string_split(text, ' ')) AS w,
+        |         generate_subscripts(string_split(text, ' '), 1) AS i
+        |  FROM documents
+        |), sh AS (
+        |  SELECT DISTINCT t1.doc_id, t1.w || ' ' || t2.w || ' ' || t3.w AS sg
+        |  FROM tok t1
+        |  JOIN tok t2 ON t1.doc_id = t2.doc_id AND t2.i = t1.i + 1
+        |  JOIN tok t3 ON t1.doc_id = t3.doc_id AND t3.i = t1.i + 2
+        |), pairs AS (
+        |  SELECT x.doc_id AS a, y.doc_id AS b, count(*) AS inter
+        |  FROM sh x JOIN sh y ON x.sg = y.sg AND x.doc_id <> y.doc_id
+        |  GROUP BY 1, 2
+        |), sizes AS (
+        |  SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id
+        |)
+        |SELECT p.a, p.b, floor(p.inter * 1.0 / sa.n * 10000 + 0.5) / 10000 AS cont
+        |FROM pairs p
+        |JOIN sizes sa ON p.a = sa.doc_id
+        |WHERE p.inter * 1.0 / sa.n >= 0.8
+        |ORDER BY a, b""".stripMargin),
+    // Near-dup links rolled up to unordered source pairs: the jaccard
+    // CTEs feed a two-way doc→source join and a least/greatest fold.
+    Query("q_source_overlap", (s, d) => sourceOverlap(s, d),
+      """WITH tok AS (
+        |  SELECT doc_id, unnest(string_split(text, ' ')) AS w,
+        |         generate_subscripts(string_split(text, ' '), 1) AS i
+        |  FROM documents
+        |), sh AS (
+        |  SELECT DISTINCT t1.doc_id, t1.w || ' ' || t2.w || ' ' || t3.w AS sg
+        |  FROM tok t1
+        |  JOIN tok t2 ON t1.doc_id = t2.doc_id AND t2.i = t1.i + 1
+        |  JOIN tok t3 ON t1.doc_id = t3.doc_id AND t3.i = t1.i + 2
+        |), pairs AS (
+        |  SELECT x.doc_id AS a, y.doc_id AS b, count(*) AS inter
+        |  FROM sh x JOIN sh y ON x.sg = y.sg AND x.doc_id < y.doc_id
+        |  GROUP BY 1, 2
+        |), sizes AS (
+        |  SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id
+        |), nd AS (
+        |  SELECT p.a, p.b FROM pairs p
+        |  JOIN sizes sa ON p.a = sa.doc_id
+        |  JOIN sizes sb ON p.b = sb.doc_id
+        |  WHERE p.inter * 1.0 / (sa.n + sb.n - p.inter) >= 0.8
+        |)
+        |SELECT least(da.source, db.source) AS src_a,
+        |       greatest(da.source, db.source) AS src_b,
+        |       count(*) AS n_links
+        |FROM nd
+        |JOIN documents da ON nd.a = da.doc_id
+        |JOIN documents db ON nd.b = db.doc_id
+        |GROUP BY 1, 2
+        |ORDER BY src_a, src_b""".stripMargin),
+    // MinHash-LSH (r14): full cross-engine replay of the seeded XXH64
+    // chain — band keys reproduced bit-for-bit in DuckDB HUGEINT mod
+    // 2^64 arithmetic, candidates from the replayed buckets, then the
+    // same exact >= tau verify. See MinHashOracle for the generator and
+    // its two loud-failure domain assumptions (ASCII, shingles < 32 B).
+    Query("q_dedup_minhash_lsh", (s, d) => minhashLsh(s, d), MinHashOracle.sql),
+    // SimHash (r14): same XXH64 string replay — every token occurrence
+    // votes, fingerprint bits from strictly-positive vote sums, block
+    // keys off the unsigned fingerprint, bit_count(xor) hamming verify.
+    Query("q_dedup_simhash", (s, d) => simhash(s, d), MinHashOracle.simhashSql),
+    Query("q_decontaminate", (s, d) => decontaminate(s, d), DecontamSql),
+    // the bloom pre-filter has no false negatives and candidates are
+    // exact-confirmed, so the OUTPUT is identical to plain decontaminate
+    // — the oracle is literally shared
+    Query("q_decontaminate_bloom", (s, d) => decontaminateBloom(s, d), DecontamSql),
+    Query("q_dedup_delta", (s, d) => dedupDelta(s, d), {
+      val where = "WHERE p.inter * 1.0 / (sa.n + sb.n - p.inter) >= 0.8"
+      val m = DeltaBatchMod
+      val r = DeltaBatchRem
+      val sql = NgramJaccardSql.replace(where, s"$where AND (p.a % $m = $r OR p.b % $m = $r)")
+      require(sql != NgramJaccardSql, "delta oracle WHERE anchor drifted out of NgramJaccardSql")
+      sql
+    }),
+    Query("q_embed_neardup", (s, d) => embedNeardup(s, d),
+      """WITH e AS (
+        |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
+        |  FROM embeddings
+        |), n AS (
+        |  SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS nrm FROM e
+        |)
+        |SELECT x.vec_id AS a, y.vec_id AS b,
+        |  floor(list_dot_product(x.v, y.v) / (x.nrm * y.nrm) * 10000 + 0.5) / 10000 AS cos
+        |FROM n x JOIN n y ON x.vec_id < y.vec_id
+        |WHERE list_dot_product(x.v, y.v) / (x.nrm * y.nrm) >= 0.4
+        |ORDER BY a, b""".stripMargin),
+    // source-grain rollup of the decontamination verdicts; rides the
+    // same CTE, so the report stays exactly consistent with the per-doc
+    // gate output
+    Query("q_contamination_report", (s, d) => contaminationReport(s, d),
+      s"""WITH v AS ($DecontamSql)
+         |SELECT d.source,
+         |  CAST(count(*) AS BIGINT) AS n_docs,
+         |  CAST(sum(CASE WHEN v.contaminated THEN 1 ELSE 0 END) AS BIGINT) AS n_contaminated,
+         |  CAST(sum(v.n_overlap) AS BIGINT) AS total_overlaps,
+         |  floor((CAST(sum(CASE WHEN v.contaminated THEN 1 ELSE 0 END) AS DOUBLE) / CAST(count(*) AS DOUBLE)) * 10000 + 0.5) / 10000 AS contamination_rate
+         |FROM v JOIN documents d USING (doc_id)
+         |GROUP BY d.source ORDER BY d.source""".stripMargin)
+  )
 }

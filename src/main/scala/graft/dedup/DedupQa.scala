@@ -1,6 +1,6 @@
 package graft.dedup
 
-import graft.Num
+import graft.{Num, Query}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -97,4 +97,11 @@ object DedupQa {
           .as("singleton_frac"))
       .orderBy("band")
   }
+
+  val queries: Seq[Query] = Seq(
+    // Recall gate and index health report share the SAME replay chain
+    // (pairCtes) as the LSH oracle, so the three cannot drift.
+    Query("q_dedup_recall", (s, d) => dedupRecall(s, d), MinHashOracle.recallSql),
+    Query("q_index_stats", (s, d) => indexStats(s, d), MinHashOracle.indexStatsSql)
+  )
 }

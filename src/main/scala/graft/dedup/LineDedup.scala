@@ -1,6 +1,6 @@
 package graft.dedup
 
-import graft.Tables
+import graft.{Query, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -102,4 +102,24 @@ object LineDedup {
         expr("array_join(graft_remove_covered(chunks, rm, 1), ' ')").as("clean_text"))
       .orderBy("doc_id")
   }
+
+  val queries: Seq[Query] = Seq(
+    Query("q_line_dedup", (s, d) => lineDedup(s, d),
+      """WITH w AS (
+        |  SELECT doc_id, unnest(string_split(text, ' ')) AS w,
+        |         generate_subscripts(string_split(text, ' '), 1) AS i
+        |  FROM documents
+        |), l AS (
+        |  SELECT doc_id, (i - 1) // 10 AS line_no, string_agg(w, ' ' ORDER BY i) AS line
+        |  FROM w GROUP BY doc_id, (i - 1) // 10
+        |), f AS (
+        |  SELECT line, count(DISTINCT doc_id) AS df FROM l GROUP BY line
+        |)
+        |SELECT l.doc_id, count(*) AS n_lines,
+        |  count(CASE WHEN f.df >= 3 THEN 1 END) AS n_removed,
+        |  coalesce(string_agg(CASE WHEN f.df < 3 THEN l.line END, ' ' ORDER BY l.line_no), '') AS clean_text
+        |FROM l JOIN f USING (line)
+        |GROUP BY l.doc_id
+        |ORDER BY l.doc_id""".stripMargin)
+  )
 }

@@ -1,6 +1,6 @@
 package graft.dedup
 
-import graft.Tables
+import graft.{Query, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -131,4 +131,40 @@ object SubstrDedup {
         expr("array_join(clean, ' ')").as("clean_text"))
       .orderBy("doc_id")
   }
+
+  val queries: Seq[Query] = Seq(
+    // ExactSubstr-style: the oracle keys on gram STRINGS where the plan
+    // keys on xxhash64 longs — identical output modulo the documented
+    // 1e-10 collision trade. The engine's SubstrOccCap boilerplate
+    // exclusion (a window hash with > cap total occurrences drops out
+    // of removal — see SubstrDedup.SubstrOccCap) is replicated here as
+    // the count(*) <= cap HAVING term, so the oracle/engine contract
+    // holds UNCONDITIONALLY, not only on corpora where the cap is inert.
+    Query("q_substr_dedup", (s, d) => substrDedup(s, d),
+      s"""WITH t AS (
+        |  SELECT doc_id, string_split(text, ' ') AS w FROM documents
+        |), g AS (
+        |  SELECT doc_id, s, array_to_string(w[s + 1 : s + 8], ' ') AS gram
+        |  FROM (SELECT doc_id, w, unnest(range(0, greatest(len(w) - 7, 0))) AS s FROM t)
+        |), rep AS (
+        |  SELECT gram FROM g GROUP BY gram
+        |  HAVING count(DISTINCT doc_id) >= 2
+        |     AND count(*) <= $SubstrOccCap
+        |), cov AS (
+        |  SELECT doc_id, list_distinct(flatten(list(range(s, s + 8)))) AS covered
+        |  FROM g JOIN rep USING (gram) GROUP BY doc_id
+        |), fin AS (
+        |  SELECT t.doc_id, w, coalesce(cov.covered, CAST([] AS BIGINT[])) AS covered
+        |  FROM t LEFT JOIN cov USING (doc_id)
+        |)
+        |SELECT doc_id,
+        |  CAST(len(w) AS BIGINT) AS n_tokens,
+        |  CAST(len(w) - len(clean) AS BIGINT) AS n_removed,
+        |  coalesce(array_to_string(clean, ' '), '') AS clean_text
+        |FROM (
+        |  SELECT doc_id, w,
+        |    list_where(w, list_transform(range(0, len(w)), i -> NOT list_contains(covered, i))) AS clean
+        |  FROM fin
+        |) ORDER BY doc_id""".stripMargin)
+  )
 }

@@ -1,5 +1,6 @@
 package graft.functions
 
+import graft.Query
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -112,4 +113,12 @@ object BpeTrain {
       .map { case ((l, r), i) => (i.toLong, l, r) }
       .toDF("rank", "left_sym", "right_sym")
   }
+
+  val queries: Seq[Query] = Seq(
+    // r15: the training LOOP graduates from rows-only — the lexicon is
+    // bounded by contract, so the whole merge iteration replays as one
+    // recursive CTE carrying the lexicon as a single state row (exact
+    // argmax + tie-break + greedy merge semantics; see BpeTrainOracle).
+    Query("q_bpe_train", (s, d) => trainTable(s, d), BpeTrainOracle.oracleSql)
+  )
 }

@@ -1,6 +1,6 @@
 package graft.functions
 
-import graft.{Num, Tables}
+import graft.{Num, Query, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -127,4 +127,44 @@ object Dsir {
       .select("doc_id", "n_toks", "dsir_score", "keep")
       .orderBy("doc_id")
   }
+
+  val queries: Seq[Query] = Seq(
+    // DSIR as an exact-integer probability-ratio sigmoid: per-billion
+    // smoothed token rates p = (1e9*(cnt+1)) // total on each side,
+    // importance points = (1000*p_tgt) // (p_tgt + p_raw) - 500, tokens
+    // absent from BOTH floor-bounded tables carry no evidence (0). All
+    // int64 floor-divisions on positive operands — identical in both
+    // engines; per-doc exact BIGINT sum, one round4 division at the end
+    // (see Dsir.scala for why rank positions canNOT stand in here).
+    Query("q_dsir_select", (s, d) => dsirSelect(s, d),
+      s"""WITH tk AS (
+         |  SELECT doc_id, (lang = 'en' AND doc_id % 4 = 1) AS is_tgt,
+         |    unnest(string_split(text, ' ')) AS tok
+         |  FROM documents
+         |), ft AS (
+         |  SELECT tok, count(*) AS cnt_tgt FROM tk WHERE is_tgt GROUP BY tok
+         |  HAVING count(*) >= $FeatureMinCount
+         |), fr AS (
+         |  SELECT tok, count(*) AS cnt_raw FROM tk WHERE NOT is_tgt GROUP BY tok
+         |  HAVING count(*) >= $FeatureMinCount
+         |), tot AS (
+         |  SELECT sum(CASE WHEN is_tgt THEN 1 ELSE 0 END) AS total_tgt,
+         |    sum(CASE WHEN is_tgt THEN 0 ELSE 1 END) AS total_raw
+         |  FROM tk
+         |), s AS (
+         |  SELECT doc_id, count(*) AS n_toks,
+         |    sum(CASE WHEN cnt_tgt IS NULL AND cnt_raw IS NULL THEN 0
+         |      ELSE (1000 * ((1000000000 * (coalesce(cnt_tgt, 0) + 1)) // total_tgt))
+         |        // (((1000000000 * (coalesce(cnt_tgt, 0) + 1)) // total_tgt)
+         |           + ((1000000000 * (coalesce(cnt_raw, 0) + 1)) // total_raw)) - 500
+         |      END) AS pts_sum
+         |  FROM tk LEFT JOIN ft USING (tok) LEFT JOIN fr USING (tok) CROSS JOIN tot
+         |  WHERE NOT is_tgt GROUP BY doc_id
+         |)
+         |SELECT doc_id, n_toks,
+         |  floor(pts_sum * 1.0 / n_toks * 10000 + 0.5) / 10000 AS dsir_score,
+         |  (floor(pts_sum * 1.0 / n_toks * 10000 + 0.5) / 10000
+         |    >= $KeepMin) AS keep
+         |FROM s ORDER BY doc_id""".stripMargin)
+  )
 }

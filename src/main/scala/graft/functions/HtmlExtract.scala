@@ -1,6 +1,6 @@
 package graft.functions
 
-import graft.Tables
+import graft.{Query, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -79,4 +79,56 @@ object HtmlExtract {
       graft.Staging.spread(Tables.documents(spark, dir))
         .withColumn("text",
           extractText(plantHtml(col("doc_id"), col("text")))))
+
+  /** The planted page + extraction pipeline, DuckDB side — the same
+    * doc_id arithmetic as plantHtml / extractText, in the shared
+    * Java∩RE2 regex subset (no backrefs: one replace per block tag).
+    */
+  private lazy val HtmlPlantSql =
+    """'<html><head><title>Doc ' || CAST(doc_id AS VARCHAR) ||
+      |'</title><style>body{font-size:12px;}</style></head><body>' ||
+      |'<nav>home | about | section' || CAST(doc_id % 7 AS VARCHAR) || '</nav>' ||
+      |'<h1>Doc ' || CAST(doc_id AS VARCHAR) || '</h1>' ||
+      |'<p>' || text || '</p>' ||
+      |'<p>More about item ' || CAST(doc_id % 13 AS VARCHAR) || '.</p>' ||
+      |'<script>var x=' || CAST(doc_id % 97 AS VARCHAR) || ';</script>' ||
+      |'<footer>(c) 2026 example.com</footer></body></html>'""".stripMargin
+
+  private def htmlStripSql(c: String) =
+    raw"""trim(regexp_replace(regexp_replace(
+         |  regexp_replace(regexp_replace(regexp_replace(regexp_replace($c,
+         |    '<head[^>]*>.*?</head>', ' ', 'gs'),
+         |    '<script[^>]*>.*?</script>', ' ', 'gs'),
+         |    '<nav[^>]*>.*?</nav>', ' ', 'gs'),
+         |    '<footer[^>]*>.*?</footer>', ' ', 'gs'),
+         |  '<[^>]+>', ' ', 'g'), '\s+', ' ', 'g'))""".stripMargin
+
+  val queries: Seq[Query] = Seq(
+    Query("q_html_extract", (s, d) => htmlExtract(s, d),
+      s"""WITH h AS (
+         |  SELECT doc_id, $HtmlPlantSql AS html FROM documents
+         |)
+         |SELECT doc_id,
+         |  regexp_extract(html, '<title>(.*?)</title>', 1) AS title,
+         |  CAST(len(regexp_extract_all(html, '<[^>]+>')) AS BIGINT) AS n_tags,
+         |  ${htmlStripSql("html")} AS clean_text
+         |FROM h ORDER BY doc_id""".stripMargin),
+    // the composed pipeline front: plant -> extract -> Gopher gate ->
+    // rollup report, the same report query over extracted text
+    Query("q_html_corpus_report", (s, d) => htmlCorpusReport(s, d),
+      s"""WITH hdocs AS (
+         |  SELECT doc_id, lang, source,
+         |    ${htmlStripSql(HtmlPlantSql)} AS text
+         |  FROM documents
+         |), g AS (
+         |${QualityFilters.qualityGopherSqlOver("hdocs")}
+         |)
+         |SELECT coalesce(d.lang, 'ALL') AS lang, coalesce(d.source, 'ALL') AS source,
+         |  count(*) AS n_docs,
+         |  CAST(sum(g.n_words) AS BIGINT) AS total_words,
+         |  floor(avg(CAST(g.keep AS INT)) * 10000 + 0.5) / 10000 AS keep_rate
+         |FROM g JOIN hdocs d ON g.doc_id = d.doc_id
+         |GROUP BY ROLLUP(d.lang, d.source)
+         |ORDER BY lang, source""".stripMargin)
+  )
 }

@@ -1,6 +1,6 @@
 package graft.functions
 
-import graft.{Num, Tables}
+import graft.{Num, Query, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -174,6 +174,11 @@ object QualityFilters {
         col("pass_url") && col("pass_brace") && col("pass_lorem") && col("pass_badword"))
   }
 
+  /** `qualitySample`'s additive `Num.hashBucket` salt, read by the
+    * operator and its oracle.
+    */
+  val SampleSalt = 32452843L
+
   /** Quality-weighted sampling: keep probability scales with how many
     * Gopher rules a doc passes — clean docs survive whole, marginal
     * docs are downweighted, junk keeps a trace for auditability (the
@@ -197,7 +202,7 @@ object QualityFilters {
         // would make every downweighted doc satisfy bucket%100 < rate,
         // i.e. land in 'train' — samplers must thin independently of the
         // split and of each other.
-        .withColumn("bucket", Num.hashBucket(col("doc_id"), 32452843L, 1000L))
+        .withColumn("bucket", Num.hashBucket(col("doc_id"), SampleSalt, 1000L))
         .filter(col("bucket") < col("rate_pm"))
         .select(col("doc_id"), col("n_pass").cast("long").as("n_pass"), col("rate_pm"), col("bucket")))
 
@@ -515,4 +520,231 @@ object QualityFilters {
       .join(broadcast(calib.select("source", "score4", "cum")), Seq("source", "score4"))
       .join(broadcast(totals), "source")
   }
+
+  private[graft] lazy val FreqRankSql =
+    s"""WITH tk AS (
+       |  SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents
+       |), f AS (
+       |  SELECT tok, count(*) AS cnt FROM tk GROUP BY tok
+       |), r AS (
+       |  SELECT tok, dense_rank() OVER (ORDER BY cnt DESC) AS rnk FROM f
+       |), s AS (
+       |  SELECT doc_id, count(*) AS n_toks, sum(rnk) AS rank_sum
+       |  FROM tk JOIN r USING (tok) GROUP BY doc_id
+       |)
+       |SELECT doc_id, n_toks,
+       |  floor(rank_sum * 1.0 / n_toks * 10000 + 0.5) / 10000 AS mean_rank,
+       |  (floor(rank_sum * 1.0 / n_toks * 10000 + 0.5) / 10000
+       |    <= $FreqRankKeepMax) AS keep
+       |FROM s ORDER BY doc_id""".stripMargin
+
+  /** Shared calibration CTEs: freq-rank scores joined to source, the
+    * exact ×10000 integer score, per-(source, score4) cumulative counts
+    * (the empirical CDF), and source totals.
+    */
+  private[graft] lazy val CalibrateCtes =
+    s"""fr AS (
+       |$FreqRankSql
+       |), s AS (
+       |  SELECT f.doc_id, d.source, f.mean_rank,
+       |    CAST(floor(f.mean_rank * 10000 + 0.5) AS BIGINT) AS score4
+       |  FROM fr f JOIN documents d USING (doc_id)
+       |), c AS (
+       |  SELECT source, score4, count(*) AS cnt FROM s GROUP BY source, score4
+       |), cc AS (
+       |  SELECT source, score4, sum(cnt) OVER (PARTITION BY source ORDER BY score4
+       |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum FROM c
+       |), t AS (
+       |  SELECT source, count(*) AS n_source FROM s GROUP BY source
+       |)""".stripMargin
+
+  private[graft] lazy val QualityC4Sql =
+    raw"""WITH p AS (
+         |  SELECT doc_id,
+         |    'http://' ||
+         |      CASE WHEN doc_id % 13 = 0 THEN '${BadDomains.head}'
+         |           ELSE 'site' || CAST(doc_id % 97 AS VARCHAR) || '.example.com' END ||
+         |      '/page/' || CAST(doc_id AS VARCHAR) AS url,
+         |    text ||
+         |      CASE WHEN doc_id % 11 = 0 THEN ' function() { return 0 }' ELSE '' END ||
+         |      CASE WHEN doc_id % 7 = 0 THEN ' lorem ipsum dolor sit' ELSE '' END ||
+         |      CASE WHEN doc_id % 17 = 0 THEN ' ${BadWords.head}' ELSE '' END AS ptext
+         |  FROM documents
+         |), r AS (
+         |  SELECT doc_id, url, ptext,
+         |    regexp_extract(url, '^https?://([^/]+)', 1) AS domain
+         |  FROM p
+         |)
+         |SELECT doc_id, url, domain,
+         |  NOT (domain IN (${BadDomains.map(d => s"'$d'").mkString(", ")})) AS pass_url,
+         |  NOT contains(ptext, '{') AS pass_brace,
+         |  NOT contains(ptext, 'lorem ipsum') AS pass_lorem,
+         |  len(list_filter(string_split_regex(ptext, '\s+'),
+         |      t -> t IN (${BadWords.map(w => s"'$w'").mkString(", ")}))) = 0 AS pass_badword,
+         |  NOT (domain IN (${BadDomains.map(d => s"'$d'").mkString(", ")}))
+         |    AND NOT contains(ptext, '{')
+         |    AND NOT contains(ptext, 'lorem ipsum')
+         |    AND len(list_filter(string_split_regex(ptext, '\s+'),
+         |        t -> t IN (${BadWords.map(w => s"'$w'").mkString(", ")}))) = 0 AS keep
+         |FROM r ORDER BY doc_id""".stripMargin
+
+  private[graft] lazy val QualityGopherSql = qualityGopherSqlOver("documents")
+
+  /** The Gopher-gate oracle over any (doc_id, text) relation `src` —
+    * "documents" for the declared query, the html-extraction CTE for
+    * the composed report variant.
+    */
+  private[graft] def qualityGopherSqlOver(src: String) =
+      raw"""WITH t AS (
+           |  SELECT doc_id, text, string_split_regex(text, '\s+') AS tk FROM $src
+           |), b AS (
+           |  SELECT doc_id,
+           |    len(tk) AS n_words,
+           |    len(list_filter(tk, x -> x IN (${TextFunctions.stopListSql}))) AS stop_hits,
+           |    floor(length(regexp_replace(text, '\s', '', 'g')) / len(tk) * 10000 + 0.5) / 10000 AS mean_word_len
+           |  FROM t
+           |), w AS (
+           |  SELECT doc_id, unnest(string_split_regex(text, '\s+')) AS w FROM $src
+           |), tw AS (
+           |  SELECT doc_id, max(c) AS top_word_n FROM (
+           |    SELECT doc_id, w, count(*) AS c FROM w GROUP BY doc_id, w
+           |  ) GROUP BY doc_id
+           |)
+           |SELECT b.doc_id, b.n_words, b.mean_word_len, b.stop_hits, tw.top_word_n,
+           |  floor(tw.top_word_n / b.n_words * 10000 + 0.5) / 10000 AS top_word_ratio,
+           |  b.n_words >= 50 AND b.n_words <= 100000 AS pass_wc,
+           |  b.mean_word_len >= 3.0 AND b.mean_word_len <= 10.0 AS pass_mwl,
+           |  b.stop_hits >= 2 AS pass_stop,
+           |  floor(tw.top_word_n / b.n_words * 10000 + 0.5) / 10000 <= 0.2 AS pass_rep,
+           |  (b.n_words >= 50 AND b.n_words <= 100000)
+           |    AND (b.mean_word_len >= 3.0 AND b.mean_word_len <= 10.0)
+           |    AND b.stop_hits >= 2
+           |    AND floor(tw.top_word_n / b.n_words * 10000 + 0.5) / 10000 <= 0.2 AS keep
+           |FROM b JOIN tw USING (doc_id)
+           |ORDER BY b.doc_id""".stripMargin
+
+  private lazy val QualitySampleSql =
+    s"""WITH g AS (
+       |$QualityGopherSql
+       |), p AS (
+       |  SELECT doc_id,
+       |    CAST(pass_wc AS INT) + CAST(pass_mwl AS INT) + CAST(pass_stop AS INT) + CAST(pass_rep AS INT) AS n_pass
+       |  FROM g
+       |), r AS (
+       |  SELECT doc_id, CAST(n_pass AS BIGINT) AS n_pass,
+       |    CAST(CASE n_pass WHEN 4 THEN 1000 WHEN 3 THEN 500 WHEN 2 THEN 200 ELSE 50 END AS BIGINT) AS rate_pm,
+       |    CAST(${Num.hashBucketSql("doc_id", SampleSalt, 1000)} AS BIGINT) AS bucket
+       |  FROM p
+       |)
+       |SELECT doc_id, n_pass, rate_pm, bucket FROM r
+       |WHERE bucket < rate_pm
+       |ORDER BY doc_id""".stripMargin
+
+  val queries: Seq[Query] = Seq(
+    Query("q_pii_redact", (s, d) => piiRedact(s, d),
+      raw"""WITH p AS (
+           |  SELECT doc_id,
+           |    text || ' contact user' || CAST(doc_id AS VARCHAR) || '@mail.example.com or call 555-' ||
+           |      lpad(CAST(doc_id % 1000 AS VARCHAR), 3, '0') || '-' || lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0') ||
+           |      ' from 10.' || CAST(doc_id % 256 AS VARCHAR) || '.0.1' AS pii_text
+           |  FROM documents
+           |), r AS (
+           |  SELECT doc_id, pii_text,
+           |    regexp_replace(
+           |      regexp_replace(
+           |        regexp_replace(pii_text, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
+           |        '\b\d{3}-\d{3}-\d{4}\b', '<PHONE>', 'g'),
+           |      '\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b', '<IP>', 'g') AS clean_text
+           |  FROM p
+           |)
+           |SELECT doc_id,
+           |  len(regexp_extract_all(pii_text, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}')) AS n_emails,
+           |  len(regexp_extract_all(pii_text, '\b\d{3}-\d{3}-\d{4}\b')) AS n_phones,
+           |  len(regexp_extract_all(pii_text, '\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b')) AS n_ips,
+           |  clean_text
+           |FROM r ORDER BY doc_id""".stripMargin),
+    Query("q_quality_gopher", (s, d) => gopherQuality(s, d), QualityGopherSql),
+    Query("q_quality_c4", (s, d) => c4Quality(s, d), QualityC4Sql),
+    Query("q_quality_sample", (s, d) => qualitySample(s, d), QualitySampleSql),
+    Query("q_corpus_report", (s, d) => corpusReport(s, d),
+      s"""WITH g AS (
+         |$QualityGopherSql
+         |)
+         |SELECT coalesce(d.lang, 'ALL') AS lang, coalesce(d.source, 'ALL') AS source,
+         |  count(*) AS n_docs,
+         |  CAST(sum(g.n_words) AS BIGINT) AS total_words,
+         |  floor(avg(CAST(g.keep AS INT)) * 10000 + 0.5) / 10000 AS keep_rate
+         |FROM g JOIN documents d ON g.doc_id = d.doc_id
+         |GROUP BY ROLLUP(d.lang, d.source)
+         |ORDER BY lang, source""".stripMargin),
+    // same exactness scheme as q_quality_freqrank: integer dense-ranks,
+    // exact BIGINT sums, one final round4 division; the bounded table is
+    // a count-threshold (no top-K tie-break needed), OOV rank is
+    // (#distinct kept counts)+1 in both engines
+    Query("q_quality_bigramlm", (s, d) => bigramLmQuality(s, d),
+      s"""WITH tk AS (
+         |  SELECT doc_id, string_split(text, ' ') AS tk FROM documents
+         |), bg AS (
+         |  SELECT doc_id, unnest(list_transform(range(1, len(tk)), i -> tk[i] || ' ' || tk[i+1])) AS bg
+         |  FROM tk
+         |), f AS (
+         |  SELECT bg, count(*) AS cnt FROM bg GROUP BY bg
+         |  HAVING count(*) >= $BigramMinCount
+         |), r AS (
+         |  SELECT bg, dense_rank() OVER (ORDER BY cnt DESC) AS rnk FROM f
+         |), m AS (
+         |  SELECT count(DISTINCT cnt) + 1 AS oov_rnk FROM f
+         |), s AS (
+         |  SELECT doc_id, count(*) AS n_bigrams, sum(coalesce(r.rnk, m.oov_rnk)) AS rank_sum
+         |  FROM bg LEFT JOIN r USING (bg) CROSS JOIN m GROUP BY doc_id
+         |)
+         |SELECT doc_id, n_bigrams,
+         |  floor(rank_sum * 1.0 / n_bigrams * 10000 + 0.5) / 10000 AS mean_rank,
+         |  (floor(rank_sum * 1.0 / n_bigrams * 10000 + 0.5) / 10000
+         |    <= $BigramKeepMax) AS keep
+         |FROM s ORDER BY doc_id""".stripMargin),
+    // dense_rank over counts is a pure integer ordering (ties share a
+    // rank), the per-doc sum is an exact BIGINT, and both engines
+    // divide the same exact integers — fully hash-comparable.
+    Query("q_quality_freqrank", (s, d) => freqRankQuality(s, d), FreqRankSql),
+    // calibration: per-source keep of the best 60.0% by freq-rank
+    // score, tie groups in-or-out together — pure integer band logic
+    // over the exact ×10000 score (floor(x*10000+0.5) is exact where a
+    // bare double→int cast rounds DIFFERENTLY across engines)
+    Query("q_quality_calibrate", (s, d) => calibratedQuality(s, d),
+      s"""WITH $CalibrateCtes
+         |SELECT s.doc_id, s.source, s.mean_rank,
+         |  (cc.cum * 1000 <= t.n_source * $CalibrateKeepPermille) AS keep
+         |FROM s JOIN cc USING (source, score4) JOIN t USING (source)
+         |ORDER BY s.doc_id""".stripMargin),
+    // same per-source empirical CDF, banded into thirds instead of gated
+    Query("q_quality_tiers", (s, d) => scoreTiers(s, d),
+      s"""WITH $CalibrateCtes
+         |SELECT s.doc_id, s.source, s.mean_rank,
+         |  CASE WHEN cc.cum * 3 <= t.n_source THEN 'head'
+         |       WHEN cc.cum * 3 <= t.n_source * 2 THEN 'middle'
+         |       ELSE 'tail' END AS tier
+         |FROM s JOIN cc USING (source, score4) JOIN t USING (source)
+         |ORDER BY s.doc_id""".stripMargin),
+    // curriculum: global rank in (tier, salted shuffle key, doc_id)
+    // order — head first, tail last, tiers internally shuffled; the
+    // shuffle key is the same squared-multiplier construction as
+    // q_doc_shuffle with its own salt
+    Query("q_curriculum_order", (s, d) => curriculumOrder(s, d),
+      s"""WITH $CalibrateCtes, ti AS (
+         |  SELECT s.doc_id,
+         |    CASE WHEN cc.cum * 3 <= t.n_source THEN 0
+         |         WHEN cc.cum * 3 <= t.n_source * 2 THEN 1
+         |         ELSE 2 END AS tier_rank
+         |  FROM s JOIN cc USING (source, score4) JOIN t USING (source)
+         |), kk AS (
+         |  SELECT doc_id, tier_rank,
+         |    ((doc_id % 1000003) * ${(1315423911L + 2 * CurriculumSalt) % 1000000007L}) % 1000000007 AS k1
+         |  FROM ti
+         |)
+         |SELECT doc_id,
+         |  CASE tier_rank WHEN 0 THEN 'head' WHEN 1 THEN 'middle' ELSE 'tail' END AS tier,
+         |  CAST(row_number() OVER (ORDER BY tier_rank, (k1 * k1) % 1000000007, doc_id) - 1 AS BIGINT) AS pos
+         |FROM kk ORDER BY doc_id""".stripMargin)
+  )
 }

@@ -1,6 +1,6 @@
 package graft.functions
 
-import graft.{Num, Tables}
+import graft.{Num, Query, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -505,4 +505,192 @@ object TextFunctions {
   def stopListSql: String = inList(Stopwords)
   def markerListSql(lang: String): String =
     inList(LangMarkers.toMap.apply(lang))
+
+  val queries: Seq[Query] = Seq(
+    Query("q_token_count", (s, d) => tokenCount(s, d),
+      raw"""SELECT doc_id, len(string_split_regex(text, '\s+')) AS n_tokens
+           |FROM documents ORDER BY doc_id""".stripMargin),
+    Query("q_token_count_bpe", (s, d) => tokenCountBpe(s, d),
+      raw"""SELECT doc_id,
+           |  len(string_split_regex(text, '\s+')) AS n_tokens_ws,
+           |  len(regexp_extract_all(text, ' ?[A-Za-z]+| ?[0-9]+| ?[^A-Za-z0-9 ]+')) AS n_tokens_bpe
+           |FROM documents ORDER BY doc_id""".stripMargin),
+    Query("q_doc_repetition", (s, d) => docRepetition(s, d),
+      """WITH t AS (
+        |  SELECT doc_id, string_split(text, ' ') AS tk FROM documents
+        |), g AS (
+        |  SELECT doc_id,
+        |    list_transform(range(1, len(tk) - 1), i -> array_to_string(tk[i : i + 2], ' ')) AS grams
+        |  FROM t WHERE len(tk) >= 3
+        |)
+        |SELECT doc_id,
+        |  CAST(len(grams) AS BIGINT) AS n_grams,
+        |  CAST(len(list_distinct(grams)) AS BIGINT) AS n_distinct,
+        |  floor((1.0 - len(list_distinct(grams)) * 1.0 / len(grams)) * 10000 + 0.5) / 10000 AS dup_ratio
+        |FROM g ORDER BY doc_id""".stripMargin),
+    Query("q_tfidf_search", (s, d) => tfidfSearch(s, d),
+      raw"""WITH toks AS (
+           |  SELECT doc_id, unnest(string_split_regex(text, '\s+')) AS tok FROM documents
+           |), tf AS (
+           |  SELECT doc_id, tok, count(*) AS tf FROM toks GROUP BY 1, 2
+           |), dfreq AS (
+           |  SELECT tok, count(*) AS df FROM tf GROUP BY 1
+           |), total AS (
+           |  SELECT count(*) AS n_docs FROM documents
+           |), q AS (
+           |  SELECT tok, df FROM dfreq ORDER BY df DESC, tok LIMIT 3
+           |), idf AS (
+           |  SELECT tok, CAST(floor((n_docs - df + 0.5) / (df + 0.5) * 10000 + 0.5) AS BIGINT) AS idf4
+           |  FROM q, total
+           |)
+           |SELECT tf.doc_id, CAST(sum(tf.tf * idf.idf4) AS DOUBLE) / 10000.0 AS score
+           |FROM tf JOIN idf USING (tok)
+           |GROUP BY tf.doc_id
+           |ORDER BY score DESC, doc_id LIMIT 50""".stripMargin),
+    // BM25 with k1=6/5, b=3/4 and exact-rational avgdl=T/N: per-term
+    // score collapses to ONE int64/int64 division (IEEE-identical both
+    // engines), floor(q+0.5)-quantized to 4dp so doc totals are exact
+    // integer sums in any partition order
+    Query("q_bm25_search", (s, d) => bm25Search(s, d),
+      raw"""WITH toks AS (
+           |  SELECT doc_id, unnest(string_split_regex(text, '\s+')) AS tok FROM documents
+           |), tf AS (
+           |  SELECT doc_id, tok, count(*) AS tf FROM toks GROUP BY 1, 2
+           |), dl AS (
+           |  SELECT doc_id, sum(tf) AS dl FROM tf GROUP BY doc_id
+           |), totals AS (
+           |  SELECT count(*) AS n_docs, sum(dl) AS t_tok FROM dl
+           |), dfreq AS (
+           |  SELECT tok, count(*) AS df FROM tf GROUP BY 1
+           |), q AS (
+           |  SELECT tok, df FROM dfreq ORDER BY df DESC, tok LIMIT 3
+           |), idf AS (
+           |  SELECT tok, CAST(floor((n_docs - df + 0.5) / (df + 0.5) * 10000 + 0.5) AS BIGINT) AS idf4
+           |  FROM q, totals
+           |), s AS (
+           |  SELECT tf.doc_id,
+           |    CAST(floor(CAST(idf.idf4 * 22 * tf.tf * t.t_tok AS DOUBLE)
+           |      / CAST(10 * tf.tf * t.t_tok + 3 * t.t_tok + 9 * dl.dl * t.n_docs AS DOUBLE)
+           |      + 0.5) AS BIGINT) AS score4
+           |  FROM tf JOIN idf USING (tok) JOIN dl USING (doc_id), totals t
+           |)
+           |SELECT doc_id, CAST(sum(score4) AS DOUBLE) / 10000.0 AS score
+           |FROM s GROUP BY doc_id
+           |ORDER BY score DESC, doc_id LIMIT 50""".stripMargin),
+    Query("q_tokenize_bpe", (s, d) => tokenizeBpe(s, d), Bpe.oracleSql),
+    Query("q_text_quality", (s, d) => textQuality(s, d),
+      raw"""WITH t AS (
+           |  SELECT doc_id, text, string_split_regex(text, '\s+') AS tk FROM documents
+           |), b AS (
+           |  SELECT doc_id,
+           |    len(tk) AS n_tokens,
+           |    len(list_filter(tk, x -> x IN ($stopListSql))) AS stop_hits,
+           |    length(text) AS n_chars
+           |  FROM t
+           |)
+           |SELECT doc_id, n_tokens, stop_hits,
+           |  floor(stop_hits / n_tokens * 10000 + 0.5) / 10000 AS stop_ratio,
+           |  floor((n_chars - n_tokens + 1) / n_tokens * 10000 + 0.5) / 10000 AS avg_token_chars,
+           |  floor((0.4 * least(n_tokens / 50.0, 1.0)
+           |       + 0.4 * (1.0 - stop_hits / n_tokens)
+           |       + 0.2 * least((n_chars - n_tokens + 1) / n_tokens / 5.0, 1.0)) * 10000 + 0.5) / 10000 AS quality
+           |FROM b ORDER BY doc_id""".stripMargin),
+    Query("q_lang_id", (s, d) => langId(s, d),
+      raw"""WITH t AS (
+           |  SELECT doc_id, string_split_regex(text, '\s+') AS tk FROM documents
+           |), h AS (
+           |  SELECT doc_id,
+           |    len(list_filter(tk, x -> x IN (${markerListSql("de")}))) AS h_de,
+           |    len(list_filter(tk, x -> x IN (${markerListSql("en")}))) AS h_en,
+           |    len(list_filter(tk, x -> x IN (${markerListSql("es")}))) AS h_es,
+           |    len(list_filter(tk, x -> x IN (${markerListSql("fr")}))) AS h_fr,
+           |    len(list_filter(tk, x -> x IN (${markerListSql("zh")}))) AS h_zh
+           |  FROM t
+           |)
+           |SELECT doc_id,
+           |  CASE
+           |    WHEN h_de >= h_en AND h_de >= h_es AND h_de >= h_fr AND h_de >= h_zh THEN 'de'
+           |    WHEN h_en >= h_de AND h_en >= h_es AND h_en >= h_fr AND h_en >= h_zh THEN 'en'
+           |    WHEN h_es >= h_de AND h_es >= h_en AND h_es >= h_fr AND h_es >= h_zh THEN 'es'
+           |    WHEN h_fr >= h_de AND h_fr >= h_en AND h_fr >= h_es AND h_fr >= h_zh THEN 'fr'
+           |    ELSE 'zh'
+           |  END AS pred_lang,
+           |  greatest(h_de, h_en, h_es, h_fr, h_zh) AS n_hits
+           |FROM h ORDER BY doc_id""".stripMargin),
+    // graft_fingerprint replayed byte-by-byte: h = h*31 + byte over the
+    // UTF-8 bytes, 64-bit wrap. DuckDB BIGINT overflow errors rather
+    // than wraps, so the accumulator runs in HUGEINT mod 2^64 and maps
+    // to signed at the end. ord(char) = the UTF-8 byte only for ASCII —
+    // exactly what the generator emits; a future non-ASCII regeneration
+    // fails this compare loudly (multi-byte chars advance one char but
+    // several bytes), never silently.
+    Query("q_doc_fingerprint", (s, d) => docFingerprint(s, d),
+      """WITH RECURSIVE fp AS (
+        |  SELECT doc_id, text, 0 AS i, length(text) AS n, 0::HUGEINT AS h
+        |  FROM documents
+        |  UNION ALL
+        |  SELECT doc_id, text, i + 1, n,
+        |         (h * 31 + ord(substr(text, i + 1, 1))) % 18446744073709551616::HUGEINT
+        |  FROM fp WHERE i < n
+        |)
+        |SELECT doc_id,
+        |       (CASE WHEN h >= 9223372036854775808::HUGEINT
+        |             THEN h - 18446744073709551616::HUGEINT ELSE h END)::BIGINT AS fp
+        |FROM fp WHERE i = n
+        |ORDER BY doc_id""".stripMargin),
+    Query("q_doc_chunk", (s, d) => docChunk(s, d),
+      raw"""WITH t AS (
+           |  SELECT doc_id, string_split_regex(text, '\s+') AS tk FROM documents
+           |), s AS (
+           |  SELECT doc_id, tk, unnest(range(0, len(tk), 24)) AS start FROM t
+           |)
+           |SELECT doc_id, start // 24 AS chunk_idx,
+           |  len(tk[start + 1 : start + 32]) AS n_chunk_tokens,
+           |  array_to_string(tk[start + 1 : start + 32], ' ') AS chunk_text
+           |FROM s ORDER BY doc_id, chunk_idx""".stripMargin),
+    Query("q_vocab_topk", (s, d) => vocabTopK(s, d),
+      raw"""SELECT token, count(*) AS n FROM (
+           |  SELECT unnest(string_split_regex(text, '\s+')) AS token FROM documents
+           |) GROUP BY token ORDER BY n DESC, token LIMIT 50""".stripMargin),
+    // the CMS shortlist + exact-rescore path must emit EXACTLY the true
+    // top-k (sketch selects, exact counts re-order — the oracle is the
+    // same exact query as q_vocab_topk)
+    Query("q_vocab_topk_cms", (s, d) => vocabTopKCms(s, d),
+      raw"""SELECT token, count(*) AS n FROM (
+           |  SELECT unnest(string_split_regex(text, '\s+')) AS token FROM documents
+           |) GROUP BY token ORDER BY n DESC, token LIMIT 50""".stripMargin),
+    // the index-probe search must equal a LIKE scan: the phrase is
+    // token-boundary-safe in this vocabulary (verified at every SF), so
+    // substring counting == token-trigram counting
+    Query("q_substr_search", (s, d) => substrSearch(s, d),
+      s"""SELECT doc_id,
+         |  (length(text) - length(replace(text, '$SearchPhrase', '')))
+         |    // length('$SearchPhrase') AS n_hits,
+         |  source
+         |FROM documents
+         |WHERE contains(text, '$SearchPhrase')
+         |ORDER BY doc_id""".stripMargin),
+    // word2phrase statistic in exact per-mille integer space; top-20
+    // with phrase tie-break, final total order by phrase
+    Query("q_phrase_mine", (s, d) => phraseMine(s, d),
+      s"""WITH tk AS (
+         |  SELECT string_split(text, ' ') AS tk FROM documents
+         |), uni AS (
+         |  SELECT w, count(*) AS cw FROM (SELECT unnest(tk) AS w FROM tk) GROUP BY w
+         |), bi AS (
+         |  SELECT w1, w2, count(*) AS n_pair FROM (
+         |    SELECT tk[i] AS w1, tk[i + 1] AS w2
+         |    FROM tk, unnest(range(1, len(tk))) AS t(i)
+         |  ) GROUP BY w1, w2 HAVING count(*) >= $PhraseMinCount
+         |), n AS (SELECT sum(cw) AS nt FROM uni
+         |), s AS (
+         |  SELECT w1 || ' ' || w2 AS phrase, n_pair,
+         |    CAST((1000 * (n_pair - $PhraseDiscount) * nt) // (a.cw * b.cw) AS BIGINT) AS score
+         |  FROM bi JOIN uni a ON w1 = a.w JOIN uni b ON w2 = b.w CROSS JOIN n
+         |), top AS (
+         |  SELECT phrase, n_pair, score FROM s
+         |  ORDER BY score DESC, phrase LIMIT $PhraseTopK
+         |)
+         |SELECT phrase, n_pair, score FROM top ORDER BY phrase""".stripMargin)
+  )
 }

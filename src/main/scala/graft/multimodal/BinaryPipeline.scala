@@ -1,6 +1,6 @@
 package graft.multimodal
 
-import graft.Tables
+import graft.{Query, Tables}
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -476,6 +476,39 @@ object BinaryPipeline {
         col("duration_ms"),
         explode(expr("sequence(0L, duration_ms div 1000)")).as("frame_idx"))
       .select(col("media_id"), col("frame_idx"), (col("frame_idx") * 1000).as("ts_ms"))
+
+  val queries: Seq[Query] = Seq(
+    // The oracle recomputes the media-prep plan from the id-derived
+    // generator formulas, so a Spark-side DECODE regression (the dims
+    // feeding the plan come from real byte parsing) breaks this gate.
+    // r17: the last rows-only row graduates — header bytes re-synthesized
+    // from the generator's own hex constants, checksum polynomial rolled
+    // in HUGEINT mod-2^64 over header + text bytes (see
+    // BinaryPipeline.pipelineSql; ASCII-guarded by Verify's domain probe).
+    Query("q_multimodal_pipeline", (s, d) => pipelineGated(s, d), pipelineSql),
+    Query("q_media_prep", (s, d) => mediaPrep(s, d),
+      """WITH m AS (
+        |  SELECT doc_id AS media_id,
+        |    CASE doc_id % 3 WHEN 0 THEN 'image' WHEN 1 THEN 'audio' ELSE 'video' END AS kind,
+        |    CASE doc_id % 3 WHEN 0 THEN 16 + doc_id % 1024 WHEN 2 THEN 160 + doc_id % 1280 ELSE 0 END AS width,
+        |    CASE doc_id % 3 WHEN 0 THEN 16 + doc_id % 768 WHEN 2 THEN 120 + doc_id % 720 ELSE 0 END AS height,
+        |    CASE WHEN doc_id % 3 = 2 THEN (1 + doc_id % 59) * 1000 ELSE 0 END AS duration_ms
+        |  FROM documents
+        |), d AS (
+        |  SELECT media_id, kind, width, height, duration_ms,
+        |    CASE WHEN width <= 0 OR height <= 0 THEN 0
+        |         WHEN width >= height THEN 224
+        |         ELSE greatest(1, (width * 224) // height) END AS dst_w,
+        |    CASE WHEN width <= 0 OR height <= 0 THEN 0
+        |         WHEN height >= width THEN 224
+        |         ELSE greatest(1, (height * 224) // width) END AS dst_h,
+        |    CASE kind WHEN 'image' THEN 1 WHEN 'video' THEN duration_ms // 1000 + 1 ELSE 0 END AS n_frames
+        |  FROM m
+        |)
+        |SELECT media_id, kind, width, height, dst_w, dst_h, n_frames,
+        |  ((dst_w + 15) // 16) * ((dst_h + 15) // 16) * n_frames AS n_tokens
+        |FROM d ORDER BY media_id""".stripMargin)
+  )
 }
 
 /** Full-frame PNG pixel pipeline (r16): the generator synthesizes
@@ -734,4 +767,38 @@ object PixelPipeline {
       // second time.
       .transform(df => graft.Staging.sorted(df, "media_pixels_out", "media_id")())
   }
+
+  val queries: Seq[Query] = Seq(
+    // r17: the JPEG twin — real baseline JFIF (Annex-K Huffman scan
+    // data) decoded end-to-end; block-constant content makes the
+    // roundtrip exact, and the oracle replays the codec's fixed-point
+    // YCbCr roundtrip per block (constants from JpegCodec itself).
+    Query("q_media_pixels_jpeg", (s, d) => mediaPixelsJpeg(s, d), mediaPixelsJpegSql),
+    // r16: full-frame PNG pixel decode. The engine inflates + unfilters
+    // REAL zlib IDAT bytes (PngCodec: all five RFC 2083 filters, chunk
+    // CRCs) and aggregates exact int64 channel sums; the oracle
+    // recomputes the same statistics from the id-derived pixel formula
+    // p(id,x,y,c) = (31·id + 7x + 13y + 5c) mod 256 — lossless codec
+    // roundtrip makes them equal bit-for-bit, so ANY defect in the
+    // inflate/unfilter path breaks this gate. Means are one int/int
+    // double division + round4 (identical IEEE ops both engines).
+    Query("q_media_pixels", (s, d) => mediaPixels(s, d),
+      """WITH img AS (
+        |  SELECT doc_id AS media_id, 8 + doc_id % 25 AS w, 8 + doc_id % 17 AS h
+        |  FROM documents WHERE doc_id % 6 = 0
+        |), px AS (
+        |  SELECT media_id, w, h, unnest(range(0, w * h)) AS i FROM img
+        |), sums AS (
+        |  SELECT media_id, w, h,
+        |    sum((media_id * 31 + 7 * (i % w) + 13 * (i // w)) % 256) AS sr,
+        |    sum((media_id * 31 + 7 * (i % w) + 13 * (i // w) + 5) % 256) AS sg,
+        |    sum((media_id * 31 + 7 * (i % w) + 13 * (i // w) + 10) % 256) AS sb
+        |  FROM px GROUP BY 1, 2, 3
+        |)
+        |SELECT media_id, w AS width, h AS height, w * h AS n_px,
+        |  floor((CAST(sr AS DOUBLE) / (w * h)) * 10000 + 0.5) / 10000 AS mean_r,
+        |  floor((CAST(sg AS DOUBLE) / (w * h)) * 10000 + 0.5) / 10000 AS mean_g,
+        |  floor((CAST(sb AS DOUBLE) / (w * h)) * 10000 + 0.5) / 10000 AS mean_b
+        |FROM sums ORDER BY media_id""".stripMargin)
+  )
 }

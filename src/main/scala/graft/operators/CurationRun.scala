@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{Query, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -98,4 +98,63 @@ object CurationRun {
           |) AS (stage_id, stage, n_docs, n_tokens)""".stripMargin)
       .orderBy("stage_id")
   }
+
+  val queries: Seq[Query] = Seq(
+    // The composed curation funnel: every stage flag re-derived from
+    // the SAME oracle machinery its standalone query is gated by (C4 +
+    // gopher full queries nested as scoped subqueries, the recursive
+    // cluster closure, the calibration CTEs), then one conditional
+    // aggregate fanned to 5 rows. Pure integer counts — no rounding
+    // trade anywhere in the funnel.
+    Query("q_curation_run", curationRun _,
+      s"""WITH RECURSIVE ${graft.dedup.Clusters.ClusterWalkCtes},
+         |cr_cl AS (
+         |  SELECT id AS doc_id, min(r) AS cluster_id FROM walk GROUP BY id
+         |), ${graft.functions.QualityFilters.CalibrateCtes},
+         |cr_cal AS (
+         |  SELECT s.doc_id,
+         |    (cc.cum * 1000 <= t.n_source * ${graft.functions.QualityFilters.CalibrateKeepPermille}) AS keep
+         |  FROM s JOIN cc USING (source, score4) JOIN t USING (source)
+         |), cr_tok AS (
+         |  SELECT doc_id, len(string_split(text, ' ')) AS n_toks FROM documents
+         |), cr_c4 AS (
+         |  SELECT doc_id, keep FROM (${graft.functions.QualityFilters.QualityC4Sql})
+         |), cr_gop AS (
+         |  SELECT doc_id, keep FROM (${graft.functions.QualityFilters.QualityGopherSql})
+         |), cr_flags AS (
+         |  SELECT k.doc_id, k.n_toks,
+         |    c4.keep AS s1,
+         |    (c4.keep AND g.keep) AS s2,
+         |    cl.cluster_id, ca.keep AS kc
+         |  FROM cr_tok k
+         |  JOIN cr_c4 c4 USING (doc_id)
+         |  JOIN cr_gop g USING (doc_id)
+         |  JOIN cr_cl cl USING (doc_id)
+         |  JOIN cr_cal ca USING (doc_id)
+         |), cr_st AS (
+         |  SELECT *,
+         |    (s2 AND doc_id = min(CASE WHEN s2 THEN doc_id END)
+         |       OVER (PARTITION BY cluster_id)) AS s3
+         |  FROM cr_flags
+         |), cr_st4 AS (
+         |  SELECT *, (s3 AND kc) AS s4 FROM cr_st
+         |), cr_agg AS (
+         |  SELECT count(*) AS n0, sum(n_toks) AS t0,
+         |    count(*) FILTER (s1) AS n1, coalesce(sum(n_toks) FILTER (s1), 0) AS t1,
+         |    count(*) FILTER (s2) AS n2, coalesce(sum(n_toks) FILTER (s2), 0) AS t2,
+         |    count(*) FILTER (s3) AS n3, coalesce(sum(n_toks) FILTER (s3), 0) AS t3,
+         |    count(*) FILTER (s4) AS n4, coalesce(sum(n_toks) FILTER (s4), 0) AS t4
+         |  FROM cr_st4
+         |)
+         |SELECT CAST(stage_id AS BIGINT) AS stage_id, stage,
+         |       CAST(n_docs AS BIGINT) AS n_docs, CAST(n_tokens AS BIGINT) AS n_tokens
+         |FROM (
+         |  SELECT 0 AS stage_id, 'ingest' AS stage, n0 AS n_docs, t0 AS n_tokens FROM cr_agg
+         |  UNION ALL SELECT 1, 'c4_gate', n1, t1 FROM cr_agg
+         |  UNION ALL SELECT 2, 'gopher_gate', n2, t2 FROM cr_agg
+         |  UNION ALL SELECT 3, 'dedup', n3, t3 FROM cr_agg
+         |  UNION ALL SELECT 4, 'calibrate', n4, t4 FROM cr_agg
+         |)
+         |ORDER BY stage_id""".stripMargin)
+  )
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Num, Tables}
+import graft.{Num, Query, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -115,4 +115,63 @@ object Features {
       Num.round4((d("ss") - d("total_len") * d("total_len") / d("n")) / d("n")).as("var_len"))
       .orderBy("source")
   }
+
+  val queries: Seq[Query] = Seq(
+    Query("q_feature_bins", featureBins _,
+      """WITH b AS (
+        |  SELECT list_transform(quantile_cont(value, [0.1, 0.2, 0.3, 0.4, 0.5, 0.6, 0.7, 0.8, 0.9]),
+        |                        q -> floor(q * 10000 + 0.5) / 10000) AS bs
+        |  FROM events
+        |)
+        |SELECT event_id, value,
+        |  CAST((CASE WHEN value >= bs[1] THEN 1 ELSE 0 END) + (CASE WHEN value >= bs[2] THEN 1 ELSE 0 END)
+        |     + (CASE WHEN value >= bs[3] THEN 1 ELSE 0 END) + (CASE WHEN value >= bs[4] THEN 1 ELSE 0 END)
+        |     + (CASE WHEN value >= bs[5] THEN 1 ELSE 0 END) + (CASE WHEN value >= bs[6] THEN 1 ELSE 0 END)
+        |     + (CASE WHEN value >= bs[7] THEN 1 ELSE 0 END) + (CASE WHEN value >= bs[8] THEN 1 ELSE 0 END)
+        |     + (CASE WHEN value >= bs[9] THEN 1 ELSE 0 END) AS BIGINT) AS bin
+        |FROM events, b ORDER BY event_id""".stripMargin),
+    Query("q_corr_matrix", corrMatrix _,
+      """WITH s AS (
+        |  SELECT CAST(floor(l_quantity * 100 + 0.5) AS BIGINT) AS x,
+        |         CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT) AS y,
+        |         CAST(floor(l_discount * 100 + 0.5) AS BIGINT) AS z
+        |  FROM lineitem
+        |), a AS (
+        |  SELECT count(*) AS n,
+        |    sum(x) AS sx, sum(y) AS sy, sum(z) AS sz,
+        |    sum(x * x) AS sxx, sum(y * y) AS syy, sum(z * z) AS szz,
+        |    sum(x * y) AS sxy, sum(x * z) AS sxz, sum(y * z) AS syz
+        |  FROM s
+        |)
+        |SELECT n,
+        |  floor((CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
+        |    / sqrt((CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE))
+        |         * (CAST(n AS DOUBLE) * CAST(syy AS DOUBLE) - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE)))
+        |    * 10000 + 0.5) / 10000 AS corr_qty_price,
+        |  floor((CAST(n AS DOUBLE) * CAST(sxz AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sz AS DOUBLE))
+        |    / sqrt((CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE))
+        |         * (CAST(n AS DOUBLE) * CAST(szz AS DOUBLE) - CAST(sz AS DOUBLE) * CAST(sz AS DOUBLE)))
+        |    * 10000 + 0.5) / 10000 AS corr_qty_disc,
+        |  floor((CAST(n AS DOUBLE) * CAST(syz AS DOUBLE) - CAST(sy AS DOUBLE) * CAST(sz AS DOUBLE))
+        |    / sqrt((CAST(n AS DOUBLE) * CAST(syy AS DOUBLE) - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE))
+        |         * (CAST(n AS DOUBLE) * CAST(szz AS DOUBLE) - CAST(sz AS DOUBLE) * CAST(sz AS DOUBLE)))
+        |    * 10000 + 0.5) / 10000 AS corr_price_disc
+        |FROM a""".stripMargin),
+    // the merge path (partial states unioned and re-aggregated) must
+    // equal the single-pass direct stats bit-for-bit — double operation
+    // order mirrored exactly (see Features.statsMerge)
+    Query("q_stats_merge", statsMerge _,
+      """WITH s AS (
+        |  SELECT source, len(string_split(text, ' ')) AS len FROM documents
+        |), a AS (
+        |  SELECT source, count(*) AS n, sum(len) AS total_len,
+        |    min(len) AS min_len, max(len) AS max_len, sum(len * len) AS ss
+        |  FROM s GROUP BY source
+        |)
+        |SELECT source, n, CAST(total_len AS BIGINT) AS total_len, min_len, max_len,
+        |  floor(CAST(total_len AS DOUBLE) / CAST(n AS DOUBLE) * 10000 + 0.5) / 10000 AS mean_len,
+        |  floor((CAST(ss AS DOUBLE) - CAST(total_len AS DOUBLE) * CAST(total_len AS DOUBLE) / CAST(n AS DOUBLE))
+        |    / CAST(n AS DOUBLE) * 10000 + 0.5) / 10000 AS var_len
+        |FROM a ORDER BY source""".stripMargin)
+  )
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Num, Tables}
+import graft.{Num, Query, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -102,4 +102,49 @@ object Fights {
       )
       .orderBy("user_id")
   }
+
+  val queries: Seq[Query] = Seq(
+    Query("q_range_attr_merge", attrMerge _,
+      """WITH a AS (
+        |  SELECT event_id, user_id, epoch_us(ts) AS a_ts, value FROM events WHERE event_type = 'error'
+        |), c AS (
+        |  SELECT user_id, epoch_us(ts) AS c_ts, value FROM events WHERE event_type = 'click'
+        |), m AS (
+        |  SELECT a.event_id, count(*) AS n_clicks,
+        |    floor(max(c.value) * 10000 + 0.5) / 10000 AS max_click,
+        |    floor(sum(c.value) * 10000 + 0.5) / 10000 AS sum_click
+        |  FROM a JOIN c ON a.user_id = c.user_id
+        |    AND c.c_ts >= a.a_ts - 900000000 AND c.c_ts <= a.a_ts + 900000000
+        |  GROUP BY a.event_id
+        |)
+        |SELECT a.event_id, a.user_id, coalesce(m.n_clicks, 0) AS n_clicks, m.max_click, m.sum_click
+        |FROM a LEFT JOIN m ON a.event_id = m.event_id
+        |ORDER BY a.event_id""".stripMargin),
+    Query("q_fight_outcomes", outcomes _,
+      """WITH a AS (
+        |  SELECT event_id, user_id, epoch_us(ts) AS a_ts, value FROM events WHERE event_type = 'error'
+        |), c AS (
+        |  SELECT user_id, epoch_us(ts) AS c_ts FROM events WHERE event_type = 'click'
+        |), m AS (
+        |  SELECT a.event_id, count(*) AS n_clicks
+        |  FROM a JOIN c ON a.user_id = c.user_id
+        |    AND c.c_ts >= a.a_ts - 900000000 AND c.c_ts <= a.a_ts + 900000000
+        |  GROUP BY a.event_id
+        |), f AS (
+        |  SELECT a.user_id,
+        |    CASE WHEN coalesce(m.n_clicks, 0) = 0 THEN 'solo'
+        |         WHEN coalesce(m.n_clicks, 0) <= 3 THEN 'skirmish'
+        |         ELSE 'team' END AS kind,
+        |    CASE WHEN a.value >= 100 THEN 1 ELSE 0 END AS win
+        |  FROM a LEFT JOIN m ON a.event_id = m.event_id
+        |)
+        |SELECT user_id,
+        |  CAST(sum(CASE WHEN kind = 'solo' THEN 1 ELSE 0 END) AS BIGINT) AS solo_n,
+        |  CAST(sum(CASE WHEN kind = 'solo' THEN win ELSE 0 END) AS BIGINT) AS solo_wins,
+        |  CAST(sum(CASE WHEN kind = 'skirmish' THEN 1 ELSE 0 END) AS BIGINT) AS skirmish_n,
+        |  CAST(sum(CASE WHEN kind = 'skirmish' THEN win ELSE 0 END) AS BIGINT) AS skirmish_wins,
+        |  CAST(sum(CASE WHEN kind = 'team' THEN 1 ELSE 0 END) AS BIGINT) AS team_n,
+        |  CAST(sum(CASE WHEN kind = 'team' THEN win ELSE 0 END) AS BIGINT) AS team_wins
+        |FROM f GROUP BY user_id ORDER BY user_id""".stripMargin)
+  )
 }

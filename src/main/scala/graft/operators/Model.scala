@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Query
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -240,4 +241,11 @@ object Model {
         graft.Num.round4((col("p4sum").cast("double") / lit(10000.0)) / col("nd")).as("mean_p"),
         col("obs_rate"))
       .orderBy("decile")
+
+  val queries: Seq[Query] = Seq(
+    // The model family (r15): the rational-sigmoid GD trainer replays
+    // in DuckDB (ModelOracle) — train → score → eval oracle-closed.
+    Query("q_model_lr", trainPredict _, ModelOracle.trainPredictSql),
+    Query("q_model_eval", evalTable _, ModelOracle.evalSql)
+  )
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{Query, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -43,4 +43,15 @@ object RangeJoin {
       // join; staging bounds it to a cache read.
       .transform(df => graft.Staging.sorted(df, "range_join_out", "event_id")())
   }
+
+  val queries: Seq[Query] = Seq(
+    Query("q_range_join", nearbyCounts _,
+      """SELECT a.event_id, count(b.event_id) AS n_nearby
+        |FROM events a LEFT JOIN events b
+        |  ON a.user_id = b.user_id AND b.event_id != a.event_id
+        | AND epoch_us(b.ts) >= epoch_us(a.ts) - 900000000
+        | AND epoch_us(b.ts) <= epoch_us(a.ts) + 900000000
+        |WHERE a.event_type = 'error'
+        |GROUP BY a.event_id ORDER BY a.event_id""".stripMargin)
+  )
 }

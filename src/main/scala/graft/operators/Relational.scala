@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{Query, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -235,4 +235,88 @@ object Relational {
       .na
       .fill(0, EventTypes)
       .orderBy("user_id")
+
+  val queries: Seq[Query] = Seq(
+    Query("q_filter_project", filterProject _,
+      """SELECT l_orderkey, l_linenumber, l_partkey, l_quantity, l_extendedprice
+        |FROM lineitem
+        |WHERE l_returnflag = 'R' AND l_shipdate >= TIMESTAMP '1998-01-01'
+        |ORDER BY l_orderkey, l_linenumber, l_partkey, l_quantity, l_extendedprice""".stripMargin),
+    Query("q_agg_group", aggGroup _,
+      """SELECT l_returnflag, l_linestatus,
+        |  round(sum(l_quantity), 4) AS sum_qty,
+        |  round(sum(l_extendedprice), 4) AS sum_base_price,
+        |  round(sum(l_extendedprice * (1.0 - l_discount)), 4) AS sum_disc_price,
+        |  round(avg(l_quantity), 4) AS avg_qty,
+        |  round(avg(l_discount), 4) AS avg_disc,
+        |  count(*) AS count_order
+        |FROM lineitem
+        |GROUP BY l_returnflag, l_linestatus
+        |ORDER BY l_returnflag, l_linestatus""".stripMargin),
+    Query("q_join_broadcast", joinBroadcast _,
+      """SELECT n_name, count(*) AS n_cust, round(sum(c_acctbal), 2) AS sum_acctbal
+        |FROM customer JOIN nation ON c_nationkey = n_nationkey
+        |GROUP BY n_name ORDER BY n_name""".stripMargin),
+    Query("q_multi_join_agg", multiJoinAgg _,
+      """SELECT n_name, round(sum(l_extendedprice * (1.0 - l_discount)), 2) AS revenue
+        |FROM lineitem
+        |JOIN orders   ON l_orderkey = o_orderkey
+        |JOIN customer ON o_custkey = c_custkey
+        |JOIN supplier ON l_suppkey = s_suppkey AND c_nationkey = s_nationkey
+        |JOIN nation   ON s_nationkey = n_nationkey
+        |JOIN region   ON n_regionkey = r_regionkey
+        |WHERE r_name = 'ASIA'
+        |GROUP BY n_name ORDER BY n_name""".stripMargin),
+    Query("q_topk_global", topkGlobal _,
+      """SELECT c_custkey, c_name, c_acctbal
+        |FROM customer ORDER BY c_acctbal DESC, c_custkey ASC LIMIT 10""".stripMargin),
+    Query("q_topk_per_group", topkPerGroup _,
+      """SELECT c_mktsegment, c_custkey, c_acctbal, rn FROM (
+        |  SELECT c_mktsegment, c_custkey, c_acctbal,
+        |    row_number() OVER (PARTITION BY c_mktsegment ORDER BY c_acctbal DESC, c_custkey ASC) AS rn
+        |  FROM customer
+        |) WHERE rn <= 3 ORDER BY c_mktsegment, rn""".stripMargin),
+    Query("q_distinct_agg", distinctAgg _,
+      """SELECT o_orderpriority, count(DISTINCT o_custkey) AS n_cust, count(*) AS n_orders
+        |FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin),
+    // HyperLogLog++ replay (r15): registers + estimator + bias tables,
+    // constants extracted from the live Spark helper. See HllOracle.
+    Query("q_distinct_agg_approx", distinctAggApprox _, HllOracle.sql),
+    Query("q_anti_join", antiJoin _,
+      """SELECT p_partkey, p_name FROM part
+        |WHERE NOT EXISTS (SELECT 1 FROM lineitem WHERE l_partkey = p_partkey AND l_quantity > 45)
+        |ORDER BY p_partkey""".stripMargin),
+    Query("q_semi_join", semiJoin _,
+      """SELECT p_partkey, p_name FROM part
+        |WHERE EXISTS (SELECT 1 FROM lineitem WHERE l_partkey = p_partkey AND l_quantity > 45)
+        |ORDER BY p_partkey""".stripMargin),
+    Query("q_conditional_agg", conditionalAgg _,
+      """SELECT user_id,
+        |  round((sum(CASE WHEN value > 120 THEN 1 ELSE 0 END)
+        |       - sum(CASE WHEN value < 80 THEN 1 ELSE 0 END)) * 1.0 / count(*), 4) AS ratio,
+        |  round(sum(CASE WHEN value >= 80 AND value <= 120 THEN 1 ELSE 0 END) * 1.0 / count(*), 4) AS mid_share,
+        |  count(*) AS n_events
+        |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin),
+    Query("q_json_props", jsonProps _,
+      """WITH e AS (
+        |  SELECT event_type,
+        |    CAST(json_extract_string(props, '$.k') AS INT) AS k,
+        |    CAST(floor(value * 100 + 0.5) AS BIGINT) AS v100
+        |  FROM events
+        |)
+        |SELECT event_type,
+        |  count(*) AS n_events,
+        |  CAST(sum(CASE WHEN k >= 50 THEN 1 ELSE 0 END) AS BIGINT) AS n_k_high,
+        |  floor(CAST(sum(CASE WHEN k >= 50 THEN v100 ELSE 0 END) AS DOUBLE)
+        |        / (sum(CASE WHEN k >= 50 THEN 1 ELSE 0 END) * 100.0) * 10000 + 0.5) / 10000 AS avg_value_k_high
+        |FROM e GROUP BY event_type ORDER BY event_type""".stripMargin),
+    Query("q_pivot_onehot", pivotOnehot _,
+      """SELECT user_id,
+        |  count(CASE WHEN event_type = 'click' THEN 1 END) AS click,
+        |  count(CASE WHEN event_type = 'error' THEN 1 END) AS error,
+        |  count(CASE WHEN event_type = 'purchase' THEN 1 END) AS purchase,
+        |  count(CASE WHEN event_type = 'signup' THEN 1 END) AS signup,
+        |  count(CASE WHEN event_type = 'view' THEN 1 END) AS view
+        |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin)
+  )
 }

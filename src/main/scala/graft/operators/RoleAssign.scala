@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{Query, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -65,4 +65,33 @@ object RoleAssign {
       .transform(df => graft.Staging.sorted(df, "role_assign_out",
         "l_orderkey", "l_linenumber", "l_partkey", "role")())
   }
+
+  val queries: Seq[Query] = Seq(
+    Query("q_role_assign", roles _,
+      """WITH li AS (
+        |  SELECT l_orderkey, l_linenumber, l_partkey, l_quantity, l_extendedprice, l_discount
+        |  FROM lineitem
+        |), s1 AS (
+        |  SELECT *, row_number() OVER (PARTITION BY l_orderkey
+        |    ORDER BY l_quantity DESC, l_linenumber, l_partkey, l_extendedprice, l_quantity, l_discount) AS rn
+        |  FROM li
+        |), s2 AS (
+        |  SELECT *, row_number() OVER (PARTITION BY l_orderkey
+        |    ORDER BY l_extendedprice ASC, l_linenumber, l_partkey, l_extendedprice, l_quantity, l_discount) AS rn2
+        |  FROM s1 WHERE rn > 1
+        |), s3 AS (
+        |  SELECT *, row_number() OVER (PARTITION BY l_orderkey
+        |    ORDER BY l_discount DESC, l_linenumber, l_partkey, l_extendedprice, l_quantity, l_discount) AS rn3
+        |  FROM s2 WHERE rn2 > 1
+        |)
+        |SELECT l_orderkey, l_linenumber, l_partkey, role FROM (
+        |  SELECT l_orderkey, l_linenumber, l_partkey, 'bulk' AS role FROM s1 WHERE rn = 1
+        |  UNION ALL
+        |  SELECT l_orderkey, l_linenumber, l_partkey, 'budget' FROM s2 WHERE rn2 = 1
+        |  UNION ALL
+        |  SELECT l_orderkey, l_linenumber, l_partkey, 'discount' FROM s3 WHERE rn3 = 1
+        |  UNION ALL
+        |  SELECT l_orderkey, l_linenumber, l_partkey, 'other' FROM s3 WHERE rn3 > 1
+        |) ORDER BY l_orderkey, l_linenumber, l_partkey, role""".stripMargin)
+  )
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Num, Tables}
+import graft.{Num, Query, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -246,7 +246,7 @@ object SeqPack {
     val docs = Tables
       .documents(spark, dir)
       .select(col("doc_id"), size(split(col("text"), "\\s+")).cast("long").as("n_tokens"))
-      .withColumn("bucket", Num.hashBucket(col("doc_id"), 12345L, 100L))
+      .withColumn("bucket", Num.hashBucket(col("doc_id"), Splits.SplitSalt, 100L))
       .withColumn("split", Splits.splitOf(col("bucket")))
       .drop("bucket")
     seqPackWithin(docs, "split")
@@ -283,4 +283,82 @@ object SeqPack {
           .as("tail_fill"))
       .orderBy("split")
   }
+
+  private lazy val SeqPackSql =
+    raw"""WITH t AS (
+         |  SELECT doc_id, len(string_split_regex(text, '\s+')) AS n_tokens FROM documents
+         |), c AS (
+         |  SELECT doc_id, n_tokens,
+         |    coalesce(sum(n_tokens) OVER (ORDER BY doc_id
+         |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS off
+         |  FROM t
+         |)
+         |SELECT doc_id,
+         |  CAST(n_tokens AS BIGINT) AS n_tokens,
+         |  CAST(off AS BIGINT) AS start_offset,
+         |  CAST(off // 2048 AS BIGINT) AS pack_id,
+         |  CAST(off % 2048 AS BIGINT) AS pack_offset
+         |FROM c ORDER BY doc_id""".stripMargin
+
+  val queries: Seq[Query] = Seq(
+    // salt enters via the MULTIPLIER (1315423911 + 2*69069) and the
+    // product is SQUARED mod p: an additive salt would only rotate the
+    // order, and one multiply under-mixes small doc_id ranges (epochs
+    // would rank-correlate)
+    Query("q_doc_shuffle", (s, d) => docShuffle(s, d),
+      """WITH h0 AS (
+        |  SELECT doc_id, ((doc_id % 1000003) * 1315562049) % 1000000007 AS k1
+        |  FROM documents
+        |), h AS (
+        |  SELECT doc_id, (k1 * k1) % 1000000007 AS shuffle_key FROM h0
+        |)
+        |SELECT doc_id, shuffle_key,
+        |  ROW_NUMBER() OVER (ORDER BY shuffle_key, doc_id) - 1 AS pos
+        |FROM h ORDER BY doc_id""".stripMargin),
+    // boundaries ride the same layout: embed the seq-pack derivation as
+    // a subquery and aggregate per pack (aligned primitive lists, both
+    // engines ordering by (pack_offset, doc_id)).
+    Query("q_pack_boundaries", packBoundaries _,
+      s"""WITH sp AS ($SeqPackSql)
+         |SELECT pack_id, count(*) AS n_docs,
+         |  coalesce(array_to_string(list(pack_offset ORDER BY pack_offset, doc_id), ' '), '') AS boundary_offsets,
+         |  coalesce(array_to_string(list(doc_id ORDER BY pack_offset, doc_id), ' '), '') AS boundary_docs
+         |FROM sp GROUP BY pack_id ORDER BY pack_id""".stripMargin),
+    Query("q_seq_pack", seqPack _, SeqPackSql),
+    // per-split packing efficiency: the same concat-and-chunk layout
+    // computed per split (offsets restart), aggregated to split grain;
+    // ratios are int64-exact divisions round4'd identically both sides
+    Query("q_pack_efficiency", packEfficiency _,
+      raw"""WITH t AS (
+           |  SELECT doc_id, len(string_split_regex(text, '\s+')) AS n_tokens,
+           |    ${Num.hashBucketSql("doc_id", Splits.SplitSalt, 100)} AS bucket
+           |  FROM documents
+           |), s AS (
+           |  SELECT doc_id, n_tokens,
+           |    CASE WHEN bucket < 80 THEN 'train' WHEN bucket < 90 THEN 'valid'
+           |         ELSE 'test' END AS split
+           |  FROM t
+           |), c AS (
+           |  SELECT split, n_tokens,
+           |    coalesce(sum(n_tokens) OVER (PARTITION BY split ORDER BY doc_id
+           |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS off
+           |  FROM s
+           |), a AS (
+           |  SELECT split,
+           |    greatest(max(off // 2048) + 1, (sum(n_tokens) + 2047) // 2048) AS n_packs,
+           |    count(*) AS n_docs,
+           |    sum(n_tokens) AS total_tokens,
+           |    sum(CASE WHEN off % 2048 + n_tokens > 2048 THEN 1 ELSE 0 END) AS n_straddlers
+           |  FROM c GROUP BY split
+           |)
+           |SELECT split,
+           |  CAST(n_packs AS BIGINT) AS n_packs,
+           |  CAST(n_docs AS BIGINT) AS n_docs,
+           |  CAST(total_tokens AS BIGINT) AS total_tokens,
+           |  floor((CAST(n_docs AS DOUBLE) / CAST(n_packs AS DOUBLE)) * 10000 + 0.5) / 10000 AS docs_per_pack,
+           |  CAST(n_straddlers AS BIGINT) AS n_straddlers,
+           |  floor((CAST(n_straddlers AS DOUBLE) / CAST(n_docs AS DOUBLE)) * 10000 + 0.5) / 10000 AS straddle_rate,
+           |  floor((CAST(total_tokens % 2048 AS DOUBLE) / 2048.0) * 10000 + 0.5) / 10000 AS tail_fill
+           |FROM a ORDER BY split""".stripMargin)
+  )
 }

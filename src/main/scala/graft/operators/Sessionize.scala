@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{Query, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -80,4 +80,43 @@ object Sessionize {
           / (count(lit(1)) * lit(60000.0))).as("avg_session_minutes"))
       .transform(df => graft.Staging.sorted(df, "session_stats_out", "user_id")())
   }
+
+  val queries: Seq[Query] = Seq(
+    Query("q_sessionize", sessions _,
+      """WITH g AS (
+        |  SELECT user_id, ts, event_id,
+        |    CASE WHEN epoch_us(ts) - lag(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY ts, event_id)
+        |              > 1800000000 THEN 1 ELSE 0 END AS brk
+        |  FROM events
+        |), s AS (
+        |  SELECT user_id,
+        |    count(CASE WHEN brk = 1 THEN 1 END) OVER (PARTITION BY user_id ORDER BY ts, event_id
+        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_id
+        |  FROM g
+        |)
+        |SELECT user_id, session_id, count(*) AS n_events
+        |FROM s GROUP BY user_id, session_id ORDER BY user_id, session_id""".stripMargin),
+    Query("q_session_stats", sessionStats _,
+      """WITH g AS (
+        |  SELECT user_id, epoch_ms(ts) AS ts_ms, event_id,
+        |    CASE WHEN epoch_ms(ts) - lag(epoch_ms(ts)) OVER (PARTITION BY user_id ORDER BY ts, event_id)
+        |              > 1800000 THEN 1 ELSE 0 END AS brk
+        |  FROM events
+        |), s AS (
+        |  SELECT user_id, ts_ms, event_id,
+        |    sum(brk) OVER (PARTITION BY user_id ORDER BY ts_ms, event_id
+        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_id
+        |  FROM g
+        |), per AS (
+        |  SELECT user_id, session_id, count(*) AS n_events,
+        |    min(ts_ms) AS start_ms, max(ts_ms) AS end_ms
+        |  FROM s GROUP BY user_id, session_id
+        |)
+        |SELECT user_id,
+        |  count(*) AS n_sessions,
+        |  floor(CAST(sum(n_events) AS DOUBLE) / count(*) * 10000 + 0.5) / 10000 AS avg_session_events,
+        |  max(n_events) AS max_session_events,
+        |  floor(CAST(sum(end_ms - start_ms) AS DOUBLE) / (count(*) * 60000.0) * 10000 + 0.5) / 10000 AS avg_session_minutes
+        |FROM per GROUP BY user_id ORDER BY user_id""".stripMargin)
+  )
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Num, Tables}
+import graft.{Num, Query, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -17,6 +17,15 @@ import org.apache.spark.sql.functions._
   */
 object Splits {
 
+  /** Additive `Num.hashBucket` salts, one per sampler so the samplers
+    * and the splits stay decorrelated. Each operator and its oracle read
+    * the same name. `stratifiedSample` shares the split salt.
+    */
+  val SplitSalt = 12345L
+  val MixSalt = 2038074743L
+  val TemperatureSalt = 1442695040L
+  val UpsampleSalt = 824633720L
+
   /** The 80/10/10 train/valid/test cut of a [0, 100) hash bucket. */
   def splitOf(bucket: Column): Column =
     when(bucket < 80, "train").when(bucket < 90, "valid").otherwise("test")
@@ -24,7 +33,7 @@ object Splits {
   def splitAssign(spark: SparkSession, dir: String): DataFrame =
     graft.Staging.sorted(
       Tables.documents(spark, dir).select(col("doc_id")), "split_assign_out", "doc_id")(
-      _.withColumn("bucket", Num.hashBucket(col("doc_id"), 12345L, 100L))
+      _.withColumn("bucket", Num.hashBucket(col("doc_id"), SplitSalt, 100L))
         .withColumn("split", splitOf(col("bucket"))))
 
   /** Leakage-safe split: hash the near-dup CLUSTER id, not the doc id,
@@ -43,7 +52,7 @@ object Splits {
     graft.dedup.Clusters
       .publishedClusters(spark, dir)
       .select(col("doc_id"), col("cluster_id"))
-      .withColumn("bucket", Num.hashBucket(col("cluster_id"), 12345L, 100L))
+      .withColumn("bucket", Num.hashBucket(col("cluster_id"), SplitSalt, 100L))
       .withColumn("split", splitOf(col("bucket")))
       .orderBy("doc_id")
 
@@ -75,11 +84,11 @@ object Splits {
       .select("source", "rate_pm")
     docs
       .join(broadcast(rates), "source")
-      // Distinct additive salt (vs splitAssign's 12345): the samplers
+      // Distinct additive salt (vs splitAssign's SplitSalt): the samplers
       // and the splitter must decorrelate — with a shared hash, a doc
       // kept at rate r also satisfies bucket%100 < r, so thinned
       // sources would land exclusively in the train split.
-      .withColumn("bucket", Num.hashBucket(col("doc_id"), 2038074743L, 1000L))
+      .withColumn("bucket", Num.hashBucket(col("doc_id"), MixSalt, 1000L))
       .filter(col("bucket") < col("rate_pm"))
       .select("doc_id", "source", "bucket")
       .orderBy("doc_id")
@@ -120,7 +129,7 @@ object Splits {
       .select("source", "rate_pm")
     docs
       .join(broadcast(rates), "source")
-      .withColumn("bucket", Num.hashBucket(col("doc_id"), 1442695040L, 1000L))
+      .withColumn("bucket", Num.hashBucket(col("doc_id"), TemperatureSalt, 1000L))
       .filter(col("bucket") < col("rate_pm"))
       .select("doc_id", "source", "bucket")
       .orderBy("doc_id")
@@ -165,7 +174,7 @@ object Splits {
       .select("source", "epochs_pm")
     docs
       .join(broadcast(rates), "source")
-      .withColumn("frac_bucket", Num.hashBucket(col("doc_id"), 824633720L, 1000L))
+      .withColumn("frac_bucket", Num.hashBucket(col("doc_id"), UpsampleSalt, 1000L))
       .withColumn("n_copies",
         expr("epochs_pm div 1000") +
           when(col("frac_bucket") < col("epochs_pm") % 1000L, 1L).otherwise(0L))
@@ -189,7 +198,7 @@ object Splits {
     graft.Staging.sorted(
       Tables.events(spark, dir).select(col("event_id"), col("user_id"), col("event_type")),
       "stratified_sample_out", "event_id")(
-      _.withColumn("bucket", Num.hashBucket(col("event_id"), 12345L, 100L))
+      _.withColumn("bucket", Num.hashBucket(col("event_id"), SplitSalt, 100L))
         .withColumn("rate", when(col("event_type").isin("view", "click"), 20L).otherwise(80L))
         .filter(col("bucket") < col("rate"))
         .select("event_id", "user_id", "event_type", "bucket"))
@@ -267,4 +276,115 @@ object Splits {
       .select("doc_id", "source", "n_tokens", "cum_before")
       .orderBy("doc_id")
   }
+
+  val queries: Seq[Query] = Seq(
+    Query("q_split_assign", splitAssign _,
+      s"""SELECT doc_id,
+        |  ${Num.hashBucketSql("doc_id", SplitSalt, 100)} AS bucket,
+        |  CASE WHEN ${Num.hashBucketSql("doc_id", SplitSalt, 100)} < 80 THEN 'train'
+        |       WHEN ${Num.hashBucketSql("doc_id", SplitSalt, 100)} < 90 THEN 'valid'
+        |       ELSE 'test' END AS split
+        |FROM documents ORDER BY doc_id""".stripMargin),
+    // Same closure, split assigned by hashing the CLUSTER id so near-dup
+    // members can never straddle train/test.
+    Query("q_split_leakage_safe", leakageSafeSplit _,
+      s"""WITH RECURSIVE ${graft.dedup.Clusters.ClusterWalkCtes}, cl AS (
+        |  SELECT id AS doc_id, min(r) AS cluster_id FROM walk GROUP BY id
+        |)
+        |SELECT doc_id, cluster_id,
+        |  CAST(${Num.hashBucketSql("cluster_id", SplitSalt, 100)} AS BIGINT) AS bucket,
+        |  CASE WHEN ${Num.hashBucketSql("cluster_id", SplitSalt, 100)} < 80 THEN 'train'
+        |       WHEN ${Num.hashBucketSql("cluster_id", SplitSalt, 100)} < 90 THEN 'valid'
+        |       ELSE 'test' END AS split
+        |FROM cl ORDER BY doc_id""".stripMargin),
+    Query("q_source_mix", sourceMix _,
+      s"""WITH c AS (
+        |  SELECT source, count(*) AS n_s FROM documents GROUP BY source
+        |), m AS (
+        |  SELECT min(n_s) AS min_n FROM c
+        |), r AS (
+        |  SELECT source, greatest((min_n * 1000) // n_s, 1) AS rate_pm FROM c, m
+        |)
+        |SELECT d.doc_id, d.source,
+        |  CAST(${Num.hashBucketSql("d.doc_id", MixSalt, 1000)} AS BIGINT) AS bucket
+        |FROM documents d JOIN r USING (source)
+        |WHERE ${Num.hashBucketSql("d.doc_id", MixSalt, 1000)} < r.rate_pm
+        |ORDER BY d.doc_id""".stripMargin),
+    // Temperature (α = 1/2) mixing: floor(sqrt(exact integer)) is
+    // cross-engine deterministic because IEEE sqrt is correctly rounded
+    // (a fractional pow would not be).
+    Query("q_source_temperature", sourceTemperature _,
+      s"""WITH c AS (
+        |  SELECT source, count(*) AS n_s FROM documents GROUP BY source
+        |), m AS (
+        |  SELECT min(n_s) AS min_n FROM c
+        |), r AS (
+        |  SELECT source,
+        |    greatest(CAST(floor(sqrt(CAST((min_n * 1000000) // n_s AS DOUBLE))) AS BIGINT), 1) AS rate_pm
+        |  FROM c, m
+        |)
+        |SELECT d.doc_id, d.source,
+        |  CAST(${Num.hashBucketSql("d.doc_id", TemperatureSalt, 1000)} AS BIGINT) AS bucket
+        |FROM documents d JOIN r USING (source)
+        |WHERE ${Num.hashBucketSql("d.doc_id", TemperatureSalt, 1000)} < r.rate_pm
+        |ORDER BY d.doc_id""".stripMargin),
+    // upsampling mirrors temperature's floor-sqrt rate as EPOCHS: the
+    // integer part repeats every doc, the fractional per-mille selects
+    // docs by hash, the cap bounds the explode — all exact integers
+    Query("q_source_upsample", sourceUpsample _,
+      s"""WITH c AS (
+         |  SELECT source, count(*) AS n_s FROM documents GROUP BY source
+         |), m AS (
+         |  SELECT max(n_s) AS max_n FROM c
+         |), r AS (
+         |  SELECT source,
+         |    least(CAST(floor(sqrt(CAST((max_n * 1000000) // n_s AS DOUBLE))) AS BIGINT), ${UpsampleMaxEpochs * 1000}) AS epochs_pm
+         |  FROM c, m
+         |), e AS (
+         |  SELECT d.doc_id, d.source,
+         |    epochs_pm // 1000 +
+         |      CASE WHEN ${Num.hashBucketSql("d.doc_id", UpsampleSalt, 1000)} < epochs_pm % 1000
+         |           THEN 1 ELSE 0 END AS n_copies
+         |  FROM documents d JOIN r USING (source)
+         |)
+         |SELECT doc_id, source, CAST(unnest(range(0, n_copies)) AS BIGINT) AS copy_id
+         |FROM e ORDER BY doc_id, copy_id""".stripMargin),
+    Query("q_stratified_sample", stratifiedSample _,
+      s"""SELECT event_id, user_id, event_type,
+        |  ${Num.hashBucketSql("event_id", SplitSalt, 100)} AS bucket
+        |FROM events
+        |WHERE ${Num.hashBucketSql("event_id", SplitSalt, 100)}
+        |      < (CASE WHEN event_type IN ('view', 'click') THEN 20 ELSE 80 END)
+        |ORDER BY event_id""".stripMargin),
+    // token-budget mixing: sqrt-damped budgets over per-source TOKEN
+    // totals (floor-sqrt exactness trick), keep ⇔ strictly-before
+    // cumulative tokens fit the budget, within-source order = the
+    // squared-multiplier shuffle key (its own salt)
+    Query("q_token_budget_mix", tokenBudgetMix _,
+      s"""WITH d AS (
+         |  SELECT doc_id, source, len(string_split(text, ' ')) AS n_tokens,
+         |    ((doc_id % 1000003) * ${(1315423911L + 2 * TokenBudgetSalt) % 1000000007L}) % 1000000007 AS k1
+         |  FROM documents
+         |), dk AS (
+         |  SELECT doc_id, source, n_tokens, (k1 * k1) % 1000000007 AS k FROM d
+         |), t AS (
+         |  SELECT source, sum(n_tokens) AS t_s FROM dk GROUP BY source
+         |), m AS (
+         |  SELECT min(t_s) AS min_t FROM t
+         |), b AS (
+         |  SELECT source,
+         |    greatest(t_s * greatest(CAST(floor(sqrt(CAST((min_t * 1000000) // t_s AS DOUBLE))) AS BIGINT), 1) // 1000, 1) AS budget
+         |  FROM t, m
+         |), c AS (
+         |  SELECT doc_id, source, n_tokens,
+         |    coalesce(sum(n_tokens) OVER (PARTITION BY source ORDER BY k, doc_id
+         |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cum_before
+         |  FROM dk
+         |)
+         |SELECT c.doc_id, c.source, CAST(c.n_tokens AS BIGINT) AS n_tokens,
+         |  CAST(c.cum_before AS BIGINT) AS cum_before
+         |FROM c JOIN b USING (source)
+         |WHERE c.cum_before < b.budget
+         |ORDER BY c.doc_id""".stripMargin)
+  )
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Num, Tables}
+import graft.{Num, Query, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -72,4 +72,41 @@ object StatsHistory {
       // above the user_id exchange.
       .transform(df => graft.Staging.sorted(df, "stats_history_out", "user_id", "lane_rank")())
   }
+
+  val queries: Seq[Query] = Seq(
+    Query("q_stats_history_composite", statsComposite _,
+      """WITH e AS (
+        |  SELECT user_id, event_type, event_id, epoch_ms(ts) AS ts_ms,
+        |    CAST(floor(value * 100 + 0.5) AS BIGINT) AS v100,
+        |    CASE WHEN value >= 100 THEN 1 ELSE 0 END AS w
+        |  FROM events
+        |), u AS (
+        |  SELECT *,
+        |    CAST(row_number() OVER (PARTITION BY user_id ORDER BY ts_ms DESC, event_id DESC) AS BIGINT) AS rn,
+        |    max(ts_ms) OVER (PARTITION BY user_id) AS max_ts
+        |  FROM e
+        |), s AS (
+        |  SELECT *, max(CASE WHEN rn = 1 THEN w END) OVER (PARTITION BY user_id) AS last_w FROM u
+        |), t AS (
+        |  SELECT *,
+        |    min(CASE WHEN w != last_w THEN rn END) OVER (PARTITION BY user_id) AS brk,
+        |    count(*) OVER (PARTITION BY user_id) AS n_user
+        |  FROM s
+        |), lane AS (
+        |  SELECT user_id, event_type,
+        |    count(*) AS n_events,
+        |    floor(CAST(sum(v100) AS DOUBLE) / (count(*) * 100.0) * 10000 + 0.5) / 10000 AS avg_value,
+        |    CASE WHEN sum(CASE WHEN ts_ms > max_ts - 604800000 THEN 1 ELSE 0 END) > 0
+        |      THEN floor(CAST(sum(CASE WHEN ts_ms > max_ts - 604800000 THEN v100 ELSE 0 END) AS DOUBLE)
+        |           / (sum(CASE WHEN ts_ms > max_ts - 604800000 THEN 1 ELSE 0 END) * 100.0) * 10000 + 0.5) / 10000
+        |      END AS avg_value_7d,
+        |    max(coalesce(brk, n_user + 1) - 1) AS cur_streak_len,
+        |    max(last_w) AS cur_streak_win
+        |  FROM t GROUP BY user_id, event_type
+        |)
+        |SELECT user_id, event_type, n_events, avg_value, avg_value_7d,
+        |  CAST(row_number() OVER (PARTITION BY user_id ORDER BY n_events DESC, event_type) AS BIGINT) AS lane_rank,
+        |  cur_streak_len, cur_streak_win
+        |FROM lane ORDER BY user_id, lane_rank""".stripMargin)
+  )
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{Query, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -399,4 +399,176 @@ object Windows {
       .agg(count(lit(1)).as("n_cust"), round(sum("c_acctbal"), 2).as("sum_acctbal"))
       .na.fill("ALL", Seq("rname", "nname"))
       .orderBy("rname", "nname")
+
+  val queries: Seq[Query] = Seq(
+    Query("q_window_running", runningSum _,
+      """SELECT event_id, user_id,
+        |  round(sum(value) OVER (PARTITION BY user_id ORDER BY ts, event_id
+        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW), 4) AS running_value
+        |FROM events ORDER BY user_id, event_id""".stripMargin),
+    Query("q_window_moving", movingAvg _,
+      """SELECT event_id, user_id,
+        |  round(avg(value) OVER (PARTITION BY user_id ORDER BY ts, event_id
+        |    ROWS BETWEEN 1 PRECEDING AND CURRENT ROW), 4) AS avg2,
+        |  round(avg(value) OVER (PARTITION BY user_id ORDER BY ts, event_id
+        |    ROWS BETWEEN 2 PRECEDING AND CURRENT ROW), 4) AS avg3,
+        |  round(avg(value) OVER (PARTITION BY user_id ORDER BY ts, event_id
+        |    ROWS BETWEEN 3 PRECEDING AND CURRENT ROW), 4) AS avg4
+        |FROM events ORDER BY user_id, event_id""".stripMargin),
+    Query("q_streaks", streaks _,
+      """WITH seq AS (
+        |  SELECT user_id, ts, event_id,
+        |    CASE WHEN value >= 100 THEN 1 ELSE 0 END AS w,
+        |    row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS rn
+        |  FROM events
+        |), isl AS (
+        |  SELECT user_id, w,
+        |    rn - row_number() OVER (PARTITION BY user_id, w ORDER BY ts, event_id) AS grp
+        |  FROM seq
+        |), runs AS (
+        |  SELECT user_id, w, grp, count(*) AS len FROM isl GROUP BY user_id, w, grp
+        |)
+        |SELECT user_id,
+        |  max(CASE WHEN w = 1 THEN len ELSE 0 END) AS max_win_streak,
+        |  max(CASE WHEN w = 0 THEN len ELSE 0 END) AS max_loss_streak
+        |FROM runs GROUP BY user_id ORDER BY user_id""".stripMargin),
+    Query("q_asof_lookback", asofLookback _,
+      """WITH e AS (
+        |  SELECT event_id, user_id, ts,
+        |    CAST(floor(value * 100 + 0.5) AS BIGINT) AS v100
+        |  FROM events
+        |)
+        |SELECT event_id, user_id,
+        |  floor((CAST(sum(v100) OVER w AS DOUBLE) / (count(v100) OVER w * 100.0)) * 10000 + 0.5) / 10000 AS avg_7d
+        |FROM e
+        |WINDOW w AS (PARTITION BY user_id ORDER BY epoch_ms(ts)
+        |  RANGE BETWEEN 604800000 PRECEDING AND 1 PRECEDING)
+        |ORDER BY event_id""".stripMargin),
+    Query("q_event_transitions", eventTransitions _,
+      """WITH seq AS (
+        |  SELECT user_id, event_type,
+        |    lag(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_type
+        |  FROM events
+        |), pairs AS (
+        |  SELECT prev_type, event_type, count(*) AS n
+        |  FROM seq WHERE prev_type IS NOT NULL
+        |  GROUP BY prev_type, event_type
+        |)
+        |SELECT prev_type, event_type, n,
+        |  floor(CAST(n AS DOUBLE) / sum(n) OVER (PARTITION BY prev_type) * 10000 + 0.5) / 10000 AS share
+        |FROM pairs ORDER BY prev_type, event_type""".stripMargin),
+    Query("q_latest_snapshot", latestSnapshot _,
+      """SELECT user_id, event_id, event_type, value FROM (
+        |  SELECT user_id, event_id, event_type, value,
+        |    row_number() OVER (PARTITION BY user_id ORDER BY ts DESC, event_id DESC) AS rn
+        |  FROM events
+        |) WHERE rn = 1 ORDER BY user_id""".stripMargin),
+    Query("q_lookback_multiwindow", multiWindowLookback _,
+      """WITH e AS (
+        |  SELECT event_id, user_id, event_type, epoch_ms(ts) AS ts_ms,
+        |    CAST(floor(value * 100 + 0.5) AS BIGINT) AS v100
+        |  FROM events
+        |)
+        |SELECT event_id, user_id,
+        |  floor(CAST(sum(v100) OVER w7 AS DOUBLE) / (count(*) OVER w7 * 100.0) * 10000 + 0.5) / 10000 AS avg_7d,
+        |  floor(CAST(sum(v100) OVER w14 AS DOUBLE) / (count(*) OVER w14 * 100.0) * 10000 + 0.5) / 10000 AS avg_14d,
+        |  floor(CAST(sum(v100) OVER w21 AS DOUBLE) / (count(*) OVER w21 * 100.0) * 10000 + 0.5) / 10000 AS avg_21d,
+        |  count(*) OVER w7 AS n_7d,
+        |  floor(CAST(sum(v100) OVER wt AS DOUBLE) / (count(*) OVER wt * 100.0) * 10000 + 0.5) / 10000 AS avg_7d_type
+        |FROM e
+        |WINDOW
+        |  w7 AS (PARTITION BY user_id ORDER BY ts_ms RANGE BETWEEN 604800000 PRECEDING AND 1 PRECEDING),
+        |  w14 AS (PARTITION BY user_id ORDER BY ts_ms RANGE BETWEEN 1209600000 PRECEDING AND 1 PRECEDING),
+        |  w21 AS (PARTITION BY user_id ORDER BY ts_ms RANGE BETWEEN 1814400000 PRECEDING AND 1 PRECEDING),
+        |  wt AS (PARTITION BY user_id, event_type ORDER BY ts_ms RANGE BETWEEN 604800000 PRECEDING AND 1 PRECEDING)
+        |ORDER BY event_id""".stripMargin),
+    Query("q_stats_availability", statsAvailability _,
+      """WITH e AS (
+        |  SELECT event_id, user_id, event_type, epoch_ms(ts) AS ts_ms, value FROM events
+        |)
+        |SELECT event_id, user_id,
+        |  count(*) OVER w7 AS n_7d,
+        |  count(*) OVER w21 AS n_21d,
+        |  CAST(coalesce(sum(CASE WHEN value >= 100 THEN 1 ELSE 0 END) OVER w7, 0) AS BIGINT) AS n_high_7d,
+        |  CAST(coalesce(sum(CASE WHEN value >= 10 THEN 1 ELSE 0 END) OVER w7, 0) AS BIGINT) AS n_counted_7d,
+        |  count(*) OVER wt AS n_same_type_7d
+        |FROM e
+        |WINDOW
+        |  w7 AS (PARTITION BY user_id ORDER BY ts_ms RANGE BETWEEN 604800000 PRECEDING AND 1 PRECEDING),
+        |  w21 AS (PARTITION BY user_id ORDER BY ts_ms RANGE BETWEEN 1814400000 PRECEDING AND 1 PRECEDING),
+        |  wt AS (PARTITION BY user_id, event_type ORDER BY ts_ms RANGE BETWEEN 604800000 PRECEDING AND 1 PRECEDING)
+        |ORDER BY event_id""".stripMargin),
+    Query("q_recurrent_delta", recurrentDelta _,
+      """WITH e AS (
+        |  SELECT event_id, user_id, event_type, epoch_ms(ts) AS ts_ms, value,
+        |    CAST(floor(value * 100 + 0.5) AS BIGINT) AS v100
+        |  FROM events
+        |)
+        |SELECT event_id, user_id, event_type, value,
+        |  CASE WHEN count(*) OVER w2 = 2
+        |    THEN floor(CAST(sum(v100) OVER w2 AS DOUBLE) / 200.0 * 10000 + 0.5) / 10000 END AS delta2,
+        |  CASE WHEN count(*) OVER w3 = 3
+        |    THEN floor(CAST(sum(v100) OVER w3 AS DOUBLE) / 300.0 * 10000 + 0.5) / 10000 END AS delta3,
+        |  CASE WHEN count(*) OVER w4 = 4
+        |    THEN floor(CAST(sum(v100) OVER w4 AS DOUBLE) / 400.0 * 10000 + 0.5) / 10000 END AS delta4
+        |FROM e
+        |WINDOW
+        |  w2 AS (PARTITION BY user_id, event_type ORDER BY ts_ms, event_id ROWS BETWEEN 2 PRECEDING AND 1 PRECEDING),
+        |  w3 AS (PARTITION BY user_id, event_type ORDER BY ts_ms, event_id ROWS BETWEEN 3 PRECEDING AND 1 PRECEDING),
+        |  w4 AS (PARTITION BY user_id, event_type ORDER BY ts_ms, event_id ROWS BETWEEN 4 PRECEDING AND 1 PRECEDING)
+        |ORDER BY event_id""".stripMargin),
+    Query("q_percentiles", percentiles _,
+      """SELECT event_type,
+        |  round(quantile_cont(value, 0.5), 4) AS p50,
+        |  round(quantile_cont(value, 0.9), 4) AS p90,
+        |  round(quantile_cont(value, 0.99), 4) AS p99
+        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin),
+    // r16 graduation: the fixed-grid integer bucket histogram replays
+    // exactly — centi-int scaling is lossless on the 2-decimal domain,
+    // bucket width / ranks are pure integer arithmetic, and the
+    // midpoint estimate is one int/100.0 division + round4 (identical
+    // IEEE ops both engines). `//` is DuckDB integer floor-division =
+    // Spark `div` on the nonnegative operands used here.
+    Query("q_percentiles_approx", percentilesApprox _,
+      s"""WITH sv AS (
+        |  SELECT event_type, CAST(floor(value * 100 + 0.5) AS BIGINT) AS sv FROM events
+        |), st AS (
+        |  SELECT event_type, min(sv) AS lo, max(sv) AS hi, count(*) AS n,
+        |         (max(sv) - min(sv)) // $ApproxBuckets + 1 AS w
+        |  FROM sv GROUP BY event_type
+        |), bk AS (
+        |  SELECT s.event_type, t.lo, t.w, t.n, (s.sv - t.lo) // t.w AS bucket, count(*) AS c
+        |  FROM sv s JOIN st t USING (event_type)
+        |  GROUP BY 1, 2, 3, 4, 5
+        |), cum AS (
+        |  SELECT *, sum(c) OVER (PARTITION BY event_type ORDER BY bucket) AS cc FROM bk
+        |), sel AS (
+        |  SELECT event_type, lo, w,
+        |         min(CASE WHEN cc >= (1 * n + 1) // 2 THEN bucket END) AS b50,
+        |         min(CASE WHEN cc >= (9 * n + 9) // 10 THEN bucket END) AS b90,
+        |         min(CASE WHEN cc >= (99 * n + 99) // 100 THEN bucket END) AS b99
+        |  FROM cum GROUP BY 1, 2, 3
+        |)
+        |SELECT event_type,
+        |  ${graft.Num.round4Sql("CAST(lo + b50 * w + w // 2 AS DOUBLE) / 100.0")} AS p50,
+        |  ${graft.Num.round4Sql("CAST(lo + b90 * w + w // 2 AS DOUBLE) / 100.0")} AS p90,
+        |  ${graft.Num.round4Sql("CAST(lo + b99 * w + w // 2 AS DOUBLE) / 100.0")} AS p99
+        |FROM sel ORDER BY event_type""".stripMargin),
+    Query("q_zscore_normalize", zscoreNormalize _,
+      """SELECT l_orderkey, l_linenumber,
+        |  floor((l_extendedprice - avg(l_extendedprice) OVER ())
+        |        / (2 * stddev_pop(l_extendedprice) OVER ()) * 10000 + 0.5) / 10000 AS znorm
+        |FROM lineitem ORDER BY l_orderkey, l_linenumber, znorm""".stripMargin),
+    Query("q_histogram", histogram _,
+      """SELECT CAST(floor(value / 50) AS INT) AS bucket, count(*) AS n
+        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin),
+    Query("q_rollup", rollupAgg _,
+      """SELECT coalesce(r_name, 'ALL') AS rname, coalesce(n_name, 'ALL') AS nname,
+        |  count(*) AS n_cust, round(sum(c_acctbal), 2) AS sum_acctbal
+        |FROM customer
+        |JOIN nation ON c_nationkey = n_nationkey
+        |JOIN region ON n_regionkey = r_regionkey
+        |GROUP BY ROLLUP(r_name, n_name)
+        |ORDER BY rname, nname""".stripMargin)
+  )
 }

@@ -1,6 +1,6 @@
 package graft.similarity
 
-import graft.Num
+import graft.{Num, Query}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -73,4 +73,9 @@ object AnnRecall {
           .as("recall"))
       .orderBy("q_id")
   }
+
+  val queries: Seq[Query] = Seq(
+    Query("q_ann_recall", (s, d) => annRecall(s, d), LshOracle.recallSql),
+    Query("q_ann_recall_ivf", (s, d) => annRecallIvf(s, d), KMeansOracle.ivfRecallSql)
+  )
 }

@@ -1,6 +1,6 @@
 package graft.similarity
 
-import graft.Num
+import graft.{Num, Query}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -92,4 +92,8 @@ object Diversity {
         Num.round4((col("cnorm2") - col("dscore")) / lit(2d)).as("centroid_dot"))
       .orderBy("vec_id")
   }
+
+  val queries: Seq[Query] = Seq(
+    Query("q_diversity_sample", (s, d) => diversitySample(s, d), KMeansOracle.diversitySql)
+  )
 }

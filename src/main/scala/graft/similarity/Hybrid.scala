@@ -1,6 +1,6 @@
 package graft.similarity
 
-import graft.{Num, Tables}
+import graft.{Num, Query, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -146,4 +146,54 @@ object Hybrid {
         coalesce(col("sem_rank"), lit(-1L)).as("sem_rank"),
         Num.round4(col("rrf_raw")).as("rrf"))
       .orderBy(col("rrf").desc, col("doc_id").asc)
+
+  val queries: Seq[Query] = Seq(
+    // Hybrid RRF fusion: BM25's exact-rational int64 scoring (see
+    // q_bm25_search) for the query doc's top-3 terms + the IVF probe's
+    // cosine list for its vector (the quantizer replay of q_ann_ivf),
+    // fused as two IEEE divisions of exact integers summed in fixed
+    // order before round4.
+    Query("q_hybrid_search", (s, d) => hybridSearch(s, d),
+      raw"""WITH RECURSIVE
+           |${KMeansOracle.quantCtes.mkString(",\n")},
+           |toks AS (
+           |  SELECT doc_id, unnest(string_split_regex(text, '\s+')) AS tok FROM documents
+           |), qdoc AS (
+           |  SELECT d.doc_id AS q_doc FROM documents d
+           |  JOIN embeddings e ON e.vec_id = d.doc_id
+           |  ORDER BY d.n_chars DESC, d.doc_id LIMIT 1
+           |), tf AS (
+           |  SELECT doc_id, tok, count(*) AS tf FROM toks GROUP BY 1, 2
+           |), dl AS (
+           |  SELECT doc_id, sum(tf) AS dl FROM tf GROUP BY doc_id
+           |), totals AS (
+           |  SELECT count(*) AS n_docs, sum(dl) AS t_tok FROM dl
+           |), dfreq AS (
+           |  SELECT tok, count(*) AS df FROM tf GROUP BY 1
+           |), qtoks AS (
+           |  SELECT tf.tok FROM tf JOIN qdoc ON tf.doc_id = qdoc.q_doc
+           |  ORDER BY tf.tf DESC, tf.tok LIMIT 3
+           |), idf AS (
+           |  SELECT tok, CAST(floor((n_docs - df + 0.5) / (df + 0.5) * 10000 + 0.5) AS BIGINT) AS idf4
+           |  FROM qtoks JOIN dfreq USING (tok), totals
+           |), lexs AS (
+           |  SELECT tf.doc_id, sum(
+           |    CAST(floor(CAST(idf.idf4 * 22 * tf.tf * t.t_tok AS DOUBLE)
+           |      / CAST(10 * tf.tf * t.t_tok + 3 * t.t_tok + 9 * dl.dl * t.n_docs AS DOUBLE)
+           |      + 0.5) AS BIGINT)) AS s4
+           |  FROM tf JOIN idf USING (tok) JOIN dl USING (doc_id), totals t, qdoc
+           |  WHERE tf.doc_id <> qdoc.q_doc
+           |  GROUP BY tf.doc_id
+           |), lex AS (
+           |  SELECT doc_id, row_number() OVER (ORDER BY s4 DESC, doc_id) AS lex_rank
+           |  FROM (SELECT * FROM lexs ORDER BY s4 DESC, doc_id LIMIT 50)
+           |), ${KMeansOracle.hybridSemCtes}
+           |SELECT coalesce(l.doc_id, s.doc_id) AS doc_id,
+           |  CAST(coalesce(l.lex_rank, -1) AS BIGINT) AS lex_rank,
+           |  CAST(coalesce(s.sem_rank, -1) AS BIGINT) AS sem_rank,
+           |  floor((coalesce(1::DOUBLE / (60 + l.lex_rank), 0)
+           |       + coalesce(1::DOUBLE / (60 + s.sem_rank), 0)) * 10000 + 0.5) / 10000 AS rrf
+           |FROM lex l FULL JOIN sem s ON s.doc_id = l.doc_id
+           |ORDER BY rrf DESC, doc_id""".stripMargin)
+  )
 }

@@ -1,6 +1,6 @@
 package graft.similarity
 
-import graft.Num
+import graft.{Num, Query}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -839,4 +839,19 @@ object IvfAnn {
       .toDF("total_settled", "total_batch", "growth_bp",
         "max_cell_growth_bp", "hot_cells", "new_cells", "refit_due")
   }
+
+  val queries: Seq[Query] = Seq(
+    // The k-means family (r15): the deterministic quantizer build —
+    // hash-ordered sample, hash-prefix init, fixed Lloyd rounds,
+    // balance splits with median-mass cuts, routing, remap — replays
+    // end-to-end in DuckDB (KMeansOracle), so all four fit-consuming
+    // queries graduate from rows-only to full rows+schema+hash.
+    Query("q_ann_ivf", (s, d) => ivfTopK(s, d), KMeansOracle.annIvfSql),
+    Query("q_knn_graph", (s, d) => knnGraph(s, d), KMeansOracle.knnGraphSql),
+    Query("q_ivf_delta", (s, d) => ivfDelta(s, d), KMeansOracle.ivfDeltaSql),
+    // r19: the refit/re-rank POLICY consumers — the decision aggregates
+    // over the delta health reports; side effects (artifact republish)
+    // are mode-local and excluded from the declared result by design.
+    Query("q_ivf_refit", (s, d) => ivfRefit(s, d), KMeansOracle.ivfRefitSql)
+  )
 }

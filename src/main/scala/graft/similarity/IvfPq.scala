@@ -1,6 +1,6 @@
 package graft.similarity
 
-import graft.Num
+import graft.{Num, Query}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -213,4 +213,8 @@ object IvfPq {
     */
   private[graft] def codes(spark: SparkSession, dir: String): DataFrame =
     pqIndexFor(spark, dir)._4
+
+  val queries: Seq[Query] = Seq(
+    Query("q_ann_ivfpq", (s, d) => ivfPqTopK(s, d), KMeansOracle.annIvfPqSql)
+  )
 }

@@ -1,6 +1,6 @@
 package graft.similarity
 
-import graft.{Num, Tables}
+import graft.{Num, Query, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -60,4 +60,25 @@ object Knn {
         col("rn").cast("long").as("rn"))
       .orderBy("q_id", "rn")
   }
+
+  val queries: Seq[Query] = Seq(
+    Query("q_knn_cosine", (s, d) => bruteTopK(s, d),
+      """WITH e AS (
+        |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
+        |  FROM embeddings
+        |), n AS (
+        |  SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS nrm FROM e
+        |), s AS (
+        |  SELECT q.vec_id AS q_id, c.vec_id AS nbr_id,
+        |    list_dot_product(q.v, c.v) / (q.nrm * c.nrm) AS cos
+        |  FROM n q JOIN n c ON c.vec_id != q.vec_id
+        |  WHERE q.vec_id < 20
+        |), r AS (
+        |  SELECT q_id, nbr_id, cos,
+        |    row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, nbr_id) AS rn
+        |  FROM s
+        |)
+        |SELECT q_id, nbr_id, floor(cos * 10000 + 0.5) / 10000 AS cos, rn
+        |FROM r WHERE rn <= 5 ORDER BY q_id, rn""".stripMargin)
+  )
 }

@@ -1,6 +1,6 @@
 package graft.similarity
 
-import graft.{Num, Tables}
+import graft.{Num, Query, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -261,4 +261,76 @@ object LexIndex {
       .toDF("n_terms_settled", "n_terms_new", "doc_growth_bp",
         "ttf_growth_bp", "max_top_df_growth_bp", "rerank_due")
   }
+
+  val queries: Seq[Query] = Seq(
+    // Lexical index maintenance (r17): the oracle for the DELTA-merged
+    // dictionary is the FULL REBUILD over the whole corpus — equality
+    // re-proves the merge monoid every round (the cluster-delta
+    // contract). The stats oracle is the same tf derivation plus two
+    // exact int64/int64 divisions round4'd.
+    Query("q_lex_delta", (s, d) => lexDelta(s, d),
+      raw"""WITH toks AS (
+           |  SELECT doc_id, unnest(string_split_regex(text, '\s+')) AS tok FROM documents
+           |), tf AS (
+           |  SELECT doc_id, tok, count(*) AS tf FROM toks GROUP BY 1, 2
+           |)
+           |SELECT tok, count(*) AS df, CAST(sum(tf) AS BIGINT) AS ttf
+           |FROM tf GROUP BY tok ORDER BY tok""".stripMargin),
+    Query("q_lex_stats", (s, d) => lexStats(s, d),
+      raw"""WITH toks AS (
+           |  SELECT doc_id, unnest(string_split_regex(text, '\s+')) AS tok FROM documents
+           |), tf AS (
+           |  SELECT doc_id, tok, count(*) AS tf FROM toks GROUP BY 1, 2
+           |), dl AS (
+           |  SELECT doc_id, sum(tf) AS dl FROM tf GROUP BY doc_id
+           |), totals AS (
+           |  SELECT count(*) AS n_docs, sum(dl) AS t_tok FROM dl
+           |), terms AS (
+           |  SELECT tok, count(*) AS df, sum(tf) AS ttf FROM tf GROUP BY tok
+           |)
+           |SELECT tok, df, CAST(ttf AS BIGINT) AS ttf,
+           |  floor(CAST(df AS DOUBLE) / CAST(n_docs AS DOUBLE) * 10000 + 0.5) / 10000 AS df_frac,
+           |  floor(CAST(ttf AS DOUBLE) / CAST(t_tok AS DOUBLE) * 10000 + 0.5) / 10000 AS mass_frac
+           |FROM terms, totals
+           |ORDER BY df DESC, tok LIMIT $StatsTopK""".stripMargin),
+    Query("q_lex_rerank", (s, d) => lexRerank(s, d),
+      raw"""WITH toks AS (
+           |  SELECT doc_id, unnest(string_split_regex(text, '\s+')) AS tok FROM documents
+           |), tf AS (
+           |  SELECT doc_id, tok, count(*) AS tf FROM toks GROUP BY 1, 2
+           |), sterms AS (
+           |  SELECT tok, count(*) AS df, CAST(sum(tf) AS BIGINT) AS ttf
+           |  FROM tf WHERE doc_id % ${graft.dedup.Dedup.DeltaBatchMod} <> ${graft.dedup.Dedup.DeltaBatchRem} GROUP BY tok
+           |), bterms AS (
+           |  SELECT tok, count(*) AS df, CAST(sum(tf) AS BIGINT) AS ttf
+           |  FROM tf WHERE doc_id % ${graft.dedup.Dedup.DeltaBatchMod} = ${graft.dedup.Dedup.DeltaBatchRem} GROUP BY tok
+           |), joined AS (
+           |  SELECT s.df AS df_s, s.ttf AS ttf_s, b.df AS df_b, b.ttf AS ttf_b
+           |  FROM sterms s FULL OUTER JOIN bterms b ON s.tok = b.tok
+           |), stot AS (
+           |  SELECT count(DISTINCT doc_id) AS n_docs_s, CAST(sum(tf) AS BIGINT) AS t_tok_s
+           |  FROM tf WHERE doc_id % ${graft.dedup.Dedup.DeltaBatchMod} <> ${graft.dedup.Dedup.DeltaBatchRem}
+           |), btot AS (
+           |  SELECT count(DISTINCT doc_id) AS n_docs_b, CAST(sum(tf) AS BIGINT) AS t_tok_b
+           |  FROM tf WHERE doc_id % ${graft.dedup.Dedup.DeltaBatchMod} = ${graft.dedup.Dedup.DeltaBatchRem}
+           |), top AS (
+           |  SELECT tok, df AS df_top FROM sterms
+           |  ORDER BY df DESC, tok LIMIT $StatsTopK
+           |), topd AS (
+           |  SELECT max((coalesce(b.df, 0) * 10000) // t.df_top) AS max_top_df_growth_bp
+           |  FROM top t LEFT JOIN bterms b ON b.tok = t.tok
+           |), agg AS (
+           |  SELECT
+           |    count(*) FILTER (WHERE df_s IS NOT NULL) AS n_terms_settled,
+           |    count(*) FILTER (WHERE df_s IS NULL) AS n_terms_new
+           |  FROM joined
+           |)
+           |SELECT n_terms_settled, n_terms_new,
+           |  (n_docs_b * 10000) // n_docs_s AS doc_growth_bp,
+           |  (t_tok_b * 10000) // t_tok_s AS ttf_growth_bp,
+           |  max_top_df_growth_bp,
+           |  ((n_docs_b * 10000) // n_docs_s >= $RerankGrowthBp)
+           |    OR (max_top_df_growth_bp >= $RerankHotTermBp) AS rerank_due
+           |FROM agg, stot, btot, topd""".stripMargin)
+  )
 }

@@ -1,6 +1,6 @@
 package graft.similarity
 
-import graft.Num
+import graft.{Num, Query}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -162,4 +162,15 @@ object LshAnn {
         col("rn").cast("long").as("rn"))
       .orderBy("q_id", "rn")
   }
+
+  val queries: Seq[Query] = Seq(
+    // LSH embedding queries (r14): fully oracle-backed after all — the
+    // hyperplane table inlines as round-trip double literals and
+    // DuckDB's list_dot_product matches graft_dot's accumulation order
+    // bit-for-bit (the identity q_knn_cosine's oracle has relied on
+    // since r3), so signatures, band keys, multi-probe, and the exact
+    // cosine verify all replay. See LshOracle.
+    Query("q_embed_neardup_lsh", (s, d) => neardupPairs(s, d), LshOracle.neardupSql),
+    Query("q_ann_lsh", (s, d) => annTopK(s, d), LshOracle.annSql)
+  )
 }

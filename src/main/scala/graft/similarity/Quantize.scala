@@ -1,6 +1,6 @@
 package graft.similarity
 
-import graft.{Num, Tables}
+import graft.{Num, Query, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -51,4 +51,28 @@ object Quantize {
           size(col("e")).cast("long").as("n_dims"),
           Num.round4(col("scale")).as("scale"),
           Num.round4(col("max_abs_err")).as("max_abs_err")))
+
+  val queries: Seq[Query] = Seq(
+    // Quantization is elementwise (no accumulation order), so the stats
+    // oracle-check exactly; indexing instead of list_zip keeps DuckDB
+    // struct field naming out of the comparison.
+    Query("q_embed_quantize", (s, d) => quantizeStats(s, d),
+      """WITH e AS (
+        |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings
+        |), s AS (
+        |  SELECT vec_id, v, list_max(list_transform(v, x -> abs(x))) / 127 AS sc FROM e
+        |), q AS (
+        |  SELECT vec_id, v, sc,
+        |    CASE WHEN sc = 0 THEN list_transform(v, x -> 0)
+        |         ELSE list_transform(v, x -> CAST(floor(x / sc + 0.5) AS INT)) END AS qv
+        |  FROM s
+        |)
+        |SELECT vec_id,
+        |  CAST(len(v) AS BIGINT) AS n_dims,
+        |  floor(sc * 10000 + 0.5) / 10000 AS scale,
+        |  CASE WHEN sc = 0 THEN 0.0
+        |       ELSE floor(list_max(list_transform(range(1, len(v) + 1), i -> abs(qv[i] * sc - v[i]))) * 10000 + 0.5) / 10000
+        |  END AS max_abs_err
+        |FROM q ORDER BY vec_id""".stripMargin)
+  )
 }

@@ -1,6 +1,6 @@
 package graft.similarity
 
-import graft.Num
+import graft.{Num, Query}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -41,4 +41,8 @@ object SemDedup {
         .select(col("a"), col("b"), Num.round4(col("cos")).as("cos")),
       "semdedup_pairs", "a", "b")()
   }
+
+  val queries: Seq[Query] = Seq(
+    Query("q_semdedup", (s, d) => semDedupPairs(s, d), KMeansOracle.semdedupSql)
+  )
 }

@@ -1,5 +1,6 @@
 package graft.sources
 
+import graft.Query
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
@@ -200,4 +201,42 @@ object PullIngest {
       windowLen = s"$windowTicks seconds",
       slide = s"$windowTicks seconds",
       watermark = s"${windowTicks * 2} seconds")
+
+  val queries: Seq[Query] = Seq(
+    // pull-ingestion schedule: greedy multi-window rate limiting
+    // t(i) = max_j(t(i-n_j) + w_j), replayed as a recursive CTE whose
+    // working row carries a ring-buffer list of the last max(n_j)
+    // ticks (exactly the per-key state the distributed pass keeps);
+    // limits pinned to PullIngest.GateLimits = (3 per 2, 10 per 20)
+    Query("q_pull_schedule", pullSchedule _,
+      """WITH RECURSIVE base AS (
+        |  SELECT r.r_name AS api_key, c.c_custkey AS req_id,
+        |    row_number() OVER (PARTITION BY r.r_name ORDER BY c.c_custkey) - 1 AS seq
+        |  FROM customer c
+        |  JOIN nation n ON c.c_nationkey = n.n_nationkey
+        |  JOIN region r ON n.n_regionkey = r.r_regionkey
+        |), cnt AS (
+        |  SELECT api_key, count(*) AS n FROM base GROUP BY api_key
+        |), sched AS (
+        |  SELECT api_key, CAST(0 AS BIGINT) AS seq, CAST(0 AS BIGINT) AS t, [CAST(0 AS BIGINT)] AS ring
+        |  FROM base WHERE seq = 0
+        |  UNION ALL
+        |  SELECT u.api_key, u.seq, u.t0 AS t,
+        |    CASE WHEN len(list_append(u.ring, u.t0)) > 10
+        |         THEN list_append(u.ring, u.t0)[-10:]
+        |         ELSE list_append(u.ring, u.t0) END AS ring
+        |  FROM (
+        |    SELECT s.api_key AS api_key, s.seq + 1 AS seq,
+        |      greatest(
+        |        CASE WHEN s.seq + 1 >= 3 THEN s.ring[-3] + 2 ELSE CAST(0 AS BIGINT) END,
+        |        CASE WHEN s.seq + 1 >= 10 THEN s.ring[-10] + 20 ELSE CAST(0 AS BIGINT) END) AS t0,
+        |      s.ring AS ring
+        |    FROM sched s JOIN cnt ON s.api_key = cnt.api_key
+        |    WHERE s.seq + 1 < cnt.n
+        |  ) u
+        |)
+        |SELECT b.api_key, b.req_id, CAST(b.seq AS BIGINT) AS req_seq, s.t AS issue_tick
+        |FROM base b JOIN sched s ON b.api_key = s.api_key AND b.seq = s.seq
+        |ORDER BY 1, 3""".stripMargin)
+  )
 }

@@ -1,6 +1,6 @@
 package graft.sources
 
-import graft.Tables
+import graft.{Query, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -137,4 +137,24 @@ object ScdHistory {
       // The sampling pass re-ran the run-detection windows above the
       // user_id exchange (see Windows.runningSum).
     ).transform(df => graft.Staging.sorted(df, "scd_history_out", "user_id", "version")())
+
+  val queries: Seq[Query] = Seq(
+    Query("q_scd_history", (s, d) => scdHistory(s, d),
+      """WITH e AS (
+        |  SELECT user_id, event_type, epoch_ms(ts) AS ts_ms, event_id,
+        |    lag(event_type) OVER (PARTITION BY user_id ORDER BY epoch_ms(ts), event_id) AS prev_type
+        |  FROM events
+        |), c AS (
+        |  SELECT user_id, event_type, ts_ms, event_id FROM e
+        |  WHERE prev_type IS NULL OR prev_type != event_type
+        |)
+        |SELECT user_id,
+        |  CAST(row_number() OVER w AS BIGINT) AS version,
+        |  event_type,
+        |  ts_ms AS valid_from_ms,
+        |  coalesce(lead(ts_ms) OVER w, 253402300799999) AS valid_to_ms
+        |FROM c
+        |WINDOW w AS (PARTITION BY user_id ORDER BY ts_ms, event_id)
+        |ORDER BY user_id, version""".stripMargin)
+  )
 }

@@ -1,6 +1,6 @@
 package graft.sources
 
-import graft.Tables
+import graft.{Query, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -161,4 +161,71 @@ object SnapshotDiff {
       .limit(DriftTopK)
       .orderBy("tok")
   }
+
+  val queries: Seq[Query] = Seq(
+    // snapshot diff over planted v1/v2 slices; status decode is pure
+    // CASE logic over a keyed full-outer join, text equality stands in
+    // for the sha2 compare (identical verdicts — the hash is a Spark
+    // shuffle-width optimization, not a semantic)
+    Query("q_corpus_diff", (s, d) => corpusDiff(s, d),
+      """WITH v1 AS (
+        |  SELECT doc_id, text AS t1, source AS src1 FROM documents WHERE doc_id % 23 != 3
+        |), v2 AS (
+        |  SELECT doc_id,
+        |    CASE WHEN doc_id % 17 = 2 THEN text || ' rev2' ELSE text END AS t2,
+        |    source AS src2
+        |  FROM documents WHERE doc_id % 29 != 5
+        |), j AS (
+        |  SELECT coalesce(v1.doc_id, v2.doc_id) AS doc_id,
+        |    CASE WHEN v1.doc_id IS NULL THEN 'added'
+        |         WHEN v2.doc_id IS NULL THEN 'removed'
+        |         WHEN t1 != t2 THEN 'changed' END AS status,
+        |    coalesce(src2, src1) AS source
+        |  FROM v1 FULL OUTER JOIN v2 ON v1.doc_id = v2.doc_id
+        |)
+        |SELECT doc_id, status, source FROM j
+        |WHERE status IS NOT NULL ORDER BY doc_id""".stripMargin),
+    // MERGE-apply correctness: the Spark side reconstructs v2 as
+    // v1 anti-join delta-keys ∪ upsert payloads; the oracle derives v2
+    // DIRECTLY from the base table — hash equality proves the merge
+    // mechanics reproduce the target snapshot byte-for-byte
+    Query("q_snapshot_merge", (s, d) => snapshotMerge(s, d),
+      """SELECT doc_id,
+        |  CASE WHEN doc_id % 17 = 2 THEN text || ' rev2' ELSE text END AS text,
+        |  source
+        |FROM documents WHERE doc_id % 29 != 5 ORDER BY doc_id""".stripMargin),
+    // exact per-billion integer rates per snapshot (the Dsir scheme),
+    // signed drift, top-20 absolute movers with token-text tie-break —
+    // every step integer-exact in both engines
+    Query("q_corpus_drift", (s, d) => corpusDrift(s, d),
+      s"""WITH v1 AS (
+         |  SELECT text FROM documents WHERE doc_id % 23 != 3
+         |), v2 AS (
+         |  SELECT CASE WHEN doc_id % 17 = 2 THEN text || ' rev2' ELSE text END AS text
+         |  FROM documents WHERE doc_id % 29 != 5
+         |), tk1 AS (
+         |  SELECT unnest(string_split(text, ' ')) AS tok FROM v1
+         |), tk2 AS (
+         |  SELECT unnest(string_split(text, ' ')) AS tok FROM v2
+         |), c1 AS (
+         |  SELECT tok, count(*) AS cnt1 FROM tk1 GROUP BY tok
+         |  HAVING count(*) >= $DriftMinCount
+         |), c2 AS (
+         |  SELECT tok, count(*) AS cnt2 FROM tk2 GROUP BY tok
+         |  HAVING count(*) >= $DriftMinCount
+         |), t1 AS (SELECT count(*) AS total1 FROM tk1
+         |), t2 AS (SELECT count(*) AS total2 FROM tk2
+         |), j AS (
+         |  SELECT coalesce(c1.tok, c2.tok) AS tok,
+         |    (1000000000 * coalesce(cnt1, 0)) // total1 AS rate1_pb,
+         |    (1000000000 * coalesce(cnt2, 0)) // total2 AS rate2_pb
+         |  FROM c1 FULL OUTER JOIN c2 ON c1.tok = c2.tok
+         |    CROSS JOIN t1 CROSS JOIN t2
+         |), top AS (
+         |  SELECT tok, rate1_pb, rate2_pb, rate2_pb - rate1_pb AS drift_pb
+         |  FROM j ORDER BY abs(rate2_pb - rate1_pb) DESC, tok
+         |  LIMIT $DriftTopK
+         |)
+         |SELECT tok, rate1_pb, rate2_pb, drift_pb FROM top ORDER BY tok""".stripMargin)
+  )
 }

@@ -30,6 +30,20 @@ class StagingSpec extends SparkSpec {
     }
   }
 
+  test("scratch mode: staging a staged frame returns it as is, one scratch copy") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft_scratch").toString
+    spark.conf.set("spark.graft.scratch", dir)
+    try {
+      val once = Staging.staged(Seq(1, 2, 3).toDF("x"), "once")
+      val twice = Staging.staged(once, "twice")
+      val copies = new java.io.File(dir).listFiles().filter(_.getName.startsWith("stage_"))
+      assert(copies.length == 1, s"staging a staged frame wrote ${copies.length} scratch copies")
+      assert(twice eq once, "a staged frame must come back as the same object")
+      assert(twice.as[Int].collect().sorted.toSeq == Seq(1, 2, 3))
+    } finally spark.conf.unset("spark.graft.scratch")
+  }
+
   test("persist mode: AQE cache by default, columnar cache on explicit opt-in, conf restored") {
     import org.apache.spark.sql.execution.columnar.InMemoryRelation
     spark.catalog.clearCache()
