@@ -58,6 +58,12 @@ object Bench {
     */
   val ModeChangedSinceR16: Set[String] = Set.empty
 
+  /** Deletes `f` and, for a directory, everything under it. */
+  private[graft] def rm(f: java.io.File): Unit = {
+    if (f.isDirectory) f.listFiles().foreach(rm)
+    f.delete(): Unit
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // Host-contention probes (HostLoad): sampled BEFORE the session so
@@ -76,10 +82,6 @@ object Bench {
     // field below. The dir is wiped first: a leftover artifact from a
     // prior run must not stand in for this run's warmup publish.
     val artDir = new java.io.File("target/bench_artifacts")
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles().foreach(rm)
-      f.delete(): Unit
-    }
     if (artDir.exists()) rm(artDir)
     spark.conf.set("spark.graft.artifacts", artDir.toString)
     def runOne(name: String, fn: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame): Boolean =

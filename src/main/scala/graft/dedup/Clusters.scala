@@ -317,6 +317,7 @@ object Clusters {
   def clusterDelta(spark: SparkSession, dir: String): DataFrame =
     clusterDeltaOf(
       Tables.documents(spark, dir),
+      Dedup.standingIndex(spark, dir),
       standing => graft.sources.Artifacts.publishedOrCompute(
         spark, "dedup_clusters_settled",
         // The settled slice's CONTENT depends on the batch definition
@@ -324,13 +325,12 @@ object Clusters {
         // join the version key — changing them must invalidate the
         // artifact, not silently serve yesterday's slice.
         s"$ArtifactVersion-batch${Dedup.DeltaBatchMod}r${Dedup.DeltaBatchRem}",
-        Seq(s"$dir/documents.parquet"))(standing()),
-      Some(Dedup.standingIndex(spark, dir)))
+        Seq(s"$dir/documents.parquet"))(standing()))
 
-  /** Frame-level clusterDelta. `viaArtifact` wraps the standing-state
-    * computation and `index` supplies the standing shingle+prefix index
-    * (the declared query routes both through the Artifacts contract;
-    * property tests pass the defaults to stay self-contained).
+  /** Frame-level clusterDelta. `index` is the standing (shingle,
+    * prefix) index of `allDocs` and `viaArtifact` wraps the
+    * standing-state computation (the declared query routes both through
+    * the Artifacts contract; property tests pass the default wrapper).
     *
     * The standing computation is passed as a THUNK (r12):
     * `connectedComponents` is eager (its convergence loop runs actions
@@ -341,8 +341,8 @@ object Clusters {
     */
   private[graft] def clusterDeltaOf(
       allDocs: DataFrame,
-      viaArtifact: (() => DataFrame) => DataFrame = th => th(),
-      index: Option[(DataFrame, DataFrame)] = None): DataFrame = {
+      index: (DataFrame, DataFrame),
+      viaArtifact: (() => DataFrame) => DataFrame = th => th()): DataFrame = {
     import org.apache.spark.sql.Column
     val isBatch = (c: Column) => pmod(c, lit(Dedup.DeltaBatchMod)) === lit(Dedup.DeltaBatchRem)
     // ONE staged shingle + prefix index serves BOTH halves (the r8 scan
@@ -354,20 +354,12 @@ object Clusters {
     // exact verify makes the pair sets identical either way. This also
     // models production truthfully: there is one lake-resident index,
     // not one per consumer.
-    val (sh, prefix) = index.getOrElse {
-      val s = graft.Staging.staged(
-        Dedup.shingles(allDocs).select(col("doc_id"), xxhash64(col("sg")).as("sg")),
-        "shingle_cd")
-      (s, graft.Staging.staged(Dedup.prefixIndex(s, 0.8), "prefix_cd"))
-    }
+    val (sh, prefix) = index
     val settledPrefix = prefix.filter(!isBatch(col("doc_id")))
     // Settled and delta candidate sets both pass the PPJoin+ filters
     // (r11, same conservative pruning as the full-corpus authority —
     // positions ride the shared/published prefix index).
-    def settledPairs = Dedup.verifyJaccardIndexed(
-      Dedup.ppjoinCandidates(
-        Dedup.prefixCollisions(settledPrefix, settledPrefix), 0.8),
-      sh, 0.8)
+    def settledPairs = Dedup.minePairs(settledPrefix, settledPrefix, sh, 0.8)
     val standing = viaArtifact(() =>
       connectedComponentsAdaptive(
         allDocs.filter(!isBatch(col("doc_id"))).select(col("doc_id").as("id")),
@@ -384,11 +376,7 @@ object Clusters {
     // audit measured the mine recomputed 3-4x, ~2/3 of query wall time.
     val batchPrefix = prefix.filter(isBatch(col("doc_id")))
     val delta = graft.Staging.staged(
-      Dedup.verifyJaccardIndexed(
-        Dedup.ppjoinCandidates(
-          Dedup.prefixCollisions(batchPrefix, prefix), 0.8),
-        sh, 0.8).select("a", "b"),
-      "delta_pairs_cd")
+      Dedup.minePairs(batchPrefix, prefix, sh, 0.8).select("a", "b"), "delta_pairs_cd")
     // Super-vertex projection + merge over the touched subgraph only.
     val mapped = delta
       .join(standing.toDF("a", "ca"), Seq("a"), "left")

@@ -37,6 +37,12 @@ object Dedup {
         ).as("sg")
       )
 
+  /** `shingles` with each shingle string replaced by its xxhash64: the
+    * (doc_id, sg: long) posting frame every hashed index here joins on.
+    */
+  private[graft] def hashedShingles(docs: DataFrame, n: Int = 3): DataFrame =
+    shingles(docs, n).select(col("doc_id"), xxhash64(col("sg")).as("sg"))
+
   /** Exact dedup: group by sha2(text). Hashing first means the shuffle
     * carries a 32-byte digest instead of document bodies — at 100 TB the
     * groupBy key must never be the payload itself. Output: the surviving
@@ -187,6 +193,16 @@ object Dedup {
       .agg(collect_list(col("sg")).as("sh"))
     verifyJaccardArrays(cand, arr, threshold)
   }
+
+  /** The pair mine over a positional prefix index: prefix collisions of
+    * `left` against `right` (`left` may be a slice of `right`), the
+    * PPJoin+ filters, then the exact verify against the exploded
+    * shingle index `sh`. Output (a, b, jac), a < b.
+    */
+  private[graft] def minePairs(
+      left: DataFrame, right: DataFrame, sh: DataFrame, threshold: Double): DataFrame =
+    verifyJaccardIndexed(
+      ppjoinCandidates(prefixCollisions(left, right), threshold), sh, threshold)
 
   /** Prefix-filtered exact Jaccard (AllPairs/PPJoin-style): identical
     * output to the full inverted index, but candidates come from the
@@ -413,9 +429,7 @@ object Dedup {
       spark, "neardup_pairs", s"$PairsArtifactVersion-tau$threshold",
       Seq(s"$dir/documents.parquet")) {
       val (sh, prefix) = standingIndex(spark, dir, threshold)
-      verifyJaccardIndexed(
-        ppjoinCandidates(prefixCollisions(prefix, prefix), threshold),
-        sh, threshold)
+      minePairs(prefix, prefix, sh, threshold)
     }
 
   /** Source-overlap matrix (r11): per unordered source pair, how many
@@ -537,12 +551,23 @@ object Dedup {
     */
   private[graft] def minhashCandidates(arr: DataFrame): DataFrame = {
     val bands = minhashBandsOf(arr)
-    bands
-      .toDF("a", "band", "key")
-      .join(bands.toDF("b", "band2", "key2"), col("band") === col("band2") && col("key") === col("key2") && col("a") < col("b"))
-      .select("a", "b")
-      .distinct()
+    bandCandidates(bands, "a", bands, "b")(_ < _)
   }
+
+  /** The banded candidate join every LSH-style index here runs: two
+    * (id, band, key) frames, renamed to (`l`, band, key) and (`r`,
+    * band2, key2), equi-joined on (band, key) under `ids(l, r)`, then
+    * the distinct (`l`, `r`) id pairs. Pairs that share several bands
+    * come out once.
+    */
+  private[graft] def bandCandidates(left: DataFrame, l: String, right: DataFrame, r: String)(
+      ids: (Column, Column) => Column): DataFrame =
+    left
+      .toDF(l, "band", "key")
+      .join(right.toDF(r, "band2", "key2"),
+        col("band") === col("band2") && col("key") === col("key2") && ids(col(l), col(r)))
+      .select(l, r)
+      .distinct()
 
   /** 64-bit SimHash fingerprints: token-frequency-weighted bit vote,
     * computed SCAN-LOCALLY per row by the `graft_simhash` codegen
@@ -594,11 +619,7 @@ object Dedup {
     val bands = fps
       .select(col("doc_id"), explode(array(blockCols: _*)).as("bk"))
       .select(col("doc_id"), col("bk.band").as("band"), col("bk.key").as("key"))
-    val candidates = bands
-      .toDF("a", "band", "key")
-      .join(bands.toDF("b", "band2", "key2"), col("band") === col("band2") && col("key") === col("key2") && col("a") < col("b"))
-      .select("a", "b")
-      .distinct()
+    val candidates = bandCandidates(bands, "a", bands, "b")(_ < _)
     // Not a bare orderBy: its sampling pass would re-run the two
     // fingerprint joins (cached inputs, but the join itself re-executes
     // below the sort).
@@ -632,11 +653,20 @@ object Dedup {
     decontaminateOf(Tables.documents(spark, dir))
 
   private[graft] def decontaminateOf(docs: DataFrame): DataFrame = {
-    val isEval = pmod(col("doc_id"), lit(20)) === 0
-    val sh = shingles(docs, DecontamN).select(col("doc_id"), xxhash64(col("sg")).as("sg"))
-    val evalSh = sh.filter(isEval).select("sg").distinct()
-    val hits = sh
-      .filter(!isEval)
+    val sh = hashedShingles(docs, DecontamN)
+    overlapVerdicts(docs, sh.filter(!isEval), sh.filter(isEval).select("sg").distinct())
+  }
+
+  /** The held-out eval slice: doc_id % 20 == 0. */
+  private def isEval: Column = pmod(col("doc_id"), lit(20)) === 0
+
+  /** Verdict tail shared by both decontaminations: the non-eval corpus
+    * shingles `corpusSh` (doc_id, sg) that equal an eval shingle in
+    * `evalSh` (sg) are counted per doc, and every non-eval doc of
+    * `docs` gets its count and verdict (n_overlap = 0 when clean).
+    */
+  private def overlapVerdicts(docs: DataFrame, corpusSh: DataFrame, evalSh: DataFrame): DataFrame = {
+    val hits = corpusSh
       .join(evalSh, "sg")
       .groupBy("doc_id")
       .agg(count(lit(1)).as("n_overlap"))
@@ -691,17 +721,18 @@ object Dedup {
     * in place by `evalDecontamIndex`.
     */
   private[graft] def decontaminateBloomOf(docs: DataFrame): DataFrame =
-    bloomDecontam(docs, evalDecontamIndex(docs.filter(pmod(col("doc_id"), lit(20)) === 0)))
+    bloomDecontam(docs, evalDecontamIndex(docs.filter(isEval)))
 
-  /** The eval set's bloom sketch: one bounded aggregate over the
-    * distinct eval shingles, fetched to the driver. An empty eval set
-    * aggregates to a NULL sketch (see `bloomDecontam`).
+  /** The eval index of distinct eval shingles `evalSh`: its bloom
+    * sketch, one bounded aggregate fetched to the driver, beside the
+    * frame itself. An empty eval set aggregates to a NULL sketch (see
+    * `bloomDecontam`).
     */
-  private def bloomOf(evalSh: DataFrame): Array[Byte] =
-    evalSh
+  private def withBloom(evalSh: DataFrame): (Array[Byte], DataFrame) =
+    (evalSh
       .agg(call_function("graft_bloom_agg", col("sg"), lit(BloomCapacity)).as("bloom"))
       .head()
-      .getAs[Array[Byte]]("bloom")
+      .getAs[Array[Byte]]("bloom"), evalSh)
 
   /** Shared bloom-prune + exact-confirm over the non-eval docs, given
     * the eval index (bloom, distinct eval shingles): scan-side
@@ -711,26 +742,13 @@ object Dedup {
     */
   private def bloomDecontam(docs: DataFrame, evalIndex: (Array[Byte], DataFrame)): DataFrame = {
     val (bloom, evalSh) = evalIndex
-    val isEval = pmod(col("doc_id"), lit(20)) === 0
-    val corpusSh = shingles(docs.filter(!isEval), DecontamN)
-      .select(col("doc_id"), xxhash64(col("sg")).as("sg"))
+    val corpusSh = hashedShingles(docs.filter(!isEval), DecontamN)
     // An empty eval set aggregates to a NULL sketch: nothing can be
     // contaminated, so the candidate set is empty by definition.
     val candidates =
       if (bloom == null) corpusSh.limit(0)
       else corpusSh.filter(call_function("graft_might_contain", lit(bloom), col("sg")))
-    val hits = candidates
-      .join(evalSh, "sg")
-      .groupBy("doc_id")
-      .agg(count(lit(1)).as("n_overlap"))
-    docs.filter(!isEval)
-      .select("doc_id")
-      .join(hits, Seq("doc_id"), "left")
-      .select(
-        col("doc_id"),
-        coalesce(col("n_overlap"), lit(0L)).as("n_overlap"),
-        (coalesce(col("n_overlap"), lit(0L)) > 0).as("contaminated"))
-      .orderBy("doc_id")
+    overlapVerdicts(docs, candidates, evalSh)
   }
 
   /** Eval-side decontamination index: the distinct hashed eval shingles
@@ -740,11 +758,12 @@ object Dedup {
     * the streaming ingest gate takes them as parameters because a
     * stream must not rebuild an index per micro-batch.
     */
-  private[graft] def evalDecontamIndex(evalDocs: DataFrame): (Array[Byte], DataFrame) = {
-    val evalSh = shingles(evalDocs, DecontamN)
-      .select(xxhash64(col("sg")).as("sg")).distinct()
-    (bloomOf(evalSh), evalSh)
-  }
+  private[graft] def evalDecontamIndex(evalDocs: DataFrame): (Array[Byte], DataFrame) =
+    withBloom(evalShingles(evalDocs))
+
+  /** The distinct hashed shingles (sg) of the eval docs. */
+  private def evalShingles(evalDocs: DataFrame): DataFrame =
+    hashedShingles(evalDocs, DecontamN).select("sg").distinct()
 
   /** Version tag for the published eval index (bump on any change to
     * the shingle width, hashing, or eval-slice definition).
@@ -764,15 +783,10 @@ object Dedup {
     * keeping Verify self-contained.
     */
   private[graft] def evalDecontamIndexPublished(
-      spark: SparkSession, dir: String): (Array[Byte], DataFrame) = {
-    val evalSh = graft.sources.Artifacts.publishedOrCompute(
+      spark: SparkSession, dir: String): (Array[Byte], DataFrame) =
+    withBloom(graft.sources.Artifacts.publishedOrCompute(
       spark, "decontam_eval_index", EvalIndexArtifactVersion, Seq(s"$dir/documents.parquet"))(
-      shingles(
-        Tables.documents(spark, dir).filter(pmod(col("doc_id"), lit(20)) === 0),
-        DecontamN)
-        .select(xxhash64(col("sg")).as("sg")).distinct())
-    (bloomOf(evalSh), evalSh)
-  }
+      evalShingles(Tables.documents(spark, dir).filter(isEval))))
 
   /** Ingest-time decontamination gate: drop documents sharing an 8-gram
     * with the eval set, exactly — the micro-batch transform a streaming
@@ -817,8 +831,10 @@ object Dedup {
   /** Version tag for the published standing index (bump on any change
     * to shingling width, hashing, the prefix rule, or the published
     * LAYOUT — v2 sorts the shingle table by sg so hash probes prune).
+    * A constant (`final val` of a literal), so `PairsArtifactVersion`,
+    * defined earlier in this object, reads it already set.
     */
-  val IndexArtifactVersion = "3gram-xxhash64-prefix-tau0.8-v2"
+  final val IndexArtifactVersion = "3gram-xxhash64-prefix-tau0.8-v2"
 
   /** The published shingle table alone, not staged again: for
     * single-probe consumers (`substrSearch`) that want one pruned
@@ -835,9 +851,7 @@ object Dedup {
   private[graft] def publishedShingleIndex(spark: SparkSession, dir: String): DataFrame =
     graft.sources.Artifacts.publishedOrCompute(
       spark, "shingle_index_sh", IndexArtifactVersion, Seq(s"$dir/documents.parquet"))(
-      shingles(Tables.documents(spark, dir))
-        .select(col("doc_id"), xxhash64(col("sg")).as("sg"))
-        .sort("sg"))
+      hashedShingles(Tables.documents(spark, dir)).sort("sg"))
 
   /** The STANDING shingle + prefix index of the corpus, via the
     * Artifacts contract: the lake-resident index every incremental
@@ -901,9 +915,7 @@ object Dedup {
     // batch-incident collision set passes the same conservative length
     // + positional pruning as the full-corpus authority before the
     // exact verify pays for it.
-    verifyJaccardIndexed(
-      ppjoinCandidates(prefixCollisions(batchPrefix, prefix), threshold),
-      sh, threshold)
+    minePairs(batchPrefix, prefix, sh, threshold)
   }
 
   /** Block count for the exact all-pairs embedding compare. */

@@ -110,6 +110,21 @@ object Bpe {
     out
   }
 
+  /** One merge step, the rule the trainer learns and the encoder
+    * applies: scanning left to right, each adjacent (l, r) becomes the
+    * one symbol l + r; an r consumed by a merge cannot start another.
+    */
+  private[graft] def mergePair(syms: Array[String], l: String, r: String): Array[String] = {
+    val out = new scala.collection.mutable.ArrayBuffer[String](syms.length)
+    var k = 0
+    while (k < syms.length) {
+      if (k + 1 < syms.length && syms(k) == l && syms(k + 1) == r) {
+        out += l + r; k += 2
+      } else { out += syms(k); k += 1 }
+    }
+    out.toArray
+  }
+
   /** Encode one pre-token (word, with its leading space if non-initial). */
   def encodePre(pre: String): Array[Int] = {
     var syms = toSymbols(pre)
@@ -125,14 +140,7 @@ object Bpe {
       if (best == Int.MaxValue) done = true
       else {
         val (l, r) = Merges(best)
-        val out = new scala.collection.mutable.ArrayBuffer[String](syms.length)
-        var k = 0
-        while (k < syms.length) {
-          if (k + 1 < syms.length && syms(k) == l && syms(k + 1) == r) {
-            out += l + r; k += 2
-          } else { out += syms(k); k += 1 }
-        }
-        syms = out.toArray
+        syms = mergePair(syms, l, r)
         done = syms.length <= 1
       }
     }

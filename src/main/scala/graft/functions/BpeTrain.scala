@@ -75,19 +75,7 @@ object BpeTrain {
         }
         merges += best
         val (l, r) = best
-        words = words.map { case (syms, c) =>
-          if (syms.length < 2) (syms, c)
-          else {
-            val out = new scala.collection.mutable.ArrayBuffer[String](syms.length)
-            var k = 0
-            while (k < syms.length) {
-              if (k + 1 < syms.length && syms(k) == l && syms(k + 1) == r) {
-                out += l + r; k += 2
-              } else { out += syms(k); k += 1 }
-            }
-            (out.toArray, c)
-          }
-        }
+        words = words.map { case (syms, c) => (Bpe.mergePair(syms, l, r), c) }
         m += 1
       }
     }

@@ -1,6 +1,7 @@
 package graft.multimodal
 
 import graft.{Query, Tables}
+import graft.multimodal.PngCodec.be
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -158,11 +159,6 @@ object BinaryPipeline {
 
   // --- byte-level parsers (pure JVM, no native libs) ---
 
-  private def be(b: Array[Byte], off: Int, n: Int): Int = {
-    var v = 0; var i = 0
-    while (i < n) { v = (v << 8) | (b(off + i) & 0xff); i += 1 }
-    v
-  }
   private def be8(b: Array[Byte], off: Int): Long = {
     var v = 0L; var i = 0
     while (i < 8) { v = (v << 8) | (b(off + i) & 0xff); i += 1 }
@@ -566,12 +562,23 @@ object PixelPipeline {
     * a PNG header there get full pixels here), one complete encoded
     * PNG per row.
     */
-  def pixelMediaTable(spark: SparkSession, dir: String): DataFrame = {
+  def pixelMediaTable(spark: SparkSession, dir: String): DataFrame =
+    assetTable(spark, dir, 0) { id =>
+      val w = pxW(id); val h = pxH(id)
+      PngCodec.encode(w, h, renderPixels(id, w, h))
+    }
+
+  /** One synthesized asset per document with doc_id % 6 == `residue`:
+    * (media_id, payload = `encode(media_id)`), encoded in
+    * `DecodeBatchSize` batches inside mapPartitions.
+    */
+  private def assetTable(spark: SparkSession, dir: String, residue: Int)(
+      encode: Long => Array[Byte]): DataFrame = {
     implicit val idEnc = Encoders.scalaLong
     implicit val outEnc = Encoders.tuple(Encoders.scalaLong, Encoders.BINARY)
     Tables
       .documents(spark, dir)
-      .filter(pmod(col("doc_id"), lit(6)) === 0)
+      .filter(pmod(col("doc_id"), lit(6)) === residue)
       .select(col("doc_id"))
       // Explicit numPartitions (r19): a bare repartition(col) is AQE-
       // coalescible and the bytes upstream of the synth/decode are tiny,
@@ -581,10 +588,7 @@ object PixelPipeline {
         spark.conf.get("spark.sql.shuffle.partitions").toInt, col("doc_id"))
       .as[Long]
       .mapPartitions { it =>
-        it.grouped(BinaryPipeline.DecodeBatchSize).flatMap(_.map { id =>
-          val w = pxW(id); val h = pxH(id)
-          (id, PngCodec.encode(w, h, renderPixels(id, w, h)))
-        })
+        it.grouped(BinaryPipeline.DecodeBatchSize).flatMap(_.map(id => (id, encode(id))))
       }
       .toDF("media_id", "payload")
   }
@@ -630,28 +634,11 @@ object PixelPipeline {
     * encoded JFIF per row — real Annex-K Huffman scan data, block-
     * constant content so the decode roundtrip is exact (see JpegCodec).
     */
-  def jpegMediaTable(spark: SparkSession, dir: String): DataFrame = {
-    implicit val idEnc = Encoders.scalaLong
-    implicit val outEnc = Encoders.tuple(Encoders.scalaLong, Encoders.BINARY)
-    Tables
-      .documents(spark, dir)
-      .filter(pmod(col("doc_id"), lit(6)) === 3)
-      .select(col("doc_id"))
-      // Explicit numPartitions (r19): a bare repartition(col) is AQE-
-      // coalescible and the bytes upstream of the synth/decode are tiny,
-      // so the CPU-dense decode stage collapsed to ~1 task; pin to
-      // session parallelism (same rationale as Dedup.dfOrderedIndex).
-      .repartition(
-        spark.conf.get("spark.sql.shuffle.partitions").toInt, col("doc_id"))
-      .as[Long]
-      .mapPartitions { it =>
-        it.grouped(BinaryPipeline.DecodeBatchSize).flatMap(_.map { id =>
-          val bw = jpgBw(id); val bh = jpgBh(id)
-          (id, JpegCodec.encode(bw * 8, bh * 8, renderJpegPixels(id, bw, bh)))
-        })
-      }
-      .toDF("media_id", "payload")
-  }
+  def jpegMediaTable(spark: SparkSession, dir: String): DataFrame =
+    assetTable(spark, dir, 3) { id =>
+      val bw = jpgBw(id); val bh = jpgBh(id)
+      JpegCodec.encode(bw * 8, bh * 8, renderJpegPixels(id, bw, bh))
+    }
 
   /** q_media_pixels_jpeg: the JPEG twin of `mediaPixels` — full entropy
     * decode (Huffman + dequant + IDCT + YCbCr→RGB) per asset, exact
@@ -662,32 +649,8 @@ object PixelPipeline {
     * marker walk, Huffman tables, dequant, IDCT, or color math breaks
     * the hash gate.
     */
-  def mediaPixelsJpeg(spark: SparkSession, dir: String): DataFrame = {
-    implicit val inEnc = Encoders.tuple(Encoders.scalaLong, Encoders.BINARY)
-    implicit val statEnc = Encoders.product[PixelStats]
-    jpegMediaTable(spark, dir)
-      .select(col("media_id"), col("payload"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.grouped(BinaryPipeline.DecodeBatchSize).flatMap(_.map { case (id, bytes) =>
-          JpegCodec.decode(bytes) match {
-            case Some(img) =>
-              val (sr, sg, sb) = img.channelSums
-              PixelStats(id, img.width, img.height, img.width.toLong * img.height, sr, sg, sb)
-            case None => PixelStats(id, 0, 0, -1L, 0L, 0L, 0L)
-          }
-        })
-      }
-      .toDF("media_id", "width", "height", "n_px", "sr", "sg", "sb")
-      .select(
-        col("media_id"), col("width"), col("height"), col("n_px"),
-        graft.Num.round4(col("sr").cast("double") / col("n_px")).as("mean_r"),
-        graft.Num.round4(col("sg").cast("double") / col("n_px")).as("mean_g"),
-        graft.Num.round4(col("sb").cast("double") / col("n_px")).as("mean_b"))
-      // The bare orderBy's sampling pass re-decoded every image a
-      // second time.
-      .transform(df => graft.Staging.sorted(df, "media_pixels_out", "media_id")())
-  }
+  def mediaPixelsJpeg(spark: SparkSession, dir: String): DataFrame =
+    pixelStats(jpegMediaTable(spark, dir))(JpegCodec.decode)
 
   /** DuckDB replay of q_media_pixels_jpeg: blocks from the id formula,
     * the codec's fixed-point YCbCr roundtrip per block (floor division
@@ -735,21 +698,26 @@ object PixelPipeline {
        |FROM sums ORDER BY media_id""".stripMargin
   }
 
-  /** Decode + per-channel stats: batched full-frame decode, exact
-    * int64 channel sums (order-defined within a frame, one row out per
-    * asset — no cross-row float accumulation anywhere), means as one
-    * int/int double division + round4. A PNG that fails to decode
-    * surfaces as n_px = -1 rather than vanishing.
+  /** q_media_pixels: `pixelStats` over the PNG assets. */
+  def mediaPixels(spark: SparkSession, dir: String): DataFrame =
+    pixelStats(pixelMediaTable(spark, dir))(PngCodec.decode)
+
+  /** Decode + per-channel stats over a (media_id, payload) asset table:
+    * batched full-frame `decode`, exact int64 channel sums
+    * (order-defined within a frame, one row out per asset — no
+    * cross-row float accumulation anywhere), means as one int/int
+    * double division + round4. An asset that fails to decode surfaces
+    * as n_px = -1 rather than vanishing.
     */
-  def mediaPixels(spark: SparkSession, dir: String): DataFrame = {
+  private def pixelStats(assets: DataFrame)(decode: Array[Byte] => Option[RgbImage]): DataFrame = {
     implicit val inEnc = Encoders.tuple(Encoders.scalaLong, Encoders.BINARY)
     implicit val statEnc = Encoders.product[PixelStats]
-    pixelMediaTable(spark, dir)
+    assets
       .select(col("media_id"), col("payload"))
       .as[(Long, Array[Byte])]
       .mapPartitions { it =>
         it.grouped(BinaryPipeline.DecodeBatchSize).flatMap(_.map { case (id, bytes) =>
-          PngCodec.decode(bytes) match {
+          decode(bytes) match {
             case Some(img) =>
               val (sr, sg, sb) = img.channelSums
               PixelStats(id, img.width, img.height, img.width.toLong * img.height, sr, sg, sb)

@@ -34,21 +34,6 @@ import scala.collection.mutable.ArrayBuffer
   */
 object JpegCodec {
 
-  final case class JpegImage(width: Int, height: Int, pixels: Array[Byte]) {
-    /** Exact per-channel int64 sums over the interleaved RGB payload. */
-    def channelSums: (Long, Long, Long) = {
-      var sr = 0L; var sg = 0L; var sb = 0L
-      var i = 0
-      while (i < pixels.length) {
-        sr += pixels(i) & 0xff
-        sg += pixels(i + 1) & 0xff
-        sb += pixels(i + 2) & 0xff
-        i += 3
-      }
-      (sr, sg, sb)
-    }
-  }
-
   /** Zigzag scan order: i-th scanned coefficient's raster index. */
   private val ZigZag: Array[Int] = Array(
     0, 1, 8, 16, 9, 2, 3, 10,
@@ -443,7 +428,7 @@ object JpegCodec {
     * supported envelope (progressive, subsampled, restart-marked, >2
     * quant precision, truncated scans).
     */
-  def decode(b: Array[Byte]): Option[JpegImage] = {
+  def decode(b: Array[Byte]): Option[RgbImage] = {
     if (b.length < 4 || (b(0) & 0xff) != 0xff || (b(1) & 0xff) != 0xd8) return None
     val quant = Array.ofDim[Int](4, 64)
     val dcTabs = new Array[DecTable](4)
@@ -585,6 +570,6 @@ object JpegCodec {
       }
       y += 1
     }
-    Some(JpegImage(w, h, rgb))
+    Some(RgbImage(w, h, rgb))
   }
 }

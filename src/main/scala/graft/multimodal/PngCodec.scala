@@ -2,6 +2,22 @@ package graft.multimodal
 
 import java.util.zip.{CRC32, Deflater, Inflater}
 
+/** A decoded 8-bit RGB frame, pixels interleaved r, g, b row-major —
+  * what both `PngCodec.decode` and `JpegCodec.decode` return.
+  */
+final case class RgbImage(width: Int, height: Int, pixels: Array[Byte]) {
+  /** Exact per-channel byte sums (r, g, b) — int64, order-defined. */
+  def channelSums: (Long, Long, Long) = {
+    var r = 0L; var g = 0L; var b = 0L
+    var i = 0
+    while (i + 2 < pixels.length) {
+      r += pixels(i) & 0xff; g += pixels(i + 1) & 0xff; b += pixels(i + 2) & 0xff
+      i += 3
+    }
+    (r, g, b)
+  }
+}
+
 /** Pure-JVM PNG codec: full-frame pixel decode (zlib inflate + all five
   * scanline unfilters + chunk-CRC verification) and the matching
   * encoder the media generator uses to synthesize REAL pixel-bearing
@@ -29,19 +45,6 @@ object PngCodec {
   private val Signature: Array[Byte] =
     Array(0x89, 0x50, 0x4e, 0x47, 0x0d, 0x0a, 0x1a, 0x0a).map(_.toByte)
 
-  final case class PngImage(width: Int, height: Int, pixels: Array[Byte]) {
-    /** Exact per-channel byte sums (r, g, b) — int64, order-defined. */
-    def channelSums: (Long, Long, Long) = {
-      var r = 0L; var g = 0L; var b = 0L
-      var i = 0
-      while (i + 2 < pixels.length) {
-        r += pixels(i) & 0xff; g += pixels(i + 1) & 0xff; b += pixels(i + 2) & 0xff
-        i += 3
-      }
-      (r, g, b)
-    }
-  }
-
   // ---------------------------------------------------------------- decode
 
   /** Decode a complete PNG: chunk walk (CRC-verified), IDAT
@@ -49,7 +52,7 @@ object PngCodec {
     * structural violation — truncated stream, bad CRC, unsupported
     * layout, inflated size mismatch — never a partial image.
     */
-  def decode(b: Array[Byte]): Option[PngImage] = {
+  def decode(b: Array[Byte]): Option[RgbImage] = {
     if (b.length < Signature.length + 12) return None
     var i = 0
     while (i < Signature.length) {
@@ -116,7 +119,7 @@ object PngCodec {
       }
       y += 1
     }
-    Some(PngImage(w, h, out))
+    Some(RgbImage(w, h, out))
   }
 
   /** Paeth predictor (RFC 2083 §6.6): nearest of a/b/c to a+b-c with
@@ -145,7 +148,8 @@ object PngCodec {
     } finally inf.end()
   }
 
-  private def be(b: Array[Byte], off: Int, n: Int): Int = {
+  /** The n-byte big-endian unsigned integer at `off` (n <= 4). */
+  private[multimodal] def be(b: Array[Byte], off: Int, n: Int): Int = {
     var v = 0; var i = 0
     while (i < n) { v = (v << 8) | (b(off + i) & 0xff); i += 1 }
     v

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Num, Query, Tables}
+import graft.{Num, Query}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -35,11 +35,7 @@ object StatsHistory {
     // Event grain: everything per-user computed in one window partitioning.
     // v100: exact scaled-int sums (float window/group sums diverge from
     // DuckDB in the last ulp; values carry 2 decimals).
-    val e = Tables
-      .events(spark, dir)
-      .select(col("user_id"), col("event_type"), col("event_id"), col("ts"), col("value"))
-      .withColumn("ts_ms", unix_millis(col("ts")))
-      .withColumn("v100", floor(col("value") * 100 + 0.5).cast("long"))
+    val e = Windows.timedEvents(spark, dir, "user_id", "event_type", "event_id", "ts", "value")
       .withColumn("w", when(col("value") >= 100, 1).otherwise(0))
       .withColumn("rn", row_number().over(byTimeDesc).cast("long"))
       .withColumn("max_ts", max("ts_ms").over(byUser))

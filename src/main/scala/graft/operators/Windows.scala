@@ -3,13 +3,38 @@ package graft.operators
 import graft.{Query, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.expressions.{Window, WindowSpec}
 
 /** Window / time-series operators. All windows partition by a
   * high-cardinality key (user_id) so the work parallelizes across
   * executors; there is no global single-partition window anywhere.
   */
 object Windows {
+
+  /** The events columns `cols` plus `ts_ms` (event time in epoch
+    * millis, the order key of every RANGE frame below) and `v100` (the
+    * 2-decimal value as an exact int64 of cents: window sums over it
+    * are association-order-independent, so averages built on them match
+    * DuckDB's segment-tree accumulation bit for bit). Queries that do
+    * not read `v100` lose it to column pruning.
+    */
+  private[operators] def timedEvents(spark: SparkSession, dir: String, cols: String*): DataFrame =
+    Tables
+      .events(spark, dir)
+      .select(cols.map(col): _*)
+      .withColumn("ts_ms", unix_millis(col("ts")))
+      .withColumn("v100", floor(col("value") * 100 + 0.5).cast("long"))
+
+  /** A user's events in the `days` before now, exclusive of now, over
+    * `ts_ms`; each of `keys` (event_type for the same-type frames)
+    * narrows it to events sharing the current row's value. The one
+    * RANGE frame of the lookback queries.
+    */
+  private def trailing(days: Int, keys: String*): WindowSpec =
+    Window
+      .partitionBy("user_id", keys: _*)
+      .orderBy(col("ts_ms"))
+      .rangeBetween(-days.toLong * 24 * 3600 * 1000, -1)
 
   /** Running cumulative sum per entity ordered by event time.
     * Reference: utils.py:499-514 (effective_gold_spent accumulates over
@@ -90,10 +115,7 @@ object Windows {
     * half-way doubles (Spark BigDecimal HALF_UP vs DuckDB float-scaled).
     */
   def asofLookback(spark: SparkSession, dir: String): DataFrame = {
-    val w = Window
-      .partitionBy("user_id")
-      .orderBy(col("ts_ms"))
-      .rangeBetween(-7L * 24 * 3600 * 1000, -1)
+    val w = trailing(7)
     // avg over EXACT scaled-integer sums (values are 2-decimal by
     // schema): a double window-avg diverges between engines in the low
     // bits — large RANGE frames go through DuckDB's segment-tree
@@ -102,11 +124,7 @@ object Windows {
     // rounding boundary (sf0.01 never hit one; found by the r12
     // sf0.1 cross-engine sweep). sum(v100)/(100·n) divides the SAME
     // exact int64 operands in both engines → bit-identical IEEE result.
-    Tables
-      .events(spark, dir)
-      .select("event_id", "user_id", "ts", "value")
-      .withColumn("ts_ms", unix_millis(col("ts")))
-      .withColumn("v100", floor(col("value") * 100 + 0.5).cast("long"))
+    timedEvents(spark, dir, "event_id", "user_id", "ts", "value")
       .withColumn("avg_7d",
         graft.Num.round4(
           sum("v100").over(w).cast("double") / (count("v100").over(w) * lit(100.0))))
@@ -166,30 +184,18 @@ object Windows {
     * Reference: get_stats_history (utils.py:736-860).
     */
   def multiWindowLookback(spark: SparkSession, dir: String): DataFrame = {
-    def trailing(days: Int) = Window
-      .partitionBy("user_id")
-      .orderBy(col("ts_ms"))
-      .rangeBetween(-days.toLong * 24 * 3600 * 1000, -1)
-    val byType = Window
-      .partitionBy("user_id", "event_type")
-      .orderBy(col("ts_ms"))
-      .rangeBetween(-7L * 24 * 3600 * 1000, -1)
     // Averages via EXACT integer window sums: values carry 2 decimals, so
     // sum(value*100 as long) is association-order-independent — float
     // window sums disagree with DuckDB's segment-tree accumulation in the
     // last ulp once frames grow past its leaf size.
-    def exactAvg(w: org.apache.spark.sql.expressions.WindowSpec) =
+    def exactAvg(w: WindowSpec) =
       graft.Num.round4(sum("v100").over(w).cast("double") / (count(lit(1)).over(w) * lit(100.0)))
-    Tables
-      .events(spark, dir)
-      .select("event_id", "user_id", "event_type", "ts", "value")
-      .withColumn("ts_ms", unix_millis(col("ts")))
-      .withColumn("v100", floor(col("value") * 100 + 0.5).cast("long"))
+    timedEvents(spark, dir, "event_id", "user_id", "event_type", "ts", "value")
       .withColumn("avg_7d", exactAvg(trailing(7)))
       .withColumn("avg_14d", exactAvg(trailing(14)))
       .withColumn("avg_21d", exactAvg(trailing(21)))
       .withColumn("n_7d", count(lit(1)).over(trailing(7)))
-      .withColumn("avg_7d_type", exactAvg(byType))
+      .withColumn("avg_7d_type", exactAvg(trailing(7, "event_type")))
       .select("event_id", "user_id", "avg_7d", "avg_14d", "avg_21d", "n_7d", "avg_7d_type")
       .transform(df => graft.Staging.sorted(df, "lookback_multiwindow_out", "event_id")())
   }
@@ -209,25 +215,14 @@ object Windows {
     * history has zero available matches).
     */
   def statsAvailability(spark: SparkSession, dir: String): DataFrame = {
-    def trailing(days: Int) = Window
-      .partitionBy("user_id")
-      .orderBy(col("ts_ms"))
-      .rangeBetween(-days.toLong * 24 * 3600 * 1000, -1)
-    val byType = Window
-      .partitionBy("user_id", "event_type")
-      .orderBy(col("ts_ms"))
-      .rangeBetween(-7L * 24 * 3600 * 1000, -1)
-    def condCount(cond: Column, w: org.apache.spark.sql.expressions.WindowSpec) =
+    def condCount(cond: Column, w: WindowSpec) =
       coalesce(sum(when(cond, 1L).otherwise(0L)).over(w), lit(0L))
-    Tables
-      .events(spark, dir)
-      .select("event_id", "user_id", "event_type", "ts", "value")
-      .withColumn("ts_ms", unix_millis(col("ts")))
+    timedEvents(spark, dir, "event_id", "user_id", "event_type", "ts", "value")
       .withColumn("n_7d", count(lit(1)).over(trailing(7)))
       .withColumn("n_21d", count(lit(1)).over(trailing(21)))
       .withColumn("n_high_7d", condCount(col("value") >= 100, trailing(7)))
       .withColumn("n_counted_7d", condCount(col("value") >= 10, trailing(7)))
-      .withColumn("n_same_type_7d", count(lit(1)).over(byType))
+      .withColumn("n_same_type_7d", count(lit(1)).over(trailing(7, "event_type")))
       .select("event_id", "user_id", "n_7d", "n_21d", "n_high_7d", "n_counted_7d", "n_same_type_7d")
       .transform(df => graft.Staging.sorted(df, "stats_availability_out", "event_id")())
   }
@@ -253,11 +248,7 @@ object Windows {
       when(
         count(lit(1)).over(lastN(n)) === n,
         graft.Num.round4(sum("v100").over(lastN(n)).cast("double") / lit(n * 100.0)))
-    Tables
-      .events(spark, dir)
-      .select("event_id", "user_id", "event_type", "ts", "value")
-      .withColumn("ts_ms", unix_millis(col("ts")))
-      .withColumn("v100", floor(col("value") * 100 + 0.5).cast("long"))
+    timedEvents(spark, dir, "event_id", "user_id", "event_type", "ts", "value")
       .withColumn("delta2", delta(2))
       .withColumn("delta3", delta(3))
       .withColumn("delta4", delta(4))

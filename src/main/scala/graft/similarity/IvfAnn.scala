@@ -1,6 +1,6 @@
 package graft.similarity
 
-import graft.{Num, Query}
+import graft.Query
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -500,36 +500,8 @@ object IvfAnn {
     val scored = probes
       .join(assigned.toDF("nbr_id", "ce", "cn", "cell2"),
         col("cell2") === col("cell") && col("nbr_id") =!= col("q_id"))
-      .withColumn("cos", expr("graft_dot(qe, ce)") / (col("qn") * col("cn")))
-    topKPerQuery(scored)
-  }
-
-  /** Per-query top-k over a (q_id, nbr_id, cos) candidate stream,
-    * written so Catalyst's InferWindowGroupLimit fires: the filter
-    * compares the raw row_number ATTRIBUTE against a literal (the long
-    * cast happens AFTER the filter — r10..r14 cast first, which hid
-    * the pattern from the rule and silently bought the naive window
-    * plan: a full candidate-volume shuffle + sort, 8.8 GB peak task
-    * memory at the 500k-doc decade point). With the rule matched, the
-    * physical plan carries WindowGroupLimitExec in Partial mode BEFORE
-    * the exchange — a per-key bounded top-k on the map side, so each
-    * mapper ships at most k rows per q_id it saw — and Final mode
-    * after, with the actual Window running over ≤k rows per key.
-    * Native operator, whole plan codegen-eligible, no custom code on
-    * the hot path (a custom TypedImperativeAggregate heap was
-    * prototyped and dropped: ObjectHashAggregate's 128-key sort-based
-    * fallback re-materializes the candidate sort for any
-    * high-cardinality grouping — same memory shape as the naive
-    * window, none of the native path's codegen/plan-visibility).
-    */
-  private[graft] def topKPerQuery(scored: DataFrame): DataFrame = {
-    val w = Window.partitionBy("q_id").orderBy(col("cos").desc, col("nbr_id").asc)
-    scored
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= Knn.TopK)
-      .select(col("q_id"), col("nbr_id"), Num.round4(col("cos")).as("cos"),
-        col("rn").cast("long").as("rn"))
-      .orderBy("q_id", "rn")
+      .withColumn("cos", Knn.candidateCos)
+    Knn.topKPerQuery(scored)
   }
 
   /** #28e kNN graph: top-k cosine neighbors for EVERY corpus vector —
@@ -552,7 +524,7 @@ object IvfAnn {
     * repartition is invisible to OptimizeSkewedJoin, deliberately, so
     * AQE cannot re-coalesce the fanout stage either); per-query top-k
     * rides the native
-    * WindowGroupLimit (r15, see topKPerQuery — Partial mode bounds
+    * WindowGroupLimit (r15, see Knn.topKPerQuery — Partial mode bounds
     * what each mapper ships to ≤k rows per q_id). Self-pairs drop;
     * emitted cosines are exact (round4'd for output stability).
     */
@@ -601,8 +573,8 @@ object IvfAnn {
           col("norm").as("cn"), col("cell").as("cell2"))
           .repartition(idx.k, col("cell2")),
         col("cell2") === col("cell") && col("nbr_id") =!= col("q_id"))
-      .withColumn("cos", expr("graft_dot(qe, ce)") / (col("qn") * col("cn")))
-    topKPerQuery(scored)
+      .withColumn("cos", Knn.candidateCos)
+    Knn.topKPerQuery(scored)
   }
 
   /** The full assigned corpus frame (vec_id, e, norm, cell), built from

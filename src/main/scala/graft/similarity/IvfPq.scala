@@ -1,6 +1,6 @@
 package graft.similarity
 
-import graft.{Num, Query}
+import graft.Query
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -195,16 +195,10 @@ object IvfPq {
         "adc",
         expr(s"aggregate(sequence(0, ${m - 1}), cast(0.0 as double), (acc, j) -> acc + lut[j * $kPq + codes[j]])"))
     val wAdc = Window.partitionBy("q_id").orderBy(col("adc").desc, col("nbr_id").asc)
-    val wCos = Window.partitionBy("q_id").orderBy(col("cos").desc, col("nbr_id").asc)
-    adc
+    Knn.topKPerQuery(adc
       .withColumn("arn", row_number().over(wAdc))
       .filter(col("arn") <= RerankDepth)
-      .withColumn("cos", expr("graft_dot(qe, ce)") / (col("qn") * col("cn")))
-      .withColumn("rn", row_number().over(wCos))
-      .filter(col("rn") <= Knn.TopK)
-      .select(col("q_id"), col("nbr_id"), Num.round4(col("cos")).as("cos"),
-        col("rn").cast("long").as("rn"))
-      .orderBy("q_id", "rn")
+      .withColumn("cos", Knn.candidateCos))
   }
 
   /** Codes frame alone (vec_id, codes), exposed for the storage-contract

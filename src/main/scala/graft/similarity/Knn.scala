@@ -1,7 +1,7 @@
 package graft.similarity
 
 import graft.{Num, Query, Tables}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -43,16 +43,39 @@ object Knn {
       .toDF("q_id", "qe", "qn", "qblk")
       .drop("qblk")
       .withColumn("blk", explode(array((0 until CorpusBlocks).map(lit): _*)))
-    val scored = queries
+    topKPerQuery(queries
       .join(v.toDF("nbr_id", "ce", "cn", "blk2"), col("blk2") === col("blk") && col("nbr_id") =!= col("q_id"))
-      .withColumn("dot", expr("graft_dot(qe, ce)"))
-      .withColumn("cos", col("dot") / (col("qn") * col("cn")))
+      .withColumn("cos", candidateCos))
+  }
+
+  /** Cosine of a scored candidate: query vector `qe` with norm `qn`
+    * against candidate vector `ce` with norm `cn`.
+    */
+  private[graft] def candidateCos: Column = expr("graft_dot(qe, ce)") / (col("qn") * col("cn"))
+
+  /** Per-query top-k over a (q_id, nbr_id, cos) candidate stream: rows
+    * (q_id, nbr_id, cos rounded, rn: long), rn 1..TopK by cos desc,
+    * nbr_id asc, ordered by (q_id, rn). Every kNN and ANN query ends here.
+    *
+    * Written so Catalyst's InferWindowGroupLimit fires: the filter
+    * compares the raw row_number ATTRIBUTE against a literal (the long
+    * cast happens AFTER the filter — r10..r14 cast first, which hid
+    * the pattern from the rule and silently bought the naive window
+    * plan: a full candidate-volume shuffle + sort, 8.8 GB peak task
+    * memory at the 500k-doc decade point). With the rule matched, the
+    * physical plan carries WindowGroupLimitExec in Partial mode BEFORE
+    * the exchange — a per-key bounded top-k on the map side, so each
+    * mapper ships at most k rows per q_id it saw — and Final mode
+    * after, with the actual Window running over ≤k rows per key.
+    * Native operator, whole plan codegen-eligible, no custom code on
+    * the hot path (a custom TypedImperativeAggregate heap was
+    * prototyped and dropped: ObjectHashAggregate's 128-key sort-based
+    * fallback re-materializes the candidate sort for any
+    * high-cardinality grouping — same memory shape as the naive
+    * window, none of the native path's codegen/plan-visibility).
+    */
+  private[graft] def topKPerQuery(scored: DataFrame): DataFrame = {
     val w = Window.partitionBy("q_id").orderBy(col("cos").desc, col("nbr_id").asc)
-    // Rank filter on the RAW row_number attribute (cast to long only
-    // after) so InferWindowGroupLimit fires: the physical plan carries
-    // WindowGroupLimitExec in Partial mode before the exchange — each
-    // mapper ships ≤ TopK rows per q_id instead of its whole block's
-    // candidate volume (r15; the pre-filter cast hid the pattern).
     scored
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") <= TopK)

@@ -1,9 +1,9 @@
 package graft.similarity
 
 import graft.{Num, Query}
+import graft.dedup.Dedup
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 
 /** Approximate nearest neighbors via random-hyperplane (SimHash-style)
   * LSH: each vector gets a NumBits-bit signature (sign of the dot product
@@ -113,12 +113,7 @@ object LshAnn {
   def neardupPairs(spark: SparkSession, dir: String, threshold: Double = 0.4): DataFrame = {
     val v = graft.Staging.staged(
       Knn.vectors(spark, dir).withColumn("sig", signature("e")), "lsh_neardup")
-    val bands = bandsOf(v)
-    val candidates = probesOf(v, "a")
-      .join(bands.toDF("b", "band2", "key2"),
-        col("band") === col("band2") && col("key") === col("key2") && col("a") < col("b"))
-      .select("a", "b")
-      .distinct()
+    val candidates = Dedup.bandCandidates(probesOf(v, "a"), "a", bandsOf(v), "b")(_ < _)
     // Not a bare orderBy: an unstaged sort's sampling pass would re-run
     // the candidate verify joins and their dot products.
     graft.Staging.sorted(
@@ -141,26 +136,14 @@ object LshAnn {
     // 64-hyperplane signature projection.
     val v = graft.Staging.staged(
       Knn.vectors(spark, dir).withColumn("sig", signature("e")), "lsh_ann")
-    val bands = bandsOf(v)
     // Query side: multi-probe — exact band key plus every 1-bit flip.
     val queryBands = probesOf(v.filter(col("vec_id") < Knn.NumQueries), "q_id")
-    val candidates = queryBands
-      .join(bands.toDF("nbr_id", "band2", "key2"), col("band") === col("band2") && col("key") === col("key2") && col("nbr_id") =!= col("q_id"))
-      .select("q_id", "nbr_id")
-      .distinct()
-    val scored = candidates
+    val candidates =
+      Dedup.bandCandidates(queryBands, "q_id", bandsOf(v), "nbr_id")((q, n) => n =!= q)
+    Knn.topKPerQuery(candidates
       .join(v.select(col("vec_id").as("q_id2"), col("e").as("qe"), col("norm").as("qn")), col("q_id") === col("q_id2"))
       .join(v.select(col("vec_id").as("n_id2"), col("e").as("ce"), col("norm").as("cn")), col("nbr_id") === col("n_id2"))
-      .withColumn("dot", expr("graft_dot(qe, ce)"))
-      .withColumn("cos", col("dot") / (col("qn") * col("cn")))
-    val w = Window.partitionBy("q_id").orderBy(col("cos").desc, col("nbr_id").asc)
-    // Rank filter before the long cast → native WindowGroupLimit (r15).
-    scored
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= Knn.TopK)
-      .select(col("q_id"), col("nbr_id"), Num.round4(col("cos")).as("cos"),
-        col("rn").cast("long").as("rn"))
-      .orderBy("q_id", "rn")
+      .withColumn("cos", Knn.candidateCos))
   }
 
   val queries: Seq[Query] = Seq(

@@ -81,11 +81,7 @@ object ScaleBench {
       spark.conf.set(k, v)
     })
     val artDir = new java.io.File(s"target/scalebench_artifacts")
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles().foreach(rm)
-      f.delete(): Unit
-    }
-    if (artDir.exists()) rm(artDir)
+    if (artDir.exists()) graft.Bench.rm(artDir)
     spark.conf.set("spark.graft.artifacts", artDir.toString)
 
     // Per-task shuffle-read ceiling: the evidence that a hot key (a

@@ -79,6 +79,13 @@ class ArtifactsSpec extends SparkSpec {
     assert(fp3 != fp2, "a changed algorithm version must change the key")
   }
 
+  test("the near-dup pairs version is keyed by the standing-index version") {
+    // The pair table is mined from the standing index, so a bump of the
+    // index version must re-key the published pairs too.
+    import graft.dedup.Dedup.{IndexArtifactVersion, PairsArtifactVersion}
+    assert(PairsArtifactVersion == s"$IndexArtifactVersion-jaccard-pairs-v1")
+  }
+
   test("an uncommitted (crashed) publish is not trusted") {
     withRoot { root =>
       import spark.implicits._

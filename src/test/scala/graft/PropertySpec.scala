@@ -64,10 +64,9 @@ class PropertySpec extends SparkSpec {
       val docs = randomCorpus(60).toDF("doc_id", "text")
       val inline = Dedup.jaccardPrefixOf(docs)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-      val sh = Dedup.shingles(docs).select(col("doc_id"), xxhash64(col("sg")).as("sg"))
+      val sh = Dedup.hashedShingles(docs)
       val prefix = Dedup.prefixIndex(sh, 0.8)
-      val indexed = Dedup.verifyJaccardIndexed(
-        Dedup.ppjoinCandidates(Dedup.prefixCollisions(prefix, prefix), 0.8), sh, 0.8)
+      val indexed = Dedup.minePairs(prefix, prefix, sh, 0.8)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
       spark.catalog.clearCache()
       assert(indexed == inline,
@@ -196,7 +195,11 @@ class PropertySpec extends SparkSpec {
       val full = graft.dedup.Clusters.dedupClustersOf(docs)
         .collect().map(_.toSeq).toSeq
       spark.catalog.clearCache()
-      val inc = graft.dedup.Clusters.clusterDeltaOf(docs)
+      // One staged shingle + prefix index serves both halves, as the
+      // standing index does for the declared query.
+      val sh = graft.Staging.staged(Dedup.hashedShingles(docs), "shingle_cd")
+      val index = (sh, graft.Staging.staged(Dedup.prefixIndex(sh, 0.8), "prefix_cd"))
+      val inc = graft.dedup.Clusters.clusterDeltaOf(docs, index)
         .collect().map(_.toSeq).toSeq
       spark.catalog.clearCache()
       assert(inc == full, s"trial $trial: incremental merge diverged from full recompute")
