@@ -1,20 +1,21 @@
 #!/usr/bin/env python3
 """Duplicate-window report for the Scala sources.
 
-Lists every run of at least MIN (default 4) consecutive normalised code
-lines that appears more than once under src/main, grouped by the set of
+Lists every run of at least WINDOW (4) consecutive normalised code
+lines that appears more than once under ROOT (src/main), grouped by the set of
 files it appears in. Comments, imports, blank lines, lines of closing
 punctuation only and oracle-SQL ``|`` lines (stripMargin text) are
 skipped before matching; whitespace runs collapse to one space. It is a
 report for finding written-out twins, not a gate: it always exits 0.
 
-    python3 scripts/dupwindows.py [root=src/main] [min=4]
+    python3 scripts/dupwindows.py
 """
 import os
 import re
-import sys
 from collections import defaultdict
 
+ROOT = "src/main"
+WINDOW = 4
 PUNCT_ONLY = re.compile(r"^[\s{}()\[\],;]*$")
 
 
@@ -40,10 +41,9 @@ def code_lines(path):
 
 
 def main():
-    root = sys.argv[1] if len(sys.argv) > 1 else "src/main"
-    win = int(sys.argv[2]) if len(sys.argv) > 2 else 4
+    win = WINDOW
     files = {}
-    for d, _, names in os.walk(root):
+    for d, _, names in os.walk(ROOT):
         for n in sorted(names):
             if n.endswith(".scala"):
                 p = os.path.join(d, n)

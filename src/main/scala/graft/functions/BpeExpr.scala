@@ -114,16 +114,18 @@ object Bpe {
     * applies: scanning left to right, each adjacent (l, r) becomes the
     * one symbol l + r; an r consumed by a merge cannot start another.
     */
-  private[graft] def mergePair(syms: Array[String], l: String, r: String): Array[String] = {
-    val out = new scala.collection.mutable.ArrayBuffer[String](syms.length)
-    var k = 0
-    while (k < syms.length) {
-      if (k + 1 < syms.length && syms(k) == l && syms(k + 1) == r) {
-        out += l + r; k += 2
-      } else { out += syms(k); k += 1 }
+  private[graft] def mergePair(syms: Array[String], l: String, r: String): Array[String] =
+    if (syms.length < 2) syms
+    else {
+      val out = new scala.collection.mutable.ArrayBuffer[String](syms.length)
+      var k = 0
+      while (k < syms.length) {
+        if (k + 1 < syms.length && syms(k) == l && syms(k + 1) == r) {
+          out += l + r; k += 2
+        } else { out += syms(k); k += 1 }
+      }
+      out.toArray
     }
-    out.toArray
-  }
 
   /** Encode one pre-token (word, with its leading space if non-initial). */
   def encodePre(pre: String): Array[Int] = {

@@ -497,11 +497,9 @@ object IvfAnn {
         .select(col("vec_id").as("q_id"), col("e").as("qe"), col("norm").as("qn"), col("u")),
       q.index)
       .select("q_id", "qe", "qn", "cell")
-    val scored = probes
+    Knn.topKPerQuery(probes
       .join(assigned.toDF("nbr_id", "ce", "cn", "cell2"),
-        col("cell2") === col("cell") && col("nbr_id") =!= col("q_id"))
-      .withColumn("cos", Knn.candidateCos)
-    Knn.topKPerQuery(scored)
+        col("cell2") === col("cell") && col("nbr_id") =!= col("q_id")))
   }
 
   /** #28e kNN graph: top-k cosine neighbors for EVERY corpus vector —
@@ -566,15 +564,13 @@ object IvfAnn {
       idx)
       .select("q_id", "qe", "qn", "cell")
       .repartition(idx.k, col("cell"))
-    val scored = probes
+    Knn.topKPerQuery(probes
       .join(
         assigned.select(
           col("vec_id").as("nbr_id"), col("e").as("ce"),
           col("norm").as("cn"), col("cell").as("cell2"))
           .repartition(idx.k, col("cell2")),
-        col("cell2") === col("cell") && col("nbr_id") =!= col("q_id"))
-      .withColumn("cos", Knn.candidateCos)
-    Knn.topKPerQuery(scored)
+        col("cell2") === col("cell") && col("nbr_id") =!= col("q_id")))
   }
 
   /** The full assigned corpus frame (vec_id, e, norm, cell), built from

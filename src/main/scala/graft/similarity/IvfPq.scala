@@ -197,8 +197,7 @@ object IvfPq {
     val wAdc = Window.partitionBy("q_id").orderBy(col("adc").desc, col("nbr_id").asc)
     Knn.topKPerQuery(adc
       .withColumn("arn", row_number().over(wAdc))
-      .filter(col("arn") <= RerankDepth)
-      .withColumn("cos", Knn.candidateCos))
+      .filter(col("arn") <= RerankDepth))
   }
 
   /** Codes frame alone (vec_id, codes), exposed for the storage-contract

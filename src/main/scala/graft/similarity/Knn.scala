@@ -44,16 +44,12 @@ object Knn {
       .drop("qblk")
       .withColumn("blk", explode(array((0 until CorpusBlocks).map(lit): _*)))
     topKPerQuery(queries
-      .join(v.toDF("nbr_id", "ce", "cn", "blk2"), col("blk2") === col("blk") && col("nbr_id") =!= col("q_id"))
-      .withColumn("cos", candidateCos))
+      .join(v.toDF("nbr_id", "ce", "cn", "blk2"), col("blk2") === col("blk") && col("nbr_id") =!= col("q_id")))
   }
 
-  /** Cosine of a scored candidate: query vector `qe` with norm `qn`
-    * against candidate vector `ce` with norm `cn`.
-    */
-  private[graft] def candidateCos: Column = expr("graft_dot(qe, ce)") / (col("qn") * col("cn"))
-
-  /** Per-query top-k over a (q_id, nbr_id, cos) candidate stream: rows
+  /** Per-query top-k over a candidate stream (q_id, nbr_id, query vector
+    * `qe` with norm `qn`, candidate vector `ce` with norm `cn`), scored
+    * by cosine `cos` = graft_dot(qe, ce) / (qn * cn): rows
     * (q_id, nbr_id, cos rounded, rn: long), rn 1..TopK by cos desc,
     * nbr_id asc, ordered by (q_id, rn). Every kNN and ANN query ends here.
     *
@@ -74,9 +70,10 @@ object Knn {
     * high-cardinality grouping — same memory shape as the naive
     * window, none of the native path's codegen/plan-visibility).
     */
-  private[graft] def topKPerQuery(scored: DataFrame): DataFrame = {
+  private[graft] def topKPerQuery(candidates: DataFrame): DataFrame = {
     val w = Window.partitionBy("q_id").orderBy(col("cos").desc, col("nbr_id").asc)
-    scored
+    candidates
+      .withColumn("cos", expr("graft_dot(qe, ce)") / (col("qn") * col("cn")))
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") <= TopK)
       .select(col("q_id"), col("nbr_id"), Num.round4(col("cos")).as("cos"),

@@ -142,8 +142,7 @@ object LshAnn {
       Dedup.bandCandidates(queryBands, "q_id", bandsOf(v), "nbr_id")((q, n) => n =!= q)
     Knn.topKPerQuery(candidates
       .join(v.select(col("vec_id").as("q_id2"), col("e").as("qe"), col("norm").as("qn")), col("q_id") === col("q_id2"))
-      .join(v.select(col("vec_id").as("n_id2"), col("e").as("ce"), col("norm").as("cn")), col("nbr_id") === col("n_id2"))
-      .withColumn("cos", Knn.candidateCos))
+      .join(v.select(col("vec_id").as("n_id2"), col("e").as("ce"), col("norm").as("cn")), col("nbr_id") === col("n_id2")))
   }
 
   val queries: Seq[Query] = Seq(
